@@ -72,9 +72,10 @@ object Bm25 {
     * TWICE per build. A single-pass restructure (VERDICT r11 #4: df
     * histogram + broadcast df→idf map behind an explicit
     * repartition-on-term materialization point) was implemented in r12
-    * and REFUTED by measurement (graft.ProbeTermIdf, x100 fixture,
-    * interleaved A/B in one JVM): AQE does NOT reuse exchange stages
-    * nested inside broadcast-stage subtrees (AQE-final plan:
+    * and REFUTED by measurement (x100 fixture, interleaved A/B in one
+    * JVM; output kept in `plans/r12/termidf_probe_output.txt`): AQE
+    * does NOT reuse exchange stages nested inside broadcast-stage
+    * subtrees (AQE-final plan:
     * ReusedQueryStage=0, 8 ShuffleQueryStages), so the histogram shape
     * ran THREE full dfreq derivations (main + df→idf broadcast + the
     * avg broadcast nested inside it) instead of this shape's two —
@@ -227,7 +228,9 @@ object Bm25 {
 
   /** Score every document against a tokenized query, deriving the index
     * inline (one-shot path; callers with a stable corpus should
-    * buildIndex + writeIndex once and use scoreIndexed).
+    * buildIndex + writeIndex once and use scoreIndexed). Serving does not
+    * use it: [[SearchEngine.keywordSearch]] computes the same scores in
+    * a fixed number of jobs, and this pipeline is its test reference.
     */
   def score(spark: org.apache.spark.sql.SparkSession,
       postings: DataFrame, queryTokens: Seq[String]): DataFrame =

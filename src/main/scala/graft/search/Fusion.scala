@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * (`core/search.py:1613-1772`, k=60, alpha weighting, max-normalize)
   * and the heuristic rerank stage (`core/result_ranker.py:7-208`).
   * Both are pure column algebra over rank DataFrames — no state, no
-  * driver work, shuffle only on the fused key.
+  * driver work, shuffle only on the fused key — except [[rrfLocal]], the
+  * same fusion over rank lists already collected to the driver.
   */
 object Fusion {
   val RrfK = 60
@@ -64,6 +65,23 @@ object Fusion {
       .crossJoin(broadcast(mx))
       .withColumn("rrf_score", col("rrf_raw") / col("rrf_max"))
       .select(col("id"), col("rrf_score"))
+  }
+
+  /** [[rrf]] over collected (id → rank) lists, on the driver: same
+    * operands in the same order, so `rrf_score` is bit-identical.
+    * Output: (id, rrf_score), one row per id on either side.
+    */
+  def rrfLocal(vecRanks: Map[String, Int], kwRanks: Map[String, Int],
+      alpha: Double): Seq[(String, Double)] = {
+    val raw = (vecRanks.keySet ++ kwRanks.keySet).toSeq.map { id =>
+      id -> (vecRanks.get(id).map(r => alpha / (RrfK + r)).getOrElse(0.0) +
+        kwRanks.get(id).map(r => (1 - alpha) / (RrfK + r)).getOrElse(0.0))
+    }
+    if (raw.isEmpty) raw
+    else {
+      val mx = raw.map(_._2).max
+      raw.map { case (id, r) => id -> r / mx }
+    }
   }
 
   /** Batched RRF for N queries at once: rank inputs carry a qid column,

@@ -19,10 +19,15 @@ import graft.ingest.FileDiscovery
   * pipeline, process pools, and memory monitor all collapse into Spark
   * stage pipelining (SURVEY §3.2 note).
   *
-  * Search side: vector = cosine + threshold + top-k over the vectors
-  * table; keyword = 3-pass tokenizer + BM25; hybrid = RRF fusion with
-  * identifier-aware alpha; then the heuristic boost stage (Q15) and
-  * optional driver-side MMR finisher on the collected top-N.
+  * Search side: each query runs a fixed handful of Spark jobs, whatever
+  * the corpus size. Vector = cosine + threshold + top-k over the
+  * vectors table (one job). Keyword = 3-pass tokenizer + BM25 as one
+  * global statistics aggregate (N, Σdl, the query terms' df) and one
+  * row-local scoring pass; the query's idf is computed on the driver.
+  * Hybrid = both rank lists collected (≤ 2·limit rows each), RRF with
+  * identifier-aware alpha on the driver, then metadata attached by one
+  * broadcast join, the heuristic boost stage (Q15) and the top-k cut.
+  * The optional MMR finisher runs driver-side on the collected top-N.
   */
 class SearchEngine(spark: SparkSession) {
   import spark.implicits._
@@ -140,36 +145,82 @@ class SearchEngine(spark: SparkSession) {
   }
 
   /** BM25 keyword search over chunks (corpus = content + 2×name +
-    * file_path + chunk_type, `bm25_backend.py:88-122`).
+    * file_path + chunk_type, `bm25_backend.py:88-122`): BM25Okapi with
+    * k1 = 1.5, b = 0.75 and the epsilon floor, the same scores as
+    * [[Bm25.score]] without building its index. One global aggregate
+    * gives N (chunks with at least one token), Σdl and each query term's
+    * df; idf is computed on the driver with `StrictMath.log` (what
+    * Spark's `log` runs, so scores stay bit-identical). The
+    * vocabulary-wide average idf needs a `groupBy(term)` over every
+    * posting, so that pass runs only when a query term's raw idf is
+    * negative (df > N/2), the one case the floor changes a score.
+    * Scoring is one row-local pass: tf is counted inside each chunk's
+    * token array and the per-query scalars go in as literals. Output:
+    * (chunk_id, score, rank) for the top `limit` chunks with score > 0.
     */
   def keywordSearch(chunks: DataFrame, query: String, limit: Int): DataFrame = {
+    import Bm25.{B, Epsilon, K1}
     val tokenizeUdf = udf((s: String) => Tokenizer.tokenize(s))
-    val corpus = chunks.withColumn("bm25_text",
-      concat_ws(" ", col("content"), col("name"), col("name"),
-        col("file_path"), col("chunk_type")))
-    val postings = Bm25.postings(
-      corpus.withColumn("toks", tokenizeUdf(col("bm25_text"))), "chunk_id", col("toks"))
-    val qToks = Tokenizer.tokenize(QueryProcessor.preprocess(query))
-    val scored = Bm25.score(spark, postings, qToks)
-      .withColumnRenamed("id", "chunk_id")
-      .filter(col("score") > 0) // P7 zero-score filter
-    Fusion.ranked(scored, "chunk_id", "score", limit)
+    val docs = chunks.select(col("chunk_id"), tokenizeUdf(concat_ws(" ",
+      col("content"), col("name"), col("name"), col("file_path"),
+      col("chunk_type"))).as("toks"))
+    val toks = col("toks")
+    val dl = size(toks)
+    val qtf = Tokenizer.tokenize(QueryProcessor.preprocess(query))
+      .groupBy(identity).map { case (t, os) => (t, os.size) }.toSeq
+    val contribs = if (qtf.isEmpty) Nil else {
+      val st = docs.agg(count(when(dl > 0, 1)), sum(dl) +:
+        qtf.map { case (t, _) => count(when(array_contains(toks, t), 1)) }: _*)
+        .head()
+      val n = st.getLong(0)
+      // a term no chunk holds adds nothing to any score
+      val raw = qtf.zipWithIndex.map { case ((t, k), i) => (t, k, st.getLong(i + 2)) }
+        .filter(_._3 > 0).map { case (t, k, df) =>
+          (t, k, StrictMath.log(n - df + 0.5) - StrictMath.log(df + 0.5)) }
+      lazy val avgIdf = docs.select(explode(array_distinct(toks)).as("term"))
+        .groupBy(col("term")).agg(count(lit(1)).as("df"))
+        .agg(sum(log(lit(n) - col("df") + 0.5) - log(col("df") + 0.5)) /
+          count(lit(1)))
+        .head().getDouble(0)
+      lazy val avgdl = st.getLong(1).toDouble / n // Σdl is null on no rows
+      raw.map { case (t, k, r) =>
+        val idf = if (r < 0) Epsilon * avgIdf else r
+        val tf = dl - size(array_remove(toks, t))
+        lit(k) * lit(idf) * (tf * (K1 + 1)) /
+          (tf + lit(K1) * (lit(1 - B) + lit(B) * dl / lit(avgdl)))
+      }
+    }
+    val scored = docs.select(col("chunk_id"),
+      contribs.reduceOption(_ + _).getOrElse(lit(0.0)).as("score"))
+    // P7 zero-score filter on the ranked cut: chunks with score > 0 rank
+    // first, so it drops the same rows as filtering before the cut, and
+    // it cannot be pushed into the scan with the tokenizer inlined once
+    // per reference to `toks`
+    Fusion.ranked(scored, "chunk_id", "score", limit).filter(col("score") > 0)
   }
 
   /** Hybrid search: RRF fusion of vector + keyword ranks, alpha lowered
-    * for identifier-shaped queries (Q3), heuristic boost (Q15).
+    * for identifier-shaped queries (Q3) unless given, heuristic boost
+    * (Q15). Both rank lists are collected (≤ 2·limit rows each) and
+    * fused on the driver by [[Fusion.rrfLocal]]; the fused rows are
+    * broadcast into one join that attaches the vectors table's metadata
+    * (every fused row kept, the corpus side streamed), then boosted and
+    * cut to `limit`.
     */
   def hybridSearch(vectors: DataFrame, chunks: DataFrame, query: String,
-      limit: Int): DataFrame = {
-    val alpha = QueryProcessor.hybridAlpha(query)
-    val v = vectorSearch(vectors, query, limit * 2, threshold = Some(0.0))
-      .select(col("chunk_id").as("id"), col("rank"))
-    val k = keywordSearch(chunks, query, limit * 2)
-      .select(col("chunk_id").as("id"), col("rank"))
-    val fused = Fusion.rrf(v, k, alpha)
-      .withColumnRenamed("id", "chunk_id")
-      .join(vectors, Seq("chunk_id"), "left")
-    Fusion.ranked(boost(fused, query, "rrf_score"), "chunk_id", "boosted", limit)
+      limit: Int, alpha: Option[Double] = None): DataFrame = {
+    def ranks(results: DataFrame): Map[String, Int] =
+      results.select(col("chunk_id"), col("rank")).collect()
+        .map(r => r.getString(0) -> r.getInt(1)).toMap
+    val fused = Fusion.rrfLocal(
+      ranks(vectorSearch(vectors, query, limit * 2, threshold = Some(0.0))),
+      ranks(keywordSearch(chunks, query, limit * 2)),
+      alpha.getOrElse(QueryProcessor.hybridAlpha(query)))
+      .toDF("chunk_id", "rrf_score")
+    val withMeta = vectors.join(broadcast(fused), Seq("chunk_id"), "right")
+      .select(("chunk_id" +: "rrf_score" +: vectors.columns.filter(_ != "chunk_id"))
+        .map(col).toSeq: _*)
+    Fusion.ranked(boost(withMeta, query, "rrf_score"), "chunk_id", "boosted", limit)
   }
 
   /** Heuristic rerank boosts (Q15, `core/result_ranker.py:7-208`):

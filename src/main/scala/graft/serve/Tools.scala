@@ -202,21 +202,9 @@ object Tools {
           str(args, "description").get, strs(args, "focus_areas"),
           int(args, "limit", 10)))
       case "search_hybrid" =>
-        val q = str(args, "query").get
-        val limit = int(args, "limit", 10)
-        val alpha = args.get("alpha").map(_.toString.toDouble)
-          .getOrElse(graft.search.QueryProcessor.hybridAlpha(q))
-        val v = engine.vectorSearch(vectors(p), q, limit * 2,
-            threshold = Some(0.0))
-          .select(col("chunk_id").as("id"), col("rank"))
-        val k = engine.keywordSearch(chunks(p), q, limit * 2)
-          .select(col("chunk_id").as("id"), col("rank"))
-        val fused = graft.search.Fusion.rrf(v, k, alpha)
-          .withColumnRenamed("id", "chunk_id")
-          .join(vectors(p), Seq("chunk_id"), "left")
-        Right(graft.search.Fusion.ranked(
-          engine.boost(fused, q, "rrf_score"), "chunk_id", "boosted",
-          limit))
+        Right(engine.hybridSearch(vectors(p), chunks(p),
+          str(args, "query").get, int(args, "limit", 10),
+          args.get("alpha").map(_.toString.toDouble)))
       case "search_bm25f" =>
         // name field weighted 3x over content — a deployment persists
         // this index once (Bm25.writeIndexBucketed, the br1 layout);
