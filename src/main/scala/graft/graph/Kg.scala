@@ -150,7 +150,10 @@ object Kg {
     * `test_differential_kg.py`): delete the vertices+edges of changed
     * and deleted files, rebuild only the re-chunked files' subgraph —
     * resolving its calls against surviving entities too — and merge.
-    * The whole update touches O(changed files), not the corpus.
+    * Only the delta is COMPUTED from the changed files; the result is
+    * still both full tables (`dropDuplicates` runs over every vertex
+    * and edge), which the caller rewrites in full. Rewriting only the
+    * file buckets a change touches is ROADMAP direction 1.
     *
     * Reference-faithful drift: edges FROM unchanged files INTO entities
     * that first appear in this delta are not created (the reference's

@@ -17,7 +17,8 @@ import org.apache.spark.sql.functions.col
   *    `UnknownPartitioning(0)` — so a repartition BEFORE a checkpoint
   *    is silently discarded and every round re-exchanges the full
   *    static relation (measured: 237.3 MB → 49.3 MB shuffle write per
-  *    x100 walk once fixed, `graft.ProbeWalkPartitioning`).
+  *    x100 walk once fixed; the probe's committed output is
+  *    `plans/r12/walk_partitioning_probe_output.txt`).
   *    [[partitionedCheckpoint]] materializes with AQE off so the
   *    `ShuffleExchangeExec`'s HashPartitioning (and SortExec ordering)
   *    survive into the LogicalRDD; AQE stays on for the round queries.

@@ -3,16 +3,23 @@ package graft.index
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.chunk.Chunker
+import graft.embed.HashEmbedder
+import graft.graph.Kg
+import graft.ingest.FileDiscovery
+
 /** Parquet-backed chunks/vectors tables + the incremental set algebra
   * (SURVEY §2.1 S4-S7, §2.3 J3-J5, §1.3).
   *
   * The reference mutates rows in place (embedding_status state machine,
   * DELETE ... IN batches, UPDATE file_path on moves). Re-expressed here
   * as idempotent snapshot algebra over immutable tables: every "update"
-  * is an anti-join + union + atomic overwrite of the affected partition
-  * set. That is the only pattern that scales: at 100 TB there is no
-  * row-level UPDATE, only partition rewrite, and every operation below
-  * is a pure DataFrame → DataFrame function until the final write.
+  * is an anti-join + union, and every operation below is a pure
+  * DataFrame → DataFrame function until the final write. The write
+  * today rewrites each touched table in FULL through a staging swap
+  * ([[overwriteSafe]]), so its cost grows with the table, not with the
+  * change; rewriting only the file buckets a change touches is ROADMAP
+  * direction 1.
   */
 object IndexStore {
 
@@ -110,7 +117,7 @@ object IndexStore {
     * IN-batching needed.
     */
   def deleteByFiles(stored: DataFrame, staleFiles: DataFrame): DataFrame =
-    stored.join(staleFiles.select("file_path").distinct(), Seq("file_path"), "left_anti")
+    stored.join(staleFiles.select("file_path"), Seq("file_path"), "left_anti")
 
   /** Change detection (J4, `indexer.py:581-639`): disk files whose hash is
     * absent or different in the stored table. Output = disk rows to
@@ -156,6 +163,74 @@ object IndexStore {
         Seq("file_path"), "left")
       .withColumn("file_path", coalesce(col("new_path"), col("file_path")))
       .drop("new_path")
+
+  /** The vectors-table rows for `chunks`: each chunk's context text
+    * hash-embedded, denormalized with the chunk fields search returns so
+    * search runs join-free (`vectors_backend.py:52` "avoid JOINs").
+    */
+  def vectorsOf(chunks: DataFrame): DataFrame =
+    HashEmbedder.embed(chunks.withColumn("ctx", HashEmbedder.contextText(
+        col("file_path"), col("language"), col("name"), col("content"))),
+      "chunk_id", "ctx")
+      .withColumnRenamed("id", "chunk_id")
+      .join(chunks.select("chunk_id", "file_path", "content", "language",
+        "start_line", "end_line", "chunk_type", "name", "hierarchy_path"),
+        Seq("chunk_id"))
+
+  /** Apply one change set to the index tables (SURVEY §7 step 3; the
+    * reference's delete-then-append upsert, `vectors_backend.py:482-677`):
+    * drop the rows of every `replaced` path, rewrite `moves`
+    * (old_path → new_path) in place (S7: the moved rows keep their
+    * chunk ids and vectors), append `newChunks` and their vectors, and
+    * swap each table with [[overwriteSafe]], whose refresh is the one
+    * on this path. With `kgPath`, the KG tables under it get the same
+    * change through [[graft.graph.Kg.differentialUpdate]].
+    *
+    * @param replaced  paths whose stored rows go: deleted files and
+    *                  every re-read file, one that now yields no chunks
+    *                  included
+    * @param newChunks the re-read files' chunk rows
+    */
+  def applyChanges(spark: SparkSession, chunksPath: String,
+      vectorsPath: String, kgPath: Option[String], replaced: Seq[String],
+      moves: Seq[(String, String)], newChunks: DataFrame): Unit = {
+    import spark.implicits._
+    // eager checkpoint: materialize the (change-sized) chunk rows once,
+    // so the object-typed flatMap segment never reaches the downstream
+    // union/join optimizer — Catalyst can push a Project into the
+    // object pipeline there and fail serialization (seen as
+    // INTERNAL_ERROR 'object' writer on the KG union path)
+    val fresh = newChunks.localCheckpoint(eager = true)
+    val moved = moves.toDF("old_path", "new_path")
+    def swap(path: String, rows: DataFrame): Unit =
+      // allowMissingColumns: a pre-subproject (round-1 schema) stored
+      // table widens with nulls instead of failing — additive evolution
+      overwriteSafe(spark, applyMoves(deleteByFiles(read(spark, path),
+          broadcast(replaced.distinct.toDF("file_path"))), moved)
+        .unionByName(rows, allowMissingColumns = true), path)
+    swap(chunksPath, fresh)
+    swap(vectorsPath, vectorsOf(fresh))
+
+    // the KG treats a move as a change at its destination (drop the old
+    // path, re-chunk the new one): one metadata-scale re-chunk instead
+    // of a non-equi id-prefix rewrite
+    kgPath.foreach { kp =>
+      val kg = Kg.KgTables(read(spark, s"$kp/vertices"), read(spark, s"$kp/edges"))
+      val dests = moves.map(_._2).filter(p => new java.io.File(p).isFile)
+      val rechunked = if (dests.isEmpty) fresh else fresh.unionByName(
+        FileDiscovery.readFiles(spark, dests).flatMap(Chunker.chunkFile _)
+          .toDF().localCheckpoint(eager = true), allowMissingColumns = true)
+      val updated = Kg.differentialUpdate(kg, rechunked,
+        (replaced ++ moves.map(_._1)).toDF("file_path"))
+      // materialize BOTH before either write: the edges plan anti-joins
+      // against the vertices path, so writing vertices first would
+      // invalidate the files the edges computation still reads
+      val v = updated.vertices.localCheckpoint(eager = true)
+      val e = updated.edges.localCheckpoint(eager = true)
+      overwriteSafe(spark, v, s"$kp/vertices")
+      overwriteSafe(spark, e, s"$kp/edges")
+    }
+  }
 
   /** Unembedded chunks (J3, `vectors_backend.py:1355-1397`): in chunks
     * table but not in vectors table — this replaces the reference's

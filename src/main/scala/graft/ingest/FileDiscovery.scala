@@ -241,4 +241,33 @@ object FileDiscovery {
         decode(col("content"), "UTF-8").as("content"))
       .as[FileRecord]
   }
+
+  /** Distributed read of named files (a change set's touched paths):
+    * one `binaryFile` scan over the (metadata-scale) path list instead
+    * of a serial driver-side `Files.readAllBytes` loop. Paths are mapped
+    * back to their ORIGINAL strings (the scan returns absolutized file:
+    * URIs) so downstream joins on file_path still match the stored
+    * tables.
+    */
+  def readFiles(spark: SparkSession, paths: Seq[String]): Dataset[FileRecord] = {
+    import spark.implicits._
+    if (paths.isEmpty) spark.emptyDataset[FileRecord]
+    else {
+      val byAbs = paths.map(p =>
+        new java.io.File(p).getAbsolutePath -> p).toMap
+      spark.read.format("binaryFile").load(paths: _*)
+        .select(col("path"), col("content"))
+        .as[(String, Array[Byte])]
+        .map { case (uri, bytes) =>
+          val abs = new java.net.URI(uri).getPath
+          val p = byAbs.getOrElse(abs, abs)
+          val content = new String(bytes, "UTF-8")
+          val ext = p.replaceAll(""".*\.""", "").toLowerCase
+          FileRecord(p, LanguageByExtension.getOrElse(ext, "text"),
+            graft.chunk.Chunker.sha256Hex(content),
+            new java.sql.Timestamp(System.currentTimeMillis()),
+            content.length.toLong, content)
+        }
+    }
+  }
 }

@@ -150,9 +150,7 @@ object IndexPack {
     rmTree(new java.io.File(s"$base/vectors"))
     copyTree(s"$base/seed_chunks", s"$base/chunks")
     copyTree(s"$base/seed_vectors", s"$base/vectors")
-    Seq(s"$base/chunks", s"$base/vectors").foreach { p =>
-      try s.catalog.refreshByPath(p) catch { case _: Throwable => }
-    }
+    Seq(s"$base/chunks", s"$base/vectors").foreach(s.catalog.refreshByPath)
     (base, ks)
   }
 
@@ -202,7 +200,7 @@ object IndexPack {
       }
       rm(new java.io.File(path))
       // the shared FileStatusCache may still list the deleted files
-      try s.catalog.refreshByPath(path) catch { case _: Throwable => }
+      s.catalog.refreshByPath(path)
       graft.embed.HashEmbedder.embedWithCache(s,
         docs.filter(col("doc_id") % 4 === 0), "doc_id", "text", path)
         .count()
@@ -334,7 +332,7 @@ object IndexPack {
         f.delete(); ()
       }
       rm(new java.io.File(path))
-      try s.catalog.refreshByPath(path) catch { case _: Throwable => }
+      s.catalog.refreshByPath(path)
       Tables.documents(s, d)
         .select(col("doc_id"), col("text"), (col("doc_id") % 64).as("g"))
         .repartition(col("g"))

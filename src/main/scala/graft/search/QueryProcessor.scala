@@ -81,13 +81,16 @@ object QueryProcessor {
     math.max(0.05, math.min(0.95, t))
   }
 
-  /** Identifier-shaped query (dotted / camelCase / scoped / multi-hyphen)
-    * → favor keyword search (reference lowers alpha 0.7 → 0.2).
+  /** Identifier-shaped query (dotted / camelCase / snake_case / scoped /
+    * multi-hyphen) → favor keyword search (reference lowers alpha
+    * 0.7 → 0.2). snake_case is one token with an inner underscore, so
+    * `parse_file` is an identifier and `parse file` is not.
     */
   def isIdentifierQuery(query: String): Boolean = {
     val q = query.trim
     q.matches("""[\w.]+\.[\w.]+""") ||
       q.matches(""".*[a-z][A-Z].*""") ||
+      q.matches("""\w+_\w+""") ||
       q.matches("""\w+::\w+.*""") ||
       q.count(_ == '-') >= 2
   }

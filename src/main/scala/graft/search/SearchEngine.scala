@@ -42,17 +42,7 @@ class SearchEngine(spark: SparkSession) {
       files.toDF().select(col("file_path"), col("content")))
     val chunks = graft.ingest.Monorepo.withSubproject(
       files.flatMap(Chunker.chunkFile _).toDF(), subprojects)
-    val enriched = chunks.withColumn("ctx",
-      HashEmbedder.contextText(col("file_path"), col("language"), col("name"), col("content")))
-    val vectors = HashEmbedder.embed(enriched, "chunk_id", "ctx")
-      .withColumnRenamed("id", "chunk_id")
-    // vectors table is denormalized for join-free search
-    // (vectors_backend.py:52 "avoid JOINs")
-    val denorm = vectors.join(
-      chunks.select("chunk_id", "file_path", "content", "language",
-        "start_line", "end_line", "chunk_type", "name", "hierarchy_path"),
-      Seq("chunk_id"))
-    (chunks, denorm)
+    (chunks, IndexStore.vectorsOf(chunks))
   }
 
   /** Full index build. When `relatedPath` is set, the precomputed
@@ -75,54 +65,32 @@ class SearchEngine(spark: SparkSession) {
   }
 
   /** Incremental reindex: only changed files re-chunk/re-embed, deletes
-    * and moves handled by set algebra (SURVEY §7 step 3).
+    * and moves handled by set algebra (SURVEY §7 step 3). The change set
+    * is derived once from the discovery scan and collected: file paths,
+    * proportional to the change, not to the chunk rows.
     */
   def incrementalIndex(root: String, chunksPath: String, vectorsPath: String): Unit = {
-    // drop any stale file-listing/relation caches for the three roots
-    Seq(root, chunksPath, vectorsPath).foreach { p =>
-      try spark.catalog.refreshByPath(p) catch { case _: Throwable => }
-    }
     val disk = FileDiscovery.discover(spark, root).toDF()
     val stored = IndexStore.read(spark, chunksPath)
-    val storedVec = IndexStore.read(spark, vectorsPath)
-
-    val moves = IndexStore.movedFiles(disk, stored).cache()
-    val movedNew = moves.select(col("new_path")).distinct()
     val changed = IndexStore.changedFiles(disk, stored)
-      .join(movedNew, col("file_path") === col("new_path"), "left_anti")
-    val deleted = IndexStore.deletedFiles(disk, stored)
-      .join(moves.select(col("old_path")), col("file_path") === col("old_path"), "left_anti")
-
-    val changedFiles = changed.as[FileRecord]
+      .select("file_path", "file_hash").as[(String, String)].collect()
+    val gone = IndexStore.deletedFiles(disk, stored)
+      .join(stored.select("file_path", "file_hash").distinct(), Seq("file_path"))
+      .as[(String, String)].collect()
+    // J5 on the collected sets (IndexStore.movedFiles' rule): a gone
+    // path whose stored hash reappears at a changed disk path moved
+    val moves = for ((from, h) <- gone; (to, h2) <- changed if h == h2)
+      yield (from, to)
+    val reread = (changed.map(_._1).toSet -- moves.map(_._2)).toSeq
+    val deleted = gone.map(_._1).toSet -- moves.map(_._1)
     // the full disk listing is in hand, so changed chunks get their
     // subproject assignment exactly as a full build would
-    val subprojects = graft.ingest.Monorepo.subprojects(
-      disk.select(col("file_path"), col("content")))
     val newChunks = graft.ingest.Monorepo.withSubproject(
-      changedFiles.flatMap(Chunker.chunkFile _).toDF(), subprojects)
-    val enriched = newChunks.withColumn("ctx",
-      HashEmbedder.contextText(col("file_path"), col("language"), col("name"), col("content")))
-    val newVectors = HashEmbedder.embed(enriched, "chunk_id", "ctx")
-      .withColumnRenamed("id", "chunk_id")
-      .join(newChunks.select("chunk_id", "file_path", "content", "language",
-        "start_line", "end_line", "chunk_type", "name", "hierarchy_path"),
-        Seq("chunk_id"))
-
-    val changedPaths = changed.select("file_path")
-    val keptChunks = IndexStore.applyMoves(
-      IndexStore.deleteByFiles(
-        IndexStore.deleteByFiles(stored, deleted), changedPaths), moves)
-    val keptVectors = IndexStore.applyMoves(
-      IndexStore.deleteByFiles(
-        IndexStore.deleteByFiles(storedVec, deleted), changedPaths), moves)
-
-    // allowMissingColumns: a pre-subproject (round-1 schema) stored
-    // table widens with nulls instead of failing — additive evolution
-    val outChunks = keptChunks.unionByName(newChunks, allowMissingColumns = true)
-    val outVectors = keptVectors.unionByName(newVectors, allowMissingColumns = true)
-    IndexStore.overwriteSafe(spark, outChunks, chunksPath)
-    IndexStore.overwriteSafe(spark, outVectors, vectorsPath)
-    moves.unpersist()
+      disk.join(broadcast(reread.toDF("file_path")), Seq("file_path"), "left_semi")
+        .as[FileRecord].flatMap(Chunker.chunkFile _).toDF(),
+      graft.ingest.Monorepo.subprojects(disk.select(col("file_path"), col("content"))))
+    IndexStore.applyChanges(spark, chunksPath, vectorsPath, None,
+      deleted.toSeq ++ reread, moves.toSeq, newChunks)
   }
 
   /** Embed a query string with the exact corpus featurizer — driver-side

@@ -7,8 +7,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.chunk.Chunker
-import graft.core.FileRecord
-import graft.embed.HashEmbedder
 import graft.index.IndexStore
 import graft.ingest.FileDiscovery
 
@@ -55,38 +53,6 @@ object WatchStream {
         max_by(col("dest_path"), col("ts")).as("dest_path"))
   }
 
-  /** Distributed read of a micro-batch's touched files: one `binaryFile`
-    * scan over the (metadata-scale) path list instead of a serial
-    * driver-side `Files.readAllBytes` loop — a large backfill replayed
-    * through the stream path then reads files on the executors with
-    * normal scan parallelism. Paths are mapped back to their ORIGINAL
-    * event strings (the scan returns absolutized file: URIs) so the
-    * downstream joins on file_path still match the stored tables.
-    */
-  private def fileRecords(spark: SparkSession,
-      paths: Seq[String]): org.apache.spark.sql.Dataset[FileRecord] = {
-    import spark.implicits._
-    if (paths.isEmpty) spark.emptyDataset[FileRecord]
-    else {
-      val byAbs = paths.map(p =>
-        new java.io.File(p).getAbsolutePath -> p).toMap
-      spark.read.format("binaryFile").load(paths: _*)
-        .select(col("path"), col("content"))
-        .as[(String, Array[Byte])]
-        .map { case (uri, bytes) =>
-          val abs = new java.net.URI(uri).getPath
-          val p = byAbs.getOrElse(abs, abs)
-          val content = new String(bytes, "UTF-8")
-          val ext = p.replaceAll(""".*\.""", "").toLowerCase
-          FileRecord(p,
-            FileDiscovery.LanguageByExtension.getOrElse(ext, "text"),
-            Chunker.sha256Hex(content),
-            new Timestamp(System.currentTimeMillis()),
-            content.length.toLong, content)
-        }
-    }
-  }
-
   /** ST3: apply one debounced micro-batch to the chunks/vectors tables —
     * and, when `kgPath` is given, to the knowledge-graph tables via the
     * differential rebuild (issue #108): only the batch's files are
@@ -95,87 +61,32 @@ object WatchStream {
   def applyBatch(spark: SparkSession, batch: DataFrame,
       chunksPath: String, vectorsPath: String,
       kgPath: Option[String] = None): Unit = {
-    Seq(chunksPath, vectorsPath).foreach { p =>
-      try spark.catalog.refreshByPath(p) catch { case _: Throwable => }
+    import spark.implicits._
+    // the debounced batch is metadata-scale: one row per touched file
+    val events = latestEventPerFile(batch)
+      .as[(String, String, String)].collect()
+    val deleted = events.collect { case (p, "deleted", _) => p }
+    // move = metadata-only path rewrite (reference watcher.py:218-360),
+    // no re-chunk/re-embed
+    val moves = events.collect { case (p, "moved", d) if d != null => (p, d) }
+    val touched = events.collect {
+      case (p, "created" | "modified", _) if new java.io.File(p).isFile => p
     }
-    val events = latestEventPerFile(batch).cache()
-    try {
-      val deleted = events.filter(col("event_type") === "deleted")
-        .select("file_path")
-      // move = metadata-only path rewrite (reference watcher.py:218-360),
-      // no re-chunk/re-embed
-      val moves = events.filter(col("event_type") === "moved" &&
-          col("dest_path").isNotNull)
-        .select(col("file_path").as("old_path"), col("dest_path").as("new_path"))
-      val touched = events.filter(col("event_type").isin("created", "modified"))
-        .select("file_path").collect().map(_.getString(0)).filter(p =>
-          new java.io.File(p).isFile)
-
-      import spark.implicits._
-      // eager checkpoint: materialize the (micro-batch-sized) chunk rows
-      // so the object-typed flatMap segment never reaches the downstream
-      // union/join optimizer — Catalyst can push a Project into the
-      // object pipeline there and fail serialization (seen as
-      // INTERNAL_ERROR 'object' writer on the KG union path)
-      val newChunks = fileRecords(spark, touched.toSeq)
-        .flatMap(Chunker.chunkFile _).toDF().localCheckpoint(true)
-      val enriched = newChunks.withColumn("ctx", HashEmbedder.contextText(
-        col("file_path"), col("language"), col("name"), col("content")))
-      val newVectors = HashEmbedder.embed(enriched, "chunk_id", "ctx")
-        .withColumnRenamed("id", "chunk_id")
-        .join(newChunks.select("chunk_id", "file_path", "content", "language",
-          "start_line", "end_line", "chunk_type", "name", "hierarchy_path"),
-          Seq("chunk_id"))
-
-      val touchedDf = touched.toSeq.toDF("file_path")
-      val stored = IndexStore.read(spark, chunksPath)
-      val storedVec = IndexStore.read(spark, vectorsPath)
-      // streamed re-chunks inherit the file's known subproject from the
-      // stored table (no full listing in a micro-batch to re-detect
-      // from); brand-new files get it on the next incremental pass
-      val newChunksOut =
-        if (stored.columns.contains("subproject_name"))
-          newChunks.join(
-            stored.select("file_path", "subproject_name", "subproject_path")
-              .distinct(),
-            Seq("file_path"), "left")
-        else newChunks
-      val outChunks = IndexStore.applyMoves(IndexStore
-        .deleteByFiles(IndexStore.deleteByFiles(stored, deleted), touchedDf), moves)
-        .unionByName(newChunksOut, allowMissingColumns = true)
-      val outVectors = IndexStore.applyMoves(IndexStore
-        .deleteByFiles(IndexStore.deleteByFiles(storedVec, deleted), touchedDf), moves)
-        .unionByName(newVectors, allowMissingColumns = true)
-      IndexStore.overwriteSafe(spark, outChunks, chunksPath)
-      IndexStore.overwriteSafe(spark, outVectors, vectorsPath)
-
-      // differential KG refresh: moved files are treated as changed at
-      // their destination (delete old path, re-chunk the new one) — one
-      // metadata-scale re-chunk instead of a non-equi id-prefix rewrite
-      kgPath.foreach { kp =>
-        Seq(s"$kp/vertices", s"$kp/edges").foreach { p =>
-          try spark.catalog.refreshByPath(p) catch { case _: Throwable => }
-        }
-        val kg = graft.graph.Kg.KgTables(
-          IndexStore.read(spark, s"$kp/vertices"),
-          IndexStore.read(spark, s"$kp/edges"))
-        val movedDests = moves.select(col("new_path").as("file_path"))
-          .collect().map(_.getString(0)).filter(p => new java.io.File(p).isFile)
-        val rechunked = newChunks.unionByName(
-          fileRecords(spark, movedDests.toSeq)
-            .flatMap(Chunker.chunkFile _).toDF().localCheckpoint(true))
-        val deletedForKg = deleted.unionByName(
-          moves.select(col("old_path").as("file_path")))
-        val updated = graft.graph.Kg.differentialUpdate(kg, rechunked, deletedForKg)
-        // materialize BOTH before either write: the edges plan anti-joins
-        // against the vertices path, so writing vertices first would
-        // invalidate the files the edges computation still reads
-        val updatedV = updated.vertices.localCheckpoint(eager = true)
-        val updatedE = updated.edges.localCheckpoint(eager = true)
-        IndexStore.overwriteSafe(spark, updatedV, s"$kp/vertices")
-        IndexStore.overwriteSafe(spark, updatedE, s"$kp/edges")
-      }
-    } finally events.unpersist()
+    val rechunked = FileDiscovery.readFiles(spark, touched.toSeq)
+      .flatMap(Chunker.chunkFile _).toDF()
+    // streamed re-chunks inherit the file's known subproject from the
+    // stored table (no full listing in a micro-batch to re-detect
+    // from); brand-new files get it on the next incremental pass
+    val stored = IndexStore.read(spark, chunksPath)
+    val newChunks =
+      if (stored.columns.contains("subproject_name"))
+        rechunked.join(
+          stored.select("file_path", "subproject_name", "subproject_path")
+            .distinct(),
+          Seq("file_path"), "left")
+      else rechunked
+    IndexStore.applyChanges(spark, chunksPath, vectorsPath, kgPath,
+      (deleted ++ touched).toSeq, moves.toSeq, newChunks)
   }
 
   /** Wire an event stream into the debounced reindex sink. The trigger

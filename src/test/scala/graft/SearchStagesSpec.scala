@@ -24,8 +24,12 @@ class SearchStagesSpec extends AnyFunSuite {
     assert(QueryProcessor.isIdentifierQuery("os.path.join"))
     assert(QueryProcessor.isIdentifierQuery("HybridSearchHandler"))
     assert(!QueryProcessor.isIdentifierQuery("find the parser"))
+    assert(QueryProcessor.isIdentifierQuery("parse_file"))
+    assert(!QueryProcessor.isIdentifierQuery("parse file"))
     assert(QueryProcessor.hybridAlpha("os.path.join") == 0.2)
+    assert(QueryProcessor.hybridAlpha("parse_file") == 0.2)
     assert(QueryProcessor.hybridAlpha("find the parser") == 0.7)
+    assert(QueryProcessor.hybridAlpha("parse file") == 0.7)
   }
 
   test("expansion yields original first then single-substitution variants") {
