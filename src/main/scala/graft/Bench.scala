@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): run every SparkEntry query on
   * SPARK_GRAFT_SF_DIR, print ONE JSON line with per-query seconds.
   *
@@ -12,22 +10,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // r11: the driver's bench died with executor-heartbeat RPC timeouts
-      // under 6-20% hypervisor-steal bursts — in local mode a missed 10s
-      // heartbeat kills the only executor there is. Raise both well past
-      // the burst length (VERDICT r11 #1a).
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-bench", defaultCpus = 32)
 
     // Wall-clock budget (VERDICT r11 #1b): BOTH driver bench runs in r11
     // were killed at the driver's time limit (rc 124) before the compact

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Measurement tooling (optimization rounds), sibling of [[PlanDump]]:
   * count the Spark JOBS a gate query schedules on a warm run. The
   * iterative operators' per-hop work is invisible in the final plan
@@ -19,16 +17,7 @@ object JobCount {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: JobCount <query> [query...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-jobcount")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-jobcount", defaultCpus = 32)
     val nJobs = new java.util.concurrent.atomic.AtomicInteger(0)
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Measurement tooling (optimization rounds): dump
   * `.explain("formatted")` for named gate queries to files, so plan
@@ -38,18 +37,9 @@ object PlanDump {
     val outDir = java.nio.file.Paths.get(args(0))
     java.nio.file.Files.createDirectories(outDir)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-plandump")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // route in-loop probes (see `probe`) next to the gate plans
-      .config("spark.graft.plandump.dir", outDir.toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-plandump", defaultCpus = 32)
+    // route in-loop probes (see `probe`) next to the gate plans
+    spark.conf.set("spark.graft.plandump.dir", outDir.toString)
     val (confArgs, names) = {
       val rest = args.drop(1)
       val confs = scala.collection.mutable.ArrayBuffer.empty[(String, String)]

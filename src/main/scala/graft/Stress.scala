@@ -118,7 +118,7 @@ object Stress {
   def dedupStress(spark: SparkSession, n: Long): (Double, Long) = {
     val docs = synthDocs(spark, n)
     val r = timed {
-      // cache the shingle table like the real flow (DedupCache persists
+      // cache the shingle table like the real flow (the dedup index persists
       // it): the signature path and the jaccard verify both consume it
       val sh = Dedup.docShingles(docs, "text", "doc_id", 3).cache()
       // bands feed BOTH sides of the bucket self-join — without the
@@ -666,18 +666,7 @@ object Stress {
     val json = args.contains("--json")
     emitPartials = json // stream cumulative rows for budget-kill salvage
     val factors = args.filterNot(_ == "--json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-stress")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // same starved-host hardening as Bench (r11 heartbeat kills)
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-stress", defaultCpus = 32)
     val res =
       if (factors.nonEmpty) run(spark, factors.toSeq.map(_.toInt))
       else runDefault(spark)

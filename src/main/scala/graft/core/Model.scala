@@ -4,8 +4,7 @@ package graft.core
   * dataclasses (mcp-vector-search `core/models.py`).
   *
   * `Dataset[FileRecord]` is the discovery-scan output (SURVEY §2.1 S1/S2),
-  * `Dataset[CodeChunk]` the phase-1 chunks table (`chunks_backend.py:52-93`),
-  * `Dataset[SearchResult]` the query output (`models.py:389-556`).
+  * `Dataset[CodeChunk]` the phase-1 chunks table (`chunks_backend.py:52-93`).
   * Stored tables are plain Parquet with these schemas; all in-flight
   * mutation of the reference's status machine is replaced by snapshot
   * set-algebra between immutable tables (SURVEY §1.3).
@@ -42,15 +41,3 @@ final case class CodeChunk(
     decorators: Seq[String] = Nil,   // @annotations / decorators
     cognitive_complexity: Int = 0,   // analysis/collectors/complexity.py:221-362
     nesting_depth: Int = 0)          // analysis/collectors/complexity.py:459-534
-
-final case class SearchResult(
-    chunk_id: String,
-    file_path: String,
-    content: String,
-    language: String,
-    start_line: Int,
-    end_line: Int,
-    chunk_type: String,
-    name: String,
-    similarity_score: Double,
-    rank: Int)

@@ -402,7 +402,7 @@ object Dedup {
     * verified with exact Jaccard. The corpus pays nothing at batch time
     * beyond the band equi-join probe and the candidate-routed shingle
     * intersection — its shingle/band tables are the write-once index
-    * `DedupCache` persists — BUCKETED by (band, band_val) / doc_id, so
+    * the d3 gates persist — BUCKETED by (band, band_val) / doc_id, so
     * both probes read the corpus side pre-partitioned with zero
     * Exchange (BucketedLayoutSpec). Batch-side
     * shingles and bands are recomputed fresh, but the batch is the small

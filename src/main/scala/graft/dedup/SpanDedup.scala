@@ -68,7 +68,7 @@ object SpanDedup {
     * while caching the exploded occurrence table would spill
     * corpus×windows bytes to disk for one extra read. A deployment
     * that probes repeatedly persists the occurrence table once
-    * (DedupCache-style, bucketed by g) — the same split as the d3
+    * (bucketed by g, like the dedup index) — the same split as the d3
     * shingle flow. The gram aggregate keeps its map-side partial
     * combine (AllocAuditSpec pins it below the exchange).
     */

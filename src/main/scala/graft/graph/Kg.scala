@@ -626,7 +626,7 @@ object Kg {
       // plan (localCheckpoint, not persist) — a persist-based variant
       // was measured to blow up Catalyst on the growing lineage. The
       // emptiness probe on the materialized checkpoint reads one cached
-      // partition; the real cross-query saving is AncestryCache.
+      // partition; the real cross-query saving is the memo in ancestors.
       val next = par.join(frontier, Seq("commit_hash"))
         .select(col("parent_hash").as("commit_hash"))
         .distinct()
@@ -643,6 +643,22 @@ object Kg {
     acc
   }
 
+  /** [[ancestorClosure]] memoized in the Registry on (parent-DAG plan
+    * identity, refSha): the closure for a (repo, ref) never changes
+    * within a session, yet every temporal-KG query (`entitiesAtCommit`,
+    * `callersAtCommit`, kg_history) needs the same set. The closure ends
+    * in an eager localCheckpoint, so the memoized DataFrame is a
+    * metadata-scale in-memory relation, safe to broadcast. Plan identity
+    * is Catalyst's semanticHash of the analyzed plan: two lexically
+    * separate reads of one source canonicalize to the same hash, so g7
+    * and g8 share one walk without threading a key through the API.
+    */
+  private def ancestors(parents: DataFrame, refSha: String): DataFrame =
+    graft.Registry.memo("ancestry",
+        (parents.queryExecution.analyzed.semanticHash(), refSha)) {
+      ancestorClosure(parents, refSha)
+    }
+
   /** Entities visible at `refSha` (`knowledge_graph.py:3395-3464`
     * `get_entities_at_commit`): rows whose `commit_sha` is non-empty and
     * an ancestor of (or equal to) the ref. The ancestor set is tiny next
@@ -651,7 +667,7 @@ object Kg {
     */
   def entitiesAtCommit(entities: DataFrame, parents: DataFrame,
       refSha: String): DataFrame = {
-    val anc = AncestryCache.closure(parents, refSha)
+    val anc = ancestors(parents, refSha)
       .withColumnRenamed("commit_hash", "commit_sha")
     entities.filter(col("commit_sha") =!= "")
       .join(broadcast(anc), Seq("commit_sha"), "left_semi")
@@ -720,7 +736,7 @@ object Kg {
       calleeName: String, parents: DataFrame, refSha: String): DataFrame = {
     val callees = entities.filter(col("name") === calleeName)
       .select(col("id").as("dst"), col("name").as("callee_name"))
-    val anc = AncestryCache.closure(parents, refSha)
+    val anc = ancestors(parents, refSha)
       .withColumnRenamed("commit_hash", "caller_commit_sha")
     callsEdges.filter(col("rel_type") === "CALLS")
       .join(broadcast(callees), Seq("dst"))

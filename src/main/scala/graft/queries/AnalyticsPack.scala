@@ -135,18 +135,16 @@ object AnalyticsPack {
     * Entry heuristics fire on main/test_ names and tests/ paths:
     * 46 entries reach 87 of 185 code vertices, leaving 98 dead.
     */
-  /** Per-JVM cache of the dead-code fixture KG (checkpointed) — the gate
-    * times the reachability walk, not fixture re-derivation.
+  /** The dead-code fixture KG, checkpointed once per corpus in the
+    * Registry — the gate times the reachability walk, not fixture
+    * re-derivation.
     */
-  private val deadCodeKgCache =
-    scala.collection.concurrent.TrieMap[String, Kg.KgTables]()
-
   private def deadCodeKg(s: SparkSession, d: String): Kg.KgTables =
-    deadCodeKgCache.getOrElseUpdate(d, {
+    graft.Registry.memo("dead_code_kg", d) {
       val kg = deadCodeKgBuild(s, d)
       Kg.KgTables(kg.vertices.localCheckpoint(true),
         kg.edges.localCheckpoint(true))
-    })
+    }
 
   private def deadCodeKgBuild(s: SparkSession, d: String): Kg.KgTables = {
     val ks = Tables.documents(s, d)

@@ -15,10 +15,6 @@ import graft.tables.Tables
   */
 object GraphPack {
 
-  /** Per-JVM baseline graph for g12, keyed on the corpus dir. */
-  private val g12BaselineCache =
-    scala.collection.concurrent.TrieMap[String, Kg.KgTables]()
-
   /** Edge DataFrame (src, dst, rel_type) from the relational tables. */
   private def edges(s: SparkSession, d: String): DataFrame = {
     val n = Tables.nation(s, d).select(
@@ -452,14 +448,14 @@ object GraphPack {
       // a real differential update reads an EXISTING stored graph
       // (applyBatch reads parquet); materialize the baseline likewise so
       // the delete/merge branches don't each re-derive it from source —
-      // and cache it per corpus (the IvfCache pattern) so repeated runs
-      // time the differential update, not baseline construction
-      val kg0 = g12BaselineCache.getOrElseUpdate(d, {
+      // and keep it per corpus in the Registry so repeated runs time
+      // the differential update, not baseline construction
+      val kg0 = graft.Registry.memo("g12_baseline", d) {
         val kg0raw = Kg.fromChunks(baseline)
         Kg.KgTables(
           kg0raw.vertices.localCheckpoint(true),
           kg0raw.edges.localCheckpoint(true))
-      })
+      }
       val updated = Kg.differentialUpdate(kg0,
         changed.unionByName(added), Seq("src/f2.py").toDF("file_path"))
       updated.vertices

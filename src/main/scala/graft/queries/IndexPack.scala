@@ -154,9 +154,7 @@ object IndexPack {
     (base, ks)
   }
 
-  /** st1/st4's workspace mutations (micro-batch 1 then 2 file states),
-    * applied to the restored workspace; applyBatch is the caller's.
-    */
+  /** Recursive delete of a file tree. */
   private def rmTree(f: java.io.File): Unit = {
     if (f.isDirectory) f.listFiles.foreach(rmTree)
     f.delete(); ()
@@ -194,11 +192,7 @@ object IndexPack {
         graft.functions.PortableHash.hash60Local("embc", d))}"
       // start COLD every invocation: a leftover cache from a previous
       // run would turn phase 1 into hits and mask a broken write path
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(path))
+      rmTree(new java.io.File(path))
       // the shared FileStatusCache may still list the deleted files
       s.catalog.refreshByPath(path)
       graft.embed.HashEmbedder.embedWithCache(s,
@@ -327,11 +321,7 @@ object IndexPack {
       import s.implicits._
       val path = s"target/s4/${java.lang.Long.toHexString(
         graft.functions.PortableHash.hash60Local("s4", d))}"
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(path))
+      rmTree(new java.io.File(path))
       s.catalog.refreshByPath(path)
       Tables.documents(s, d)
         .select(col("doc_id"), col("text"), (col("doc_id") % 64).as("g"))

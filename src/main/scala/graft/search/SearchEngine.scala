@@ -72,15 +72,25 @@ class SearchEngine(spark: SparkSession) {
   def incrementalIndex(root: String, chunksPath: String, vectorsPath: String): Unit = {
     val disk = FileDiscovery.discover(spark, root).toDF()
     val stored = IndexStore.read(spark, chunksPath)
+    // each changed path, flagged when it has stored rows
     val changed = IndexStore.changedFiles(disk, stored)
-      .select("file_path", "file_hash").as[(String, String)].collect()
+      .join(stored.select(col("file_path"), lit(true).as("stored")).distinct(),
+        Seq("file_path"), "left")
+      .select(col("file_path"), col("file_hash"), col("stored").isNotNull)
+      .as[(String, String, Boolean)].collect()
     val gone = IndexStore.deletedFiles(disk, stored)
       .join(stored.select("file_path", "file_hash").distinct(), Seq("file_path"))
       .as[(String, String)].collect()
-    // J5 on the collected sets (IndexStore.movedFiles' rule): a gone
-    // path whose stored hash reappears at a changed disk path moved
-    val moves = for ((from, h) <- gone; (to, h2) <- changed if h == h2)
-      yield (from, to)
+    // J5 on the collected sets, stricter than IndexStore.movedFiles'
+    // hash-only join: a move lands only on a path with no stored rows
+    // (content written over an existing file is an edit of that file),
+    // and within one hash gone and fresh paths pair one-to-one in sorted
+    // order (further copies of the content are re-read, not moved)
+    val fresh = changed.collect { case (p, h, false) => (p, h) }
+      .groupMap(_._2)(_._1)
+    val moves = gone.groupMap(_._2)(_._1).toSeq.flatMap { case (h, from) =>
+      from.sorted.zip(fresh.getOrElse(h, Array.empty[String]).sorted)
+    }
     val reread = (changed.map(_._1).toSet -- moves.map(_._2)).toSeq
     val deleted = gone.map(_._1).toSet -- moves.map(_._1)
     // the full disk listing is in hand, so changed chunks get their

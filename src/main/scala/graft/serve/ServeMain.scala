@@ -1,7 +1,5 @@
 package graft.serve
 
-import org.apache.spark.sql.SparkSession
-
 /** Minimal long-running serving shell over [[Tools.dispatch]] — the
   * transport role of the reference's MCP server loop
   * (`mcp/server.py:431-520`) and CLI (`cli/main.py:589`), kept
@@ -57,15 +55,7 @@ object ServeMain {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3,
       "usage: ServeMain <root> <chunksPath> <vectorsPath> [kgPath]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-serve")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession("graft-serve", defaultCpus = 32)
     val p = Tools.Project(spark, args(0), args(1), args(2),
       kgPath = args.lift(3))
     val in = scala.io.Source.stdin.getLines()

@@ -18,7 +18,7 @@ import graft.dedup.Dedup
   * State lives in persisted tables, not the streaming state store:
   * dedup state is corpus-scale (every shingle of every kept doc), far
   * beyond what `mapGroupsWithState` should hold, and the shingle/band
-  * tables double as the batch-side dedup index (`DedupCache`) — one
+  * tables double as the batch-side dedup index (the d3 gates' one) — one
   * artifact, both execution modes. On a cluster the appends would go
   * through the staging+swap pattern (`IndexStore`) for atomicity; the
   * batch is verdict-materialized (eager localCheckpoint) BEFORE any

@@ -46,7 +46,8 @@ object Tables {
     * under `spark.sql.legacy.parquet.nanosAsLong`) and TIMESTAMP(MICROS)
     * without UTC adjustment (which reads as TIMESTAMP_NTZ). Normalize both
     * to a session-TZ TimestampType column so downstream operators always
-    * see the same type. Sessions run with `spark.sql.session.timeZone=UTC`,
+    * see the same type. Sessions run with `spark.sql.session.timeZone=UTC`
+    * (every main builds its session with [[graft.GraftSession]]),
     * so the NTZ→LTZ cast is value-preserving and matches DuckDB's naive
     * TIMESTAMP reading of the same file.
     */

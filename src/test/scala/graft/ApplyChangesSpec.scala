@@ -18,7 +18,10 @@ import graft.streaming.WatchStream.FileEvent
   * with a KG into a second. Each end state must equal a full build of
   * the final tree (`buildIndex` + `Kg.fromChunks`) as row sets, except
   * that a moved file keeps its pre-move chunk ids and vectors (the S7
-  * metadata-only rewrite).
+  * metadata-only rewrite). The third batch writes one file's content
+  * over an existing file and into two new ones: `incrementalIndex`,
+  * which pairs moves by content hash, may move the gone file onto one
+  * new path only.
   *
   * `Kg.differentialUpdate` documents one more drift: edges from
   * unchanged files into entities the delta re-creates are lost. The
@@ -49,6 +52,11 @@ class ApplyChangesSpec extends SparkSpec {
       val repo = dir.resolve("repo")
       copyTree(Paths.get(sampleRepo), repo)
       def abs(rel: String): String = repo.resolve(rel).toString
+      // two files with no calls or imports, for batch 3
+      Files.writeString(repo.resolve("src/alpha.py"),
+        "def alpha(x):\n    return x + 1\n")
+      Files.writeString(repo.resolve("src/beta.py"),
+        "def beta(x):\n    return x * 2\n")
       def store(name: String) = Seq("chunks", "vectors", "kg")
         .map(t => dir.resolve(s"$name/$t").toString)
       val Seq(incChunks, incVectors, _) = store("inc")
@@ -86,13 +94,38 @@ class ApplyChangesSpec extends SparkSpec {
           |""".stripMargin)
       apply(ev("src/parser.py", "modified"), ev("src/util.py", "created"))
 
+      // each store must equal a full build of the current tree, except
+      // that a moved file keeps its pre-move chunk ids and vectors:
+      // `moved` maps each store's moved paths to those (chunk_id → vector)
+      def movedRows(vectors: String, path: String) = spark.read.parquet(vectors)
+        .filter(col("file_path") === path)
+        .select("chunk_id", "vector").as[(String, Seq[Float])].collect().toMap
+      def check(moved: Seq[Map[String, Map[String, Seq[Float]]]]): Kg.KgTables = {
+        val (fullChunks, fullVectors) = engine.buildIndex(repo.toString)
+        for (((chunksPath, vectorsPath), exceptions) <-
+            Seq((incChunks, incVectors), (strChunks, strVectors)).zip(moved)) {
+          val isMoved = col("file_path").isin(exceptions.keys.toSeq: _*)
+          for ((path, full, keep) <- Seq(
+              (chunksPath, fullChunks, Seq("chunk_id")),
+              (vectorsPath, fullVectors, Seq("chunk_id", "vector")))) {
+            val got = spark.read.parquet(path)
+            assert(rows(got.filter(!isMoved)) == rows(full.filter(!isMoved)), path)
+            assert(rows(got.filter(isMoved).drop(keep: _*)) ==
+              rows(full.filter(isMoved).drop(keep: _*)), path)
+          }
+          for ((p, ids) <- exceptions)
+            assert(movedRows(vectorsPath, p) == ids, s"$vectorsPath $p")
+        }
+        val fullKg = Kg.fromChunks(fullChunks)
+        assert(rows(spark.read.parquet(s"$strKg/vertices")) == rows(fullKg.vertices))
+        assert(rows(spark.read.parquet(s"$strKg/edges")) == rows(fullKg.edges))
+        fullKg
+      }
+
       // batch 2: delete guide.md, move search.js into a subdirectory
       val movedFrom = abs("src/search.js")
       val movedTo = abs("src/web/search.js")
-      def movedRows(vectors: String) = spark.read.parquet(vectors)
-        .filter(col("file_path") === movedFrom)
-        .select("chunk_id", "vector").as[(String, Seq[Float])].collect().toMap
-      val preMove = Seq(incVectors, strVectors).map(movedRows)
+      val preMove = Seq(incVectors, strVectors).map(movedRows(_, movedFrom))
       assert(preMove.forall(_.nonEmpty))
       Files.delete(repo.resolve("docs/guide.md"))
       Files.createDirectories(repo.resolve("src/web"))
@@ -100,28 +133,27 @@ class ApplyChangesSpec extends SparkSpec {
       apply(ev("docs/guide.md", "deleted"),
         ev("src/search.js", "moved", dest = "src/web/search.js"))
 
-      val (fullChunks, fullVectors) = engine.buildIndex(repo.toString)
-      val isMoved = col("file_path") === movedTo
-      for (((chunksPath, vectorsPath), ids) <-
-          Seq((incChunks, incVectors), (strChunks, strVectors)).zip(preMove)) {
-        for ((path, full, keep) <- Seq(
-            (chunksPath, fullChunks, Seq("chunk_id")),
-            (vectorsPath, fullVectors, Seq("chunk_id", "vector")))) {
-          val got = spark.read.parquet(path)
-          assert(rows(got.filter(!isMoved)) == rows(full.filter(!isMoved)), path)
-          assert(rows(got.filter(isMoved).drop(keep: _*)) ==
-            rows(full.filter(isMoved).drop(keep: _*)), path)
-        }
-        val moved = spark.read.parquet(vectorsPath).filter(isMoved)
-          .select("chunk_id", "vector").as[(String, Seq[Float])].collect().toMap
-        assert(moved == ids, vectorsPath)
-      }
-
-      val fullKg = Kg.fromChunks(fullChunks)
-      assert(rows(spark.read.parquet(s"$strKg/vertices")) == rows(fullKg.vertices))
-      assert(rows(spark.read.parquet(s"$strKg/edges")) == rows(fullKg.edges))
+      val fullKg = check(preMove.map(ids => Map(movedTo -> ids)))
       assert(fullKg.edges.filter(col("rel_type") === "CALLS" &&
         col("src").startsWith(abs("src/util.py"))).count() > 0)
+
+      // batch 3: delete alpha.py, write its content over the existing
+      // beta.py and into two new files. Only alpha.py → copies/one.py is
+      // a move (the first fresh path in sorted order); beta.py, which
+      // has stored rows, and copies/two.py are re-read. applyBatch gets
+      // no move event, so its store re-reads all three.
+      val alpha = Files.readString(repo.resolve("src/alpha.py"))
+      val preCopy = movedRows(incVectors, abs("src/alpha.py"))
+      assert(preCopy.nonEmpty)
+      Files.delete(repo.resolve("src/alpha.py"))
+      Files.writeString(repo.resolve("src/beta.py"), alpha)
+      Files.createDirectories(repo.resolve("src/copies"))
+      Seq("one", "two").foreach(n =>
+        Files.writeString(repo.resolve(s"src/copies/$n.py"), alpha))
+      apply(ev("src/alpha.py", "deleted"), ev("src/beta.py", "modified"),
+        ev("src/copies/one.py", "created"), ev("src/copies/two.py", "created"))
+      check(Seq(Map(movedTo -> preMove(0), abs("src/copies/one.py") -> preCopy),
+        Map(movedTo -> preMove(1))))
     } finally Files.walk(dir).sorted(Comparator.reverseOrder[Path]())
       .forEach(p => Files.deleteIfExists(p))
   }
