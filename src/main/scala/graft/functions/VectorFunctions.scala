@@ -23,9 +23,7 @@ object VectorFunctions {
     * invoked through the public `call_function` API).
     */
   def dotF(a: Column, b: Column): Column = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_fdot", exprs => FloatDot(exprs(0), exprs(1)), "built-in")
+    GraftFunctions.ensure("graft_fdot", exprs => FloatDot(exprs(0), exprs(1)))
     call_function("graft_fdot", a, b)
   }
 

@@ -1,20 +1,21 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Knowledge graph as vertex/edge DataFrames (SURVEY §2.1 S9, §2.3 J7-J9,
   * §2.4 A17) — the reference's KuzuDB property graph
   * (`core/knowledge_graph.py:327-888`) re-expressed relationally:
   * vertices(id, label, name, file_path) + edges(src, dst, rel_type,
-  * weight). Traversals are iterative frontier joins; each hop is one
-  * hash join on the edge table, so a traversal distributes and the
-  * frontier (bounded by caps, as the reference caps at depth 8 /
-  * max_nodes) is the only state.
+  * weight). Traversals walk a frontier hop by hop, one pass over the
+  * edge table per hop; the frontier (capped, as the reference caps at
+  * depth 8 / max_nodes) is the only state.
   *
-  * Lineage control: each iteration localCheckpoints the frontier when it
-  * loops more than a few hops (SURVEY §7 hard part (c)).
+  * Lineage control: the distributed walks localCheckpoint the frontier
+  * when they loop more than a few hops (SURVEY §7 hard part (c));
+  * `bfsPaths` holds its capped frontier on the driver.
   */
 object Kg {
 
@@ -290,40 +291,39 @@ object Kg {
   }
 
   /** BFS with path capture and cycle detection (J9,
-    * `knowledge_graph.py:3275-3390`): depth- and node-capped, keeps the
-    * path as an array column, `array_contains` prevents revisits within
-    * a path.
+    * `knowledge_graph.py:3275-3390`): no path revisits a vertex, and each
+    * level keeps its first `maxPaths` paths in Spark's array order
+    * (element-wise UTF-8 bytes), emitted level by level in that order.
+    * The frontier stays on the driver, as in the reference's per-hop
+    * queries: one job per level scans the edges for its out-edges, until
+    * `maxDepth` or an empty level. Memory bound: at most `maxDepth ×
+    * maxPaths` paths plus, per hop, the out-edges of at most `maxPaths`
+    * ids; never the edge table. Returns a one-partition local relation.
     */
   def bfsPaths(edges: DataFrame, srcId: String, maxDepth: Int = 8,
       maxPaths: Int = 1000): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    var paths = Seq((srcId, Array(srcId))).toDF("id", "path")
-    var done = paths.limit(0)
-    var depth = 1
-    var exhausted = false
-    while (depth <= maxDepth && !exhausted) {
-      // Deterministic truncation at the cap: order by (size(path), path)
-      // before the limit so the kept set is byte-stable across runs
-      // (frontier is metadata-scale; TakeOrderedAndProject, no global sort).
-      val next = edges.join(paths, edges("src") === paths("id"))
-        .filter(!array_contains(col("path"), col("dst")))
-        .select(col("dst").as("id"),
-          concat(col("path"), array(col("dst"))).as("path"))
-        .orderBy(size(col("path")), col("path"))
-        .limit(maxPaths)
-      // r12: lazy checkpoint mark + single-job RDD count folds
-      // materialization and the emptiness probe into ONE job per level
-      // (see minDist / WalkLayout.materializedCount)
-      val checkpointed =
-        if (depth >= 3) next.localCheckpoint(eager = false) else next
-      if (depth >= 3)
-        exhausted = WalkLayout.materializedCount(checkpointed) == 0
-      done = done.unionByName(checkpointed)
-      paths = checkpointed
-      depth += 1
-    }
-    done
+    val levels = Iterator.iterate(Vector(Vector(UTF8String.fromString(srcId)))) {
+      frontier =>
+        val out = edges
+          .filter(col("src").isin(frontier.map(_.last.toString).distinct: _*) &&
+            col("dst").isNotNull)
+          .select("src", "dst").collect()
+          .map(r => (UTF8String.fromString(r.getString(0)),
+            UTF8String.fromString(r.getString(1))))
+          .sortBy(_._2).groupMap(_._1)(_._2)
+        // the frontier is in path order and its paths have one size, so
+        // extending each distinct path (once per copy; parallel edges make
+        // copies) by its sorted out-edges yields the next level in order
+        val copies = frontier.groupMapReduce(identity)(_ => 1)(_ + _)
+        frontier.distinct.iterator.flatMap(p =>
+            out.getOrElse(p.last, Array.empty).iterator.filterNot(p.contains)
+              .flatMap(d => Iterator.fill(copies(p))(p :+ d)))
+          .take(maxPaths).toVector
+    }.slice(1, maxDepth + 1).takeWhile(_.nonEmpty)
+    levels.flatten.map(p => (p.last.toString, p.map(_.toString))).toSeq
+      .toDF("id", "path").coalesce(1)
   }
 
   /** Transitive closure of one relation type (INHERITS* —

@@ -67,13 +67,14 @@ object Tools {
   private def vectors(p: Project): DataFrame =
     IndexStore.read(p.spark, p.vectorsPath)
 
+  /** One table of the built KG; each read infers its schema in a job. */
+  private def kgTable(p: Project, name: String): Either[String, DataFrame] =
+    p.kgPath.map(kp => IndexStore.read(p.spark, s"$kp/$name"))
+      .toRight("knowledge graph not built: run kg_build first")
+
   private def kg(p: Project): Either[String, Kg.KgTables] =
-    p.kgPath match {
-      case Some(kp) => Right(Kg.KgTables(
-        IndexStore.read(p.spark, s"$kp/vertices"),
-        IndexStore.read(p.spark, s"$kp/edges")))
-      case None => Left("knowledge graph not built: run kg_build first")
-    }
+    for (v <- kgTable(p, "vertices"); e <- kgTable(p, "edges"))
+      yield Kg.KgTables(v, e)
 
   private def need(p: Option[String],
       what: String): Either[String, String] =
@@ -346,7 +347,7 @@ object Tools {
           .select(col("file_path"), col("hierarchy_path"), col("name"))
           .orderBy(col("file_path"), col("hierarchy_path")))
       case "trace_execution_flow" =>
-        kg(p).map(k => Kg.bfsPaths(k.edges,
+        kgTable(p, "edges").map(Kg.bfsPaths(_,
           str(args, "entry_point").get, int(args, "max_depth", 8)))
       case "kg_history" =>
         need(p.entitiesPath, "entity history").map(ep =>
@@ -356,8 +357,8 @@ object Tools {
         for {
           ep <- need(p.entitiesPath, "entity history")
           pp <- need(p.parentsPath, "commit parents")
-          k <- kg(p)
-        } yield Kg.callersAtCommit(k.edges, IndexStore.read(s, ep),
+          edges <- kgTable(p, "edges")
+        } yield Kg.callersAtCommit(edges, IndexStore.read(s, ep),
           str(args, "entity_name").get, IndexStore.read(s, pp),
           str(args, "commit").get)
       case "story_generate" =>

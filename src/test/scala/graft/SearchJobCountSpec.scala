@@ -5,6 +5,8 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, size}
 
 import graft.index.IndexStore
 import graft.search.SearchEngine
@@ -16,6 +18,7 @@ import graft.serve.Tools.Project
   * epsilon floor needs the vocabulary's average idf), and `search_code`
   * a fixed handful on top, whatever the corpus size. Deriving the BM25
   * index inline again costs well over a dozen jobs and fails here.
+  * `trace_execution_flow` runs one edge scan per BFS level.
   */
 class SearchJobCountSpec extends SparkSpec {
 
@@ -25,6 +28,14 @@ class SearchJobCountSpec extends SparkSpec {
       chunksPath = new java.io.File(dir, "chunks").getAbsolutePath,
       vectorsPath = new java.io.File(dir, "vectors").getAbsolutePath)
     new SearchEngine(spark).indexRepo(sampleRepo, p.chunksPath, p.vectorsPath)
+    p
+  }
+
+  /** The same index with its knowledge graph built by `kg_build`. */
+  private lazy val kgProject: Project = {
+    val p = project.copy(kgPath = Some(
+      Files.createTempDirectory("search-jobs-kg").toFile.getAbsolutePath))
+    Tools.dispatch(p, "kg_build", Map.empty).fold(e => fail(e), identity)
     p
   }
 
@@ -74,5 +85,31 @@ class SearchJobCountSpec extends SparkSpec {
       .toJSON.take(100)
     assert(call().nonEmpty)
     assert(jobs(call()) == 8)
+  }
+
+  /** The tool's result, and the jobs of a warm dispatch + toJSON.take. */
+  private def toolJobs(tool: String, args: Map[String, Any]): (DataFrame, Int) = {
+    def call() = Tools.dispatch(kgProject, tool, args).fold(e => fail(e), identity)
+    val out = call()
+    out.toJSON.take(100) // warm
+    (out, jobs(call().toJSON.take(100)))
+  }
+
+  test("trace_execution_flow: one edge scan per level, plus the schema read and the render") {
+    import spark.implicits._
+    val entry = IndexStore.read(spark, s"${kgProject.kgPath.get}/vertices")
+      .filter(col("name") === "load_config").select("id").as[String].head()
+    val (paths, n) = toolJobs("trace_execution_flow", Map("entry_point" -> entry))
+    // load_config -> parse_file -> read_text / split_blocks / make_chunk,
+    // then one scan that finds no further level
+    val levels = paths.select(size(col("path")) - 1).as[Int].collect().max
+    assert(levels == 2)
+    assert(n == (levels + 1) + 2)
+  }
+
+  test("kg_query through dispatch and toJSON.take") {
+    val (related, n) = toolJobs("kg_query", Map("entity_name" -> "parse_file"))
+    assert(!related.isEmpty)
+    assert(n == 6)
   }
 }

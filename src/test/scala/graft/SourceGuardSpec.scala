@@ -47,6 +47,11 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(filesWith("SparkSession.builder") == Set("graft/GraftSession.scala"))
   }
 
+  test("native functions register only through GraftFunctions.ensure") {
+    assert(filesWith("createOrReplaceTempFunction") ==
+      Set("graft/functions/GraftFunctions.scala"))
+  }
+
   test("the per-kind caches and the last-fit globals are gone") {
     for (name <- Seq("IvfCache", "PqCache", "DedupCache", "AncestryCache",
         "lastCentroids", "lastCodebook"))

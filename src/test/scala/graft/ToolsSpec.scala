@@ -85,6 +85,9 @@ class ToolsSpec extends SparkSpec {
       Left("missing required argument(s): query"))
     val noKg = project.copy(kgPath = None)
     assert(Tools.dispatch(noKg, "kg_stats").isLeft)
+    assert(Tools.dispatch(noKg, "trace_execution_flow",
+      Map("entry_point" -> "x")) ==
+      Left("knowledge graph not built: run kg_build first"))
     assert(Tools.dispatch(project, "kg_query",
       Map("entity_name" -> "x", "relationship" -> "nonsense")).isLeft)
     assert(Tools.dispatch(project, "kg_history",
