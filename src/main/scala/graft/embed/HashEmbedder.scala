@@ -2,9 +2,9 @@ package graft.embed
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
-import graft.functions.PortableHash
-import graft.text.TextFunctions
+import graft.functions.{AsciiText, PortableMd5}
 
 /** Deterministic embedding (SURVEY §7 design stance): a seeded hash-n-gram
   * featurizer — HashingTF-style bucket projection of word unigrams +
@@ -13,84 +13,65 @@ import graft.text.TextFunctions
   * this object behind the same (id, text) → (id, vector) contract
   * (reference's pluggable embedding functions, `embeddings.py:1078-1113`).
   *
-  * Fully relational: explode n-grams → bucket via the portable hash →
-  * per-(id, bucket) integer counts → dense array + normalize. Integer
-  * counts make the vector exactly order-independent, so the embedding of
-  * a chunk is identical no matter how the corpus is partitioned — safe
-  * at any scale, and identical for a 1-row query DataFrame.
+  * Row-local: a text's vector is a function of that text alone
+  * ([[embedLocal]], counted with integers, so it does not depend on gram
+  * order). Embedding a table is one projection, with the same values for
+  * any partitioning, and a query embeds on the driver with the same body.
   *
   * Context enrichment (reference `core/context_builder.py`, the 35-49%
   * retrieval win): prepend a "path | language | name" header to the text
   * before featurizing — done by `contextText`.
   */
 object HashEmbedder {
-  val Dim = 64
 
   def contextText(path: Column, language: Column, name: Column, content: Column): Column =
     concat_ws(" | ", path, language, name, content)
 
-  /** (id, vector array<float>[Dim]) from (idCol, textCol). */
-  def embed(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    // materialize the token array in its OWN projection: inlining
-    // tokens(text) into the generator re-evaluates the normalize regex
-    // + split once per reference (3× here) — measured 5× slower on the
-    // e2e gate than projecting first
-    val toked = docs.select(col(idCol).as("id"),
-      TextFunctions.tokens(col(textCol)).as("toks"))
-    val grams = toked.select(
-      col("id"),
-      explode(array_compact(concat(
-        col("toks"),
-        // word bigrams (zip_with pads the tail with null → compacted away)
-        zip_with(col("toks"),
-          slice(col("toks"), lit(2), greatest(size(col("toks")) - 1, lit(0))),
-          (a, b) => concat(a, lit(" "), b))))).as("gram"))
-    // the md5-chain portable hash runs once per DISTINCT gram, not per
-    // occurrence (measured ~2× on the e2e gate; same values — the
-    // bucket depends only on the gram). The string equi-join is the
-    // UnigramLm vocabulary-join shape: hash-partitioned at scale, and
-    // AQE broadcasts it when the vocabulary is small.
-    val vocab = grams.select(col("gram")).distinct()
-      .withColumn("bucket", pmod(PortableHash.hash60(col("gram"), 7), lit(Dim)).cast("int"))
-    val buckets = grams.join(vocab, Seq("gram"))
-      .groupBy(col("id"), col("bucket"))
-      .agg(count(lit(1)).as("w"))
-    val dense = buckets
-      .groupBy(col("id"))
-      .agg(map_from_entries(collect_list(struct(col("bucket"), col("w")))).as("m"))
-      .withColumn("raw", transform(sequence(lit(0), lit(Dim - 1)),
-        i => coalesce(col("m")(i), lit(0L)).cast("double")))
-      .withColumn("norm", sqrt(aggregate(col("raw"), lit(0.0d), (acc, x) => acc + x * x)))
-      .withColumn("vector", transform(col("raw"),
-        x => when(col("norm") > 0, x / col("norm")).otherwise(0.0).cast("float")))
-      .select(col("id"), col("vector"))
-    dense
-  }
+  /** The vector array<float>[64] of a text column, null for a null
+    * text: [[embedLocal]] as a row-local UDF.
+    */
+  def vector(text: Column): Column = embedUdf(text)
 
-  /** Driver-side Scala mirror of [[embed]] for QUERY-sized inputs — the
-    * same tokenize → unigram+bigram → portable-hash bucket → integer
-    * count → L2-normalize chain, bit-identical to the Column version
-    * (EmbedLocalSpec asserts equality element by element). Lets the
-    * search gates build their handful of query vectors at plan time, so
-    * a probe plan against the persisted corpus-vector registry contains
-    * ZERO featurizer stages (no md5 chain, no explode) — the reference's
-    * query-embed call is likewise a single local model invocation
-    * (`embeddings.py:1078-1113`), never a corpus job.
+  private val embedUdf = udf((text: String) =>
+    if (text == null) null else embedLocal(text)).withName("graft_hash_embed")
+
+  /** (id, vector array<float>[64]) from (idCol, textCol), one row per
+    * row of `docs` whose text is not null.
+    */
+  def embed(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    docs.filter(col(textCol).isNotNull)
+      .select(col(idCol).as("id"), vector(col(textCol)).as("vector"))
+
+  /** The featurizer, one text at a time: the body of [[embed]] and the
+    * query-side embed. [[graft.functions.AsciiText.normalize]] → split on
+    * single spaces → every unigram and word bigram → bucket
+    * `hash60("7", gram) mod 64` → integer counts → L2-normalize (a left
+    * fold in bucket order, one double divide, one float round), the chain
+    * the DuckDB mirror `SearchPack.embedPipelineCtes` spells out. Search
+    * builds its query vectors with it at plan time, so a probe plan
+    * against the persisted corpus vectors contains ZERO featurizer
+    * stages — the reference's query embed is likewise a single local
+    * model call (`embeddings.py:1078-1113`), never a corpus job.
     */
   def embedLocal(text: String): Array[Float] = {
-    val norm = text.toLowerCase(java.util.Locale.ROOT)
-      .replaceAll("[^a-z0-9 ]", " ").replaceAll(" +", " ").trim
-    val toks = norm.split(" ", -1)
-    val grams = toks ++ toks.iterator.sliding(2).withPartial(false)
-      .map(p => p(0) + " " + p(1))
-    val raw = new Array[Double](Dim)
-    grams.foreach { g =>
-      raw((PortableHash.hash60Local("7", g) % Dim).toInt) += 1.0
+    // tokens are joined by single spaces ("" is one empty token), so the
+    // bigram "a b" is the byte range from the start of a to the end of b
+    val b = AsciiText.normalize(UTF8String.fromString(text)).getBytes
+    val raw = new Array[Double](64)
+    def count(from: Int, until: Int): Unit = raw((PortableMd5.low60Seeded(Seed,
+      UTF8String.fromBytes(b, from, until - from)) % 64).toInt) += 1.0
+    var (start, prev) = (0, -1)
+    for (i <- 0 to b.length if i == b.length || b(i) == ' ') {
+      count(start, i)
+      if (prev >= 0) count(prev, i)
+      prev = start
+      start = i + 1
     }
-    // same left-fold order as functions.aggregate over the raw array
     val n = math.sqrt(raw.foldLeft(0.0d)((acc, x) => acc + x * x))
     raw.map(x => if (n > 0) (x / n).toFloat else 0.0f)
   }
+
+  private val Seed = "7:".getBytes(java.nio.charset.StandardCharsets.UTF_8)
 
   /** S12 embedding cache: a Parquet KV table keyed by sha2(text). Cached
     * rows skip featurization (a left join, not an LRU — the reference's
@@ -119,13 +100,12 @@ object HashEmbedder {
           org.apache.spark.sql.types.StructType.fromDDL(
             "content_sha STRING, vector ARRAY<FLOAT>"))
     val misses = keyed.join(cache.select("content_sha"), Seq("content_sha"), "left_anti")
-    val fresh = embed(misses, "id", "text")
-    val freshKeyed = fresh.join(keyed.select(col("id"), col("content_sha")), Seq("id"))
     // dedup WITHIN the miss batch only (two miss docs can share a text
     // → one sha); the anti-join already guarantees no overlap with the
     // stored cache, so new rows APPEND — a warm pass rewrites miss-sized
     // bytes, not the whole (corpus-sized at 100 TB) cache
-    val newRows = freshKeyed.select(col("content_sha"), col("vector"))
+    val newRows = embed(misses, "content_sha", "text")
+      .select(col("id").as("content_sha"), col("vector"))
       .dropDuplicates("content_sha")
     if (fs.exists(hPath))
       newRows.write.mode("append").parquet(cachePath)

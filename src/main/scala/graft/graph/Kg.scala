@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
@@ -27,9 +27,9 @@ object Kg {
     *
     * `extraNames` widens the name-resolution map beyond the chunks being
     * built — the differential rebuild passes the surviving entity
-    * vertices so a changed file's calls still resolve to entities in
-    * unchanged files (the reference's global prescan,
-    * `kg_builder.py:1237-1268`, plays the same role).
+    * vertices of the names the change uses, so a changed file's calls
+    * still resolve to entities in unchanged files (the reference's
+    * global prescan, `kg_builder.py:1237-1268`, plays the same role).
     */
   def fromChunks(chunks: DataFrame,
       extraNames: Option[DataFrame] = None): KgTables = {
@@ -39,16 +39,14 @@ object Kg {
         concat(col("file_path"), lit("::"), col("hierarchy_path")).as("id"),
         col("chunk_type").as("label"),
         col("name"), col("file_path"), col("parent_name"))
-    val files = chunks.select(col("file_path")).distinct()
+    val files = chunks
       .select(col("file_path").as("id"), lit("file").as("label"),
         regexp_extract(col("file_path"), "([^/]+)$", 1).as("name"),
         col("file_path"), lit("").as("parent_name"))
     val modules = chunks
-      .select(explode(col("imports")).as("m")).distinct()
+      .select(explode(col("imports")).as("m"))
       .select(col("m").as("id"), lit("module").as("label"),
         col("m").as("name"), lit("").as("file_path"), lit("").as("parent_name"))
-    val vertices = entities.unionByName(files).unionByName(modules)
-      .dropDuplicates("id")
 
     // file -CONTAINS-> top-level entity; class -CONTAINS-> method
     val containsFile = entities.filter(col("parent_name") === "")
@@ -63,7 +61,7 @@ object Kg {
     val localNames = entities.select(col("name").as("target_name"), col("id").as("dst"))
     val byName = extraNames
       .map(x => localNames.unionByName(
-        x.select(col("name").as("target_name"), col("id").as("dst"))).distinct())
+        x.select(col("name").as("target_name"), col("id").as("dst"))))
       .getOrElse(localNames)
 
     val calls = chunks
@@ -76,9 +74,8 @@ object Kg {
       .select(col("src"), col("dst"), lit("CALLS").as("rel_type"))
 
     val imports = chunks
-      .select(col("file_path").as("src"), explode(col("imports")).as("dst"))
-      .distinct()
-      .select(col("src"), col("dst"), lit("IMPORTS").as("rel_type"))
+      .select(col("file_path").as("src"), explode(col("imports")).as("dst"),
+        lit("IMPORTS").as("rel_type"))
 
     val inherits = chunks
       .filter(col("chunk_type") === "class")
@@ -99,15 +96,18 @@ object Kg {
       .select(col("src"), trim(col("dst")).as("dst"),
         lit("HAS_TAG").as("rel_type"))
       .filter(col("dst") =!= "")
-    val tagVertices = tagEdges.select(col("dst")).distinct()
+    val tagVertices = tagEdges
       .select(col("dst").as("id"), lit("tag").as("label"),
         col("dst").as("name"), lit("").as("file_path"), lit("").as("parent_name"))
 
+    // one dedup per output table: repeated files, modules, imports,
+    // tags and resolved names collapse here
     val edges = containsFile.unionByName(containsClass).unionByName(calls)
       .unionByName(imports).unionByName(inherits).unionByName(tagEdges)
       .withColumn("weight", lit(1.0))
       .dropDuplicates("src", "dst", "rel_type")
-    KgTables(vertices.unionByName(tagVertices).dropDuplicates("id"), edges)
+    KgTables(entities.unionByName(files).unionByName(modules)
+      .unionByName(tagVertices).dropDuplicates("id"), edges)
   }
 
   /** Hash-based change detection (`kg_builder.py` `_get_changed_files`,
@@ -133,28 +133,39 @@ object Kg {
     * removed vertex (`knowledge_graph.py` `delete_entities_for_files`,
     * which Kuzu-DETACH-deletes nodes by file_path). Module/tag vertices
     * carry no file_path and survive; an empty or non-matching file set
-    * is a no-op.
+    * is a no-op. The file set and the removed ids are collected (both
+    * the size of the change), so each table is one filtered scan.
     */
   def deleteEntitiesForFiles(kg: KgTables, files: DataFrame): KgTables = {
-    val f = broadcast(files.select(col("file_path")).distinct())
-    val removed = kg.vertices.filter(col("file_path") =!= "")
-      .join(f, Seq("file_path"), "left_semi")
-      .select(col("id"))
-    val vertices = kg.vertices.join(removed, Seq("id"), "left_anti")
-    val edges = kg.edges
-      .join(removed.withColumnRenamed("id", "src"), Seq("src"), "left_anti")
-      .join(removed.withColumnRenamed("id", "dst"), Seq("dst"), "left_anti")
-    KgTables(vertices, edges)
+    import files.sparkSession.implicits._
+    without(kg, files.select(col("file_path")).as[String].collect())
   }
+
+  private def without(kg: KgTables, files: Seq[String]): KgTables = {
+    import kg.vertices.sparkSession.implicits._
+    val removed = kg.vertices
+      .filter(col("file_path") =!= "" && in(col("file_path"), files))
+      .select(col("id")).as[String].collect()
+    KgTables(kg.vertices.filter(!in(col("id"), removed)),
+      kg.edges.filter(!in(col("src"), removed) && !in(col("dst"), removed)))
+  }
+
+  /** `c IN xs`, false rather than null for a null `c`. */
+  private def in(c: Column, xs: Seq[String]): Column =
+    coalesce(c.isin(xs.distinct: _*), lit(false))
 
   /** Differential (incremental) KG rebuild (issue #108 /
     * `test_differential_kg.py`): delete the vertices+edges of changed
     * and deleted files, rebuild only the re-chunked files' subgraph —
-    * resolving its calls against surviving entities too — and merge.
-    * Only the delta is COMPUTED from the changed files; the result is
-    * still both full tables (`dropDuplicates` runs over every vertex
-    * and edge), which the caller rewrites in full. Rewriting only the
-    * file buckets a change touches is ROADMAP direction 1.
+    * resolving its names against the surviving entities of those names
+    * — and merge. The delta is derived once and materialized; each
+    * result table then reads only its own stored table: the surviving
+    * rows minus the delta's keys (a broadcast anti-join), plus the
+    * delta. A caller may therefore overwrite one table before writing
+    * the other.
+    *
+    * Precondition: the stored vertex ids and (src, dst, rel_type) edge
+    * keys are unique, as [[fromChunks]] and this function write them.
     *
     * Reference-faithful drift: edges FROM unchanged files INTO entities
     * that first appear in this delta are not created (the reference's
@@ -167,17 +178,23 @@ object Kg {
     */
   def differentialUpdate(kg: KgTables, rechunked: DataFrame,
       deleted: DataFrame): KgTables = {
-    val rechunkedFiles = rechunked.select(col("file_path")).distinct()
-    val survivors = deleteEntitiesForFiles(kg,
-      rechunkedFiles.unionByName(deleted.select(col("file_path"))))
-    val survivingEntities = survivors.vertices
-      .filter(col("label").isin("function", "class", "method"))
-      .select(col("name"), col("id"))
-    val delta = fromChunks(rechunked, Some(survivingEntities))
-    KgTables(
-      survivors.vertices.unionByName(delta.vertices).dropDuplicates("id"),
-      survivors.edges.unionByName(delta.edges)
-        .dropDuplicates("src", "dst", "rel_type"))
+    import rechunked.sparkSession.implicits._
+    val chunks = rechunked.localCheckpoint()
+    val change = chunks.select(col("file_path"), col("calls"), col("inherits_from"))
+      .as[(String, Seq[String], Seq[String])].collect()
+    val names = change.flatMap(c => Option(c._2).toSeq.flatten ++ Option(c._3).toSeq.flatten)
+    val survivors = without(kg,
+      change.map(_._1) ++ deleted.select(col("file_path")).as[String].collect())
+    val delta = fromChunks(chunks, Some(survivors.vertices.filter(
+      col("label").isin("function", "class", "method") && in(col("name"), names))))
+    def merge(stored: DataFrame, fresh: DataFrame, keys: String*): DataFrame = {
+      val freshKeys = broadcast(fresh.select(keys.map(k => col(k).as(s"delta_$k")): _*))
+      stored.join(freshKeys,
+          keys.map(k => col(k) <=> col(s"delta_$k")).reduce(_ && _), "left_anti")
+        .unionByName(fresh)
+    }
+    KgTables(merge(survivors.vertices, delta.vertices.localCheckpoint(), "id"),
+      merge(survivors.edges, delta.edges.localCheckpoint(), "src", "dst", "rel_type"))
   }
 
   /** Multi-tag AND filter (`knowledge_graph.py:3104-3124`): nodes that

@@ -15,11 +15,11 @@ import graft.ingest.FileDiscovery
   * DELETE ... IN batches, UPDATE file_path on moves). Re-expressed here
   * as idempotent snapshot algebra over immutable tables: every "update"
   * is an anti-join + union, and every operation below is a pure
-  * DataFrame → DataFrame function until the final write. The write
-  * today rewrites each touched table in FULL through a staging swap
-  * ([[overwriteSafe]]), so its cost grows with the table, not with the
-  * change; rewriting only the file buckets a change touches is ROADMAP
-  * direction 1.
+  * DataFrame → DataFrame function until the final write. A change's
+  * new rows cost work the size of the change, but the write still
+  * rewrites each touched table in FULL through a staging swap
+  * ([[overwriteSafe]]); rewriting only the file buckets a change
+  * touches is ROADMAP direction 1.
   */
 object IndexStore {
 
@@ -164,18 +164,18 @@ object IndexStore {
       .withColumn("file_path", coalesce(col("new_path"), col("file_path")))
       .drop("new_path")
 
-  /** The vectors-table rows for `chunks`: each chunk's context text
-    * hash-embedded, denormalized with the chunk fields search returns so
-    * search runs join-free (`vectors_backend.py:52` "avoid JOINs").
+  /** The vectors-table rows for `chunks`, one per chunk and in its
+    * partitioning: each chunk's context text hash-embedded by a
+    * row-local projection, denormalized with the chunk fields search
+    * returns so search runs join-free (`vectors_backend.py:52` "avoid
+    * JOINs").
     */
   def vectorsOf(chunks: DataFrame): DataFrame =
-    HashEmbedder.embed(chunks.withColumn("ctx", HashEmbedder.contextText(
-        col("file_path"), col("language"), col("name"), col("content"))),
-      "chunk_id", "ctx")
-      .withColumnRenamed("id", "chunk_id")
-      .join(chunks.select("chunk_id", "file_path", "content", "language",
-        "start_line", "end_line", "chunk_type", "name", "hierarchy_path"),
-        Seq("chunk_id"))
+    chunks.select(col("chunk_id"),
+      HashEmbedder.vector(HashEmbedder.contextText(col("file_path"),
+        col("language"), col("name"), col("content"))).as("vector"),
+      col("file_path"), col("content"), col("language"), col("start_line"),
+      col("end_line"), col("chunk_type"), col("name"), col("hierarchy_path"))
 
   /** Apply one change set to the index tables (SURVEY §7 step 3; the
     * reference's delete-then-append upsert, `vectors_backend.py:482-677`):
@@ -184,14 +184,18 @@ object IndexStore {
     * chunk ids and vectors), append `newChunks` and their vectors, and
     * swap each table with [[overwriteSafe]], whose refresh is the one
     * on this path. With `kgPath`, the KG tables under it get the same
-    * change through [[graft.graph.Kg.differentialUpdate]].
+    * change through [[graft.graph.Kg.differentialUpdate]]. Each table is
+    * written back in at most as many files as it had, so repeated
+    * batches do not grow the file count.
     *
+    * @param stored    the chunks table at `chunksPath`, as the caller
+    *                  read it to derive the change
     * @param replaced  paths whose stored rows go: deleted files and
     *                  every re-read file, one that now yields no chunks
     *                  included
     * @param newChunks the re-read files' chunk rows
     */
-  def applyChanges(spark: SparkSession, chunksPath: String,
+  def applyChanges(spark: SparkSession, stored: DataFrame, chunksPath: String,
       vectorsPath: String, kgPath: Option[String], replaced: Seq[String],
       moves: Seq[(String, String)], newChunks: DataFrame): Unit = {
     import spark.implicits._
@@ -202,14 +206,17 @@ object IndexStore {
     // INTERNAL_ERROR 'object' writer on the KG union path)
     val fresh = newChunks.localCheckpoint(eager = true)
     val moved = moves.toDF("old_path", "new_path")
-    def swap(path: String, rows: DataFrame): Unit =
-      // allowMissingColumns: a pre-subproject (round-1 schema) stored
-      // table widens with nulls instead of failing — additive evolution
-      overwriteSafe(spark, applyMoves(deleteByFiles(read(spark, path),
-          broadcast(replaced.distinct.toDF("file_path"))), moved)
-        .unionByName(rows, allowMissingColumns = true), path)
-    swap(chunksPath, fresh)
-    swap(vectorsPath, vectorsOf(fresh))
+    def rewrite(path: String, table: DataFrame, rows: DataFrame): Unit =
+      overwriteSafe(spark, rows.coalesce(math.max(1, table.inputFiles.length)), path)
+    // the replaced paths filter as a literal set (a broadcast of them
+    // would cost a job per table); allowMissingColumns: a pre-subproject
+    // (round-1 schema) stored table widens with nulls instead of failing
+    def swap(path: String, table: DataFrame, rows: DataFrame): Unit =
+      rewrite(path, table, applyMoves(table.filter(
+          !coalesce(col("file_path").isin(replaced.distinct: _*), lit(false))), moved)
+        .unionByName(rows, allowMissingColumns = true))
+    swap(chunksPath, stored, fresh)
+    swap(vectorsPath, read(spark, vectorsPath), vectorsOf(fresh))
 
     // the KG treats a move as a change at its destination (drop the old
     // path, re-chunk the new one): one metadata-scale re-chunk instead
@@ -220,15 +227,13 @@ object IndexStore {
       val rechunked = if (dests.isEmpty) fresh else fresh.unionByName(
         FileDiscovery.readFiles(spark, dests).flatMap(Chunker.chunkFile _)
           .toDF().localCheckpoint(eager = true), allowMissingColumns = true)
+      // the update's delta is materialized, so neither write plan reads
+      // the other table's path: the vertices swap cannot pull files
+      // from under the edges write
       val updated = Kg.differentialUpdate(kg, rechunked,
         (replaced ++ moves.map(_._1)).toDF("file_path"))
-      // materialize BOTH before either write: the edges plan anti-joins
-      // against the vertices path, so writing vertices first would
-      // invalidate the files the edges computation still reads
-      val v = updated.vertices.localCheckpoint(eager = true)
-      val e = updated.edges.localCheckpoint(eager = true)
-      overwriteSafe(spark, v, s"$kp/vertices")
-      overwriteSafe(spark, e, s"$kp/edges")
+      rewrite(s"$kp/vertices", kg.vertices, updated.vertices)
+      rewrite(s"$kp/edges", kg.edges, updated.edges)
     }
   }
 

@@ -204,7 +204,7 @@ object SearchPack {
       // vector leg: the PERSISTED corpus vectors (featurized once per
       // corpus at index time — corpusVectors registry), all variant
       // queries embedded through the SAME featurizer driver-side
-      // (embedLocal, bit-identical to the Column chain), per-doc best
+      // (embedLocal, the corpus featurizer's own body), per-doc best
       // variant similarity. The probe plan contains zero featurizer
       // stages — VectorRegistrySpec machine-checks.
       val corpus = corpusVectors(s, d)

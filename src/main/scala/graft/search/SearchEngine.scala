@@ -45,22 +45,21 @@ class SearchEngine(spark: SparkSession) {
     (chunks, IndexStore.vectorsOf(chunks))
   }
 
-  /** Full index build. When `relatedPath` is set, the precomputed
-    * related_chunks artifact is produced from the just-persisted tables
-    * (the reference computes it at index time so the visualizer starts
-    * instantly — `core/relationships.py:143-238`; reading back the
-    * parquet avoids re-running the chunk/embed pipeline for it).
+  /** Full index build. Discovery and chunking run once: the vectors
+    * are embedded from the chunks table just written, in its file
+    * layout. When `relatedPath` is set, the precomputed related_chunks
+    * artifact is produced from the persisted tables too (the reference
+    * computes it at index time so the visualizer starts instantly —
+    * `core/relationships.py:143-238`).
     */
   def indexRepo(root: String, chunksPath: String, vectorsPath: String,
       relatedPath: Option[String] = None): Unit = {
-    val (chunks, vectors) = buildIndex(root)
-    IndexStore.write(chunks, chunksPath)
-    IndexStore.write(vectors, vectorsPath)
+    IndexStore.write(buildIndex(root)._1, chunksPath)
+    val chunks = IndexStore.read(spark, chunksPath)
+    IndexStore.write(IndexStore.vectorsOf(chunks), vectorsPath)
     relatedPath.foreach { p =>
-      val ch = IndexStore.read(spark, chunksPath)
-      val vec = IndexStore.read(spark, vectorsPath)
-      graft.graph.Relationships.write(spark,
-        graft.graph.Relationships.build(ch, vec, vecCol = "vector"), p)
+      graft.graph.Relationships.write(spark, graft.graph.Relationships.build(
+        chunks, IndexStore.read(spark, vectorsPath), vecCol = "vector"), p)
     }
   }
 
@@ -99,12 +98,12 @@ class SearchEngine(spark: SparkSession) {
       disk.join(broadcast(reread.toDF("file_path")), Seq("file_path"), "left_semi")
         .as[FileRecord].flatMap(Chunker.chunkFile _).toDF(),
       graft.ingest.Monorepo.subprojects(disk.select(col("file_path"), col("content"))))
-    IndexStore.applyChanges(spark, chunksPath, vectorsPath, None,
+    IndexStore.applyChanges(spark, stored, chunksPath, vectorsPath, None,
       deleted.toSeq ++ reread, moves.toSeq, newChunks)
   }
 
   /** Embed a query string with the exact corpus featurizer — driver-side
-    * (embedLocal ≡ the Column chain bit-for-bit, ParitySpec), so a
+    * (embedLocal runs the corpus featurizer's own body, ParitySpec), so a
     * query embed never schedules a Spark job.
     */
   def embedQuery(query: String): Array[Float] =
@@ -379,8 +378,8 @@ class SearchEngine(spark: SparkSession) {
     */
   def codeVectorEnrich(results: DataFrame, codeVectors: DataFrame,
       query: String, scoreCol: String, limit: Int): DataFrame = {
-    // query vector at plan time (embedLocal ≡ the Column featurizer,
-    // bit-for-bit) — no Spark job, no featurizer stage in the probe plan
+    // query vector at plan time (embedLocal runs the corpus
+    // featurizer's body) — no Spark job, no featurizer stage in the plan
     val qvec = typedlit(
       HashEmbedder.embedLocal(QueryProcessor.preprocess(query)))
     val codeTop = Fusion.ranked(

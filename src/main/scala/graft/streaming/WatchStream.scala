@@ -26,20 +26,6 @@ object WatchStream {
   final case class FileEvent(file_path: String, event_type: String,
       ts: Timestamp, dest_path: String = null)
 
-  /** ST1 (new-file flavor): stream of file records for files appearing
-    * under `root` — Structured Streaming's file source only surfaces new
-    * files, so modify/delete flows use the event-stream entry instead.
-    */
-  def newFileStream(spark: SparkSession, root: String): DataFrame =
-    spark.readStream
-      .format("text").option("wholetext", "true")
-      .option("recursiveFileLookup", "true")
-      .load(root)
-      .select(
-        input_file_name().as("file_path"),
-        col("value").as("content"),
-        current_timestamp().as("ts"))
-
   /** ST2 debounce: last event per file within the micro-batch
     * (watcher.py:88-120 "collect pending changes, flush after quiet").
     */
@@ -76,16 +62,20 @@ object WatchStream {
       .flatMap(Chunker.chunkFile _).toDF()
     // streamed re-chunks inherit the file's known subproject from the
     // stored table (no full listing in a micro-batch to re-detect
-    // from); brand-new files get it on the next incremental pass
+    // from), looked up for the touched paths only; brand-new files get
+    // it on the next incremental pass
     val stored = IndexStore.read(spark, chunksPath)
     val newChunks =
-      if (stored.columns.contains("subproject_name"))
-        rechunked.join(
-          stored.select("file_path", "subproject_name", "subproject_path")
-            .distinct(),
-          Seq("file_path"), "left")
-      else rechunked
-    IndexStore.applyChanges(spark, chunksPath, vectorsPath, kgPath,
+      if (stored.columns.contains("subproject_name")) {
+        val sub = element_at(typedlit(stored
+          .filter(col("file_path").isin(touched.toSeq: _*))
+          .select("file_path", "subproject_name", "subproject_path")
+          .as[(String, String, String)].collect()
+          .map { case (p, name, path) => p -> (name, path) }.toMap), col("file_path"))
+        rechunked.withColumn("subproject_name", sub("_1"))
+          .withColumn("subproject_path", sub("_2"))
+      } else rechunked
+    IndexStore.applyChanges(spark, stored, chunksPath, vectorsPath, kgPath,
       (deleted ++ touched).toSeq, moves.toSeq, newChunks)
   }
 

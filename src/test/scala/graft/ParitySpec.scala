@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.{PortableHash, VectorFunctions}
+import graft.text.TextFunctions
 
 /** Bit-parity contracts that the oracle checks depend on. */
 class ParitySpec extends SparkSpec {
@@ -18,26 +20,60 @@ class ParitySpec extends SparkSpec {
     assert(fromCols == local)
   }
 
+  /** The relational featurizer `HashEmbedder.embed` ran before it
+    * became row-local, kept as the reference for `embed` and
+    * `embedLocal`: explode the unigrams + word bigrams, bucket them with
+    * the Column `hash60`, count per (id, bucket), densify and
+    * L2-normalize with HOFs.
+    */
+  private def embedChain(docs: DataFrame): DataFrame = {
+    val toked = docs.select(col("id"), TextFunctions.tokens(col("text")).as("toks"))
+    val grams = toked.select(col("id"),
+      explode(array_compact(concat(col("toks"),
+        zip_with(col("toks"),
+          slice(col("toks"), lit(2), greatest(size(col("toks")) - 1, lit(0))),
+          (a, b) => concat(a, lit(" "), b))))).as("gram"))
+    grams.withColumn("bucket", pmod(PortableHash.hash60(col("gram"), 7), lit(64)).cast("int"))
+      .groupBy(col("id"), col("bucket")).agg(count(lit(1)).as("w"))
+      .groupBy(col("id"))
+      .agg(map_from_entries(collect_list(struct(col("bucket"), col("w")))).as("m"))
+      .withColumn("raw", transform(sequence(lit(0), lit(63)),
+        i => coalesce(col("m")(i), lit(0L)).cast("double")))
+      .withColumn("norm", sqrt(aggregate(col("raw"), lit(0.0d), (acc, x) => acc + x * x)))
+      .select(col("id"), transform(col("raw"),
+        x => when(col("norm") > 0, x / col("norm")).otherwise(0.0).cast("float")).as("vector"))
+  }
+
   test("embedLocal matches the Column embed chain bit-for-bit") {
     val texts = Seq(
       "fast index scan", "merge sorted runs fast index",
       "table table table scan", // duplicate grams
       "x",                      // single token: no bigrams
       "Mixed CASE, punct!! (and) [brackets] :: obj->ptr",
-      "a 1 2 3 numbers 42", "quick rapid catalog fast")
-    val fromCols = graft.embed.HashEmbedder.embed(
-        texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-          .toDF("id", "text"), "id", "text")
-      .as[(Long, Array[Float])].collect().toMap
+      "a 1 2 3 numbers 42", "quick rapid catalog fast",
+      "",                       // one empty token
+      "?!., ;:-- ()",           // punctuation only: normalizes to ""
+      "naïve café Über straße", // non-ASCII letters split tokens
+      "日本語 テキスト ok", "\u212Aelvin İstanbul") // lowercase to ASCII / wider
+    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
+    def vectors(df: DataFrame) = df.as[(Long, Array[Float])].collect().toMap
+    val reference = vectors(embedChain(docs))
+    val embedded = vectors(graft.embed.HashEmbedder.embed(docs, "id", "text"))
+    def same(a: Array[Float], b: Array[Float]) =
+      a.length == b.length && a.zip(b).forall { case (x, y) =>
+        java.lang.Float.floatToIntBits(x) == java.lang.Float.floatToIntBits(y) }
     texts.zipWithIndex.foreach { case (t, i) =>
-      val local = graft.embed.HashEmbedder.embedLocal(t)
-      val dist = fromCols(i.toLong)
-      assert(dist.length == local.length, s"dim mismatch for '$t'")
-      dist.zip(local).zipWithIndex.foreach { case ((a, b), k) =>
-        assert(java.lang.Float.floatToIntBits(a) ==
-          java.lang.Float.floatToIntBits(b), s"'$t' dim $k: $a vs $b")
-      }
+      val ref = reference(i.toLong)
+      assert(ref.length == 64, s"'$t'")
+      assert(same(embedded(i.toLong), ref), s"embed '$t'")
+      assert(same(graft.embed.HashEmbedder.embedLocal(t), ref), s"embedLocal '$t'")
     }
+  }
+
+  test("embed gives no row for a null text") {
+    val docs = Seq((1L, "some text"), (2L, null)).toDF("id", "text")
+    assert(graft.embed.HashEmbedder.embed(docs, "id", "text")
+      .select("id").as[Long].collect().toSeq == Seq(1L))
   }
 
   test("FloatDot matches the HOF float fold bit-for-bit") {

@@ -1,6 +1,7 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.sql.Timestamp
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.ListenerBusDrain
@@ -12,13 +13,16 @@ import graft.index.IndexStore
 import graft.search.SearchEngine
 import graft.serve.Tools
 import graft.serve.Tools.Project
+import graft.streaming.WatchStream
 
 /** Jobs per query on the serving path. A keyword search is one
   * statistics aggregate plus one scoring pass (three more jobs when the
   * epsilon floor needs the vocabulary's average idf), and `search_code`
   * a fixed handful on top, whatever the corpus size. Deriving the BM25
   * index inline again costs well over a dozen jobs and fails here.
-  * `trace_execution_flow` runs one edge scan per BFS level.
+  * `trace_execution_flow` runs one edge scan per BFS level. An edit
+  * batch through `applyBatch` derives its new rows with work the size of
+  * the change: no corpus-wide shuffle, no KG delta derived twice.
   */
 class SearchJobCountSpec extends SparkSpec {
 
@@ -111,5 +115,37 @@ class SearchJobCountSpec extends SparkSpec {
     val (related, n) = toolJobs("kg_query", Map("entity_name" -> "parse_file"))
     assert(!related.isEmpty)
     assert(n == 6)
+  }
+
+  test("applyBatch with the KG: a warm 2-file modify") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("apply-jobs")
+    val from = Paths.get(sampleRepo)
+    val repo = dir.resolve("repo")
+    Files.walk(from).forEach { f =>
+      val t = repo.resolve(from.relativize(f).toString)
+      if (Files.isDirectory(f)) Files.createDirectories(t) else Files.copy(f, t)
+      ()
+    }
+    val p = Project(spark, repo.toString,
+      chunksPath = dir.resolve("chunks").toString,
+      vectorsPath = dir.resolve("vectors").toString,
+      kgPath = Some(dir.resolve("kg").toString))
+    new SearchEngine(spark).indexRepo(p.root, p.chunksPath, p.vectorsPath)
+    Tools.dispatch(p, "kg_build", Map.empty).fold(e => fail(e), identity)
+    val edited = Seq("src/parser.py" -> "\nclass Fresh%d:\n    pass\n",
+      "src/search.js" -> "\nclass Fresh%d {}\n").map { case (f, c) => (repo.resolve(f), c) }
+    def edit(round: Int): Unit = {
+      edited.foreach { case (f, c) => Files.writeString(f, Files.readString(f) + c.format(round)) }
+      WatchStream.applyBatch(spark, edited.map { case (f, _) =>
+          WatchStream.FileEvent(f.toString, "modified", new Timestamp(round.toLong))
+        }.toDF(), p.chunksPath, p.vectorsPath, p.kgPath)
+    }
+    edit(1) // warm
+    val n = jobs(edit(2))
+    assert(IndexStore.read(spark, s"${p.kgPath.get}/vertices")
+      .filter(col("name") === "Fresh2").count() == 2)
+    info(s"$n jobs")
+    assert(n <= 27, s"$n jobs")
   }
 }

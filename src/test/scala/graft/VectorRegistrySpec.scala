@@ -7,14 +7,18 @@ package graft
   *
   * Machine checks, per gate:
   *  - e2e2 / sbc1 / cv1: ZERO featurizer stages anywhere in the plan —
-  *    no portable-hash md5 chain and no n-gram explode (query vectors are
-  *    embedLocal plan-time literals, corpus vectors a bucketed scan);
+  *    no native embed expression, no portable-hash md5 chain and no
+  *    n-gram explode (query vectors are embedLocal plan-time literals,
+  *    corpus vectors a bucketed scan);
   *  - ss1: the corpus side scans the registry; only the seed CONTENT
   *    (the genuine query side) may re-embed in-plan.
   */
 class VectorRegistrySpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
+
+  /** The featurizer's name in a plan. */
+  private val embedExpr = "graft_hash_embed"
 
   private def planString(name: String): String = {
     val qe = SparkEntry.queries(name)(spark, sfDir).queryExecution
@@ -25,8 +29,8 @@ class VectorRegistrySpec extends SparkSpec {
     Seq("e2e2_search_pipeline", "sbc1_search_by_context",
         "swc1_search_with_context", "cv1_code_vectors").foreach { name =>
       val p = planString(name)
-      assert(!p.contains("md5"),
-        s"$name: portable-hash featurizer found in the probe plan")
+      assert(!p.contains(embedExpr) && !p.contains("md5"),
+        s"$name: featurizer found in the probe plan")
       assert(!p.toLowerCase.contains("explode"),
         s"$name: n-gram explode found in the probe plan")
     }
@@ -48,7 +52,7 @@ class VectorRegistrySpec extends SparkSpec {
     // registry scan (asserted above) and a featurizer chain whose
     // source is the %101 seed filter, never an unfiltered corpus scan
     val p = planString("ss1_search_similar")
-    assert(p.contains("md5"), "ss1: seed-side query embed should stay in-plan")
+    assert(p.contains(embedExpr), "ss1: seed-side query embed should stay in-plan")
     assert(p.contains("% 101"), "ss1: featurizer source must be the seed filter")
   }
 }
