@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.queries.{AnalyticsPack, AuditPack, ChunkPack, CurationPack, GitPack, GraphPack, IndexPack, MultimodalPack, RelationalPack, SearchPack, TextDedupPack}
-import graft.tables.Tables
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *

@@ -1,7 +1,6 @@
 package graft.analyze
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.graph.Kg
@@ -301,8 +300,7 @@ object Analytics {
     * commands, routes, tests, exports) to root the walk at real entry
     * points; the name/path heuristic below remains as a safety net.
     */
-  def deadCode(chunks: DataFrame, kg: Kg.KgTables,
-      entryPoints: Option[DataFrame] = None): DataFrame = {
+  def deadCode(kg: Kg.KgTables, entryPoints: Option[DataFrame] = None): DataFrame = {
     val heuristic = kg.vertices
       .filter(col("label").isin("function", "method", "class"))
       .filter(

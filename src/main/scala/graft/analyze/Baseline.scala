@@ -28,17 +28,6 @@ object Baseline {
     "total_complexity", "avg_complexity", "max_complexity",
     "function_count", "class_count")
 
-  /** Per-file snapshot at the ProjectMetrics.files grain. */
-  def fileMetrics(chunks: DataFrame): DataFrame =
-    chunks.groupBy(col("file_path")).agg(
-      sum(col("cognitive_complexity")).cast("double").as("total_complexity"),
-      avg(col("cognitive_complexity")).as("avg_complexity"),
-      max(col("cognitive_complexity")).cast("double").as("max_complexity"),
-      sum(when(col("chunk_type").isin("function", "method"), 1L)
-        .otherwise(0L)).cast("double").as("function_count"),
-      sum(when(col("chunk_type") === "class", 1L).otherwise(0L))
-        .cast("double").as("class_count"))
-
   /** Compare two snapshots (columns: file_path + FileMetrics). Output:
     * (file_path, status, metric_name, baseline_value, current_value,
     * absolute_delta, percentage_delta, classification); new/deleted

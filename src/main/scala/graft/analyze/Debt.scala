@@ -1,13 +1,13 @@
 package graft.analyze
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** A15 technical-debt scoring + trend tracking — the reference's debt
   * index + SQLite trend store (`analysis/debt.py`, `analysis/storage/
-  * metrics_store.py`, `trend_tracker.py`) as a run_ts-partitioned
-  * Parquet snapshot table with window-function trends.
+  * metrics_store.py`, `trend_tracker.py`) as run_ts-stamped snapshot
+  * rows with window-function trends.
   */
 object Debt {
 
@@ -37,9 +37,6 @@ object Debt {
       .select("run_ts", "file_path", "debt_score", "smell_weight",
         "total_complexity", "n_chunks", "tokens")
   }
-
-  def appendSnapshot(snap: DataFrame, path: String): Unit =
-    snap.write.mode("append").partitionBy("run_ts").parquet(path)
 
   /** Trend: per-file debt delta vs the previous run (lag window over
     * run_ts) — the reference's trend queries re-expressed.

@@ -1,8 +1,7 @@
 package graft.ann
 
-import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 

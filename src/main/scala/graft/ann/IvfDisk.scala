@@ -1,7 +1,6 @@
 package graft.ann
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** Disk-backed IVF query path: read the cluster-partitioned layout that
   * `Ivf.write` produced and probe it. Because the vectors table is

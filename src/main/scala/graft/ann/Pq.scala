@@ -50,7 +50,6 @@ object Pq {
     */
   def fit(corpus: DataFrame, vecCol: String, m: Int, ksub: Int,
       seed: Long = 42L): Codebook = {
-    val spark = corpus.sparkSession
     val dim = corpus.select(size(col(vecCol))).head().getInt(0)
     require(dim % m == 0, s"dim $dim not divisible by M=$m")
     val dsub = dim / m

@@ -37,12 +37,6 @@ object Quantize {
     transform(codes, c =>
       ((c.cast("double") + 128) / 255.0 * qscale + qmin).cast("float"))
 
-  /** Approximate cosine over quantized vectors (decode-on-the-fly). */
-  def cosineQ(aCodes: Column, aMin: Column, aScale: Column,
-      bCodes: Column, bMin: Column, bScale: Column): Column =
-    graft.functions.VectorFunctions.cosine(
-      decode(aCodes, aMin, aScale), decode(bCodes, bMin, bScale))
-
   /** Two-stage retrieval mirroring the reference's refine_factor: rank
     * with quantized vectors, over-fetch refine*k candidates, exact-rank
     * the survivors with the float vectors. corpus must carry both

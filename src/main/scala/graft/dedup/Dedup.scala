@@ -17,9 +17,9 @@ import graft.text.TextFunctions
   *     the whole point of LSH is that buckets are tiny, so the join
   *     never quadratically explodes the way all-pairs Jaccard would;
   *   - SimHash is one explode + two groupBys, all partial-aggregable;
-  *   - all-pairs variants (ngramJaccardPairs / embeddingNearDupPairs) are
-  *     the *verification* primitives — at scale you run them only on the
-  *     LSH candidate set, which is what `minhashNearDupPairs` does.
+  *   - pair verification (`jaccardOfPairs`, `containmentOfPairs`) runs
+  *     only on the LSH candidate set, which is what
+  *     `minhashNearDupPairs` does.
   */
 object Dedup {
   import PortableHash.hash60
@@ -490,18 +490,6 @@ object Dedup {
       .select(col("doc_id"), col("simhash"))
   }
 
-  /** Pairs within a SimHash Hamming radius (verification primitive; at scale
-    * gate it behind bucketing on simhash prefixes).
-    */
-  def simhashPairs(sims: DataFrame, maxHamming: Int): DataFrame = {
-    val l = sims.select(col("doc_id").as("a"), col("simhash").as("sa"))
-    val r = sims.select(col("doc_id").as("b"), col("simhash").as("sb"))
-    l.join(r, col("a") < col("b"))
-      .withColumn("hamming", bit_count(col("sa").bitwiseXOR(col("sb"))))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("a"), col("b"), col("hamming"))
-  }
-
   /** Pigeonhole segment defs for banded Hamming search over a `bits`-bit
     * hash: `maxHamming + 1` contiguous segments (wider ones first). Any
     * pair within Hamming ≤ maxHamming differs in ≤ maxHamming bits, so at
@@ -532,7 +520,8 @@ object Dedup {
   /** Pairs within a SimHash Hamming radius via pigeonhole banding — the
     * scale path: an equi-join on (segment, segment_value) replaces the
     * all-pairs cartesian, with zero recall loss (see simhashSegmentDefs).
-    * Output is identical to `simhashPairs(sims, maxHamming)`.
+    * Output is every pair within the radius, as an all-pairs Hamming
+    * filter would find.
     */
   def simhashPairsBanded(sims: DataFrame, maxHamming: Int): DataFrame = {
     // the banding rows feed both sides of the self-join — cache them
@@ -588,24 +577,6 @@ object Dedup {
       .join(base.select(col("doc_id").as("a"), col("vec").as("va")), Seq("a"))
       .join(base.select(col("doc_id").as("b"), col("vec").as("vb")), Seq("b"))
       .withColumn("sim", VectorFunctions.cosine(col("va"), col("vb")))
-      .filter(col("sim") >= minSim)
-      .select(col("a"), col("b"), col("sim"))
-  }
-
-  /** Embedding-cosine near-dup pairs above a similarity threshold
-    * (all-pairs verification primitive; the scale path buckets by IVF
-    * cluster or random-hyperplane LSH first — see graft.ann).
-    */
-  def embeddingNearDupPairs(emb: DataFrame, idCol: String, vecCol: String,
-      minSim: Double): DataFrame = {
-    // squared norms precomputed once per row (N rows), not per pair (N²)
-    val l = emb.select(col(idCol).as("a"), col(vecCol).as("va"),
-      VectorFunctions.norm2(col(vecCol)).as("na2"))
-    val r = emb.select(col(idCol).as("b"), col(vecCol).as("vb"),
-      VectorFunctions.norm2(col(vecCol)).as("nb2"))
-    l.join(r, col("a") < col("b"))
-      .withColumn("sim", VectorFunctions.cosinePre(
-        col("va"), col("vb"), col("na2"), col("nb2")))
       .filter(col("sim") >= minSim)
       .select(col("a"), col("b"), col("sim"))
   }

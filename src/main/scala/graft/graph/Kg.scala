@@ -173,19 +173,21 @@ object Kg {
     * `fromChunks` rebuild reconciles, exactly as the reference's full
     * rebuild does.
     *
-    * @param rechunked chunk rows for changed+new files only
+    * @param rechunked chunk rows for changed+new files only, already
+    *                  materialized (e.g. a `localCheckpoint`): they are
+    *                  read twice, and an object-typed plan (a `flatMap`
+    *                  over `Chunker.chunkFile`) must not reach the merge
     * @param deleted   file paths that disappeared
     */
   def differentialUpdate(kg: KgTables, rechunked: DataFrame,
       deleted: DataFrame): KgTables = {
     import rechunked.sparkSession.implicits._
-    val chunks = rechunked.localCheckpoint()
-    val change = chunks.select(col("file_path"), col("calls"), col("inherits_from"))
+    val change = rechunked.select(col("file_path"), col("calls"), col("inherits_from"))
       .as[(String, Seq[String], Seq[String])].collect()
     val names = change.flatMap(c => Option(c._2).toSeq.flatten ++ Option(c._3).toSeq.flatten)
     val survivors = without(kg,
       change.map(_._1) ++ deleted.select(col("file_path")).as[String].collect())
-    val delta = fromChunks(chunks, Some(survivors.vertices.filter(
+    val delta = fromChunks(rechunked, Some(survivors.vertices.filter(
       col("label").isin("function", "class", "method") && in(col("name"), names))))
     def merge(stored: DataFrame, fresh: DataFrame, keys: String*): DataFrame = {
       val freshKeys = broadcast(fresh.select(keys.map(k => col(k).as(s"delta_$k")): _*))

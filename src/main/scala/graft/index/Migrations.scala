@@ -1,7 +1,6 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Versioned index migrations (reference `migrations/`): an ordered,

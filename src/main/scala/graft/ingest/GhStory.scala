@@ -1,7 +1,6 @@
 package graft.ingest
 
 import org.apache.spark.sql.{DataFrame, Column}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 

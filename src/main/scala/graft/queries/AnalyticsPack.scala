@@ -341,7 +341,7 @@ object AnalyticsPack {
     // oracle = recursive CTE, the g3/g7 pattern.
     "a13_dead_code" -> ((s, d) => {
       val kg = deadCodeKg(s, d)
-      Analytics.deadCode(kg.vertices.limit(0), kg)
+      Analytics.deadCode(kg)
         .orderBy(col("id"))
         .limit(500)
     }),

@@ -48,7 +48,6 @@ object AuditPack {
     * hash the arrays corpus-wide for the same 7 rows.
     */
   private def claims(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     val cid = col("cid")
     Tables.documents(s, d)
       .select((col("doc_id") % 7).cast("int").as("cid")).distinct()

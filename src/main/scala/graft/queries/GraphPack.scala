@@ -457,7 +457,8 @@ object GraphPack {
           kg0raw.edges.localCheckpoint(true))
       }
       val updated = Kg.differentialUpdate(kg0,
-        changed.unionByName(added), Seq("src/f2.py").toDF("file_path"))
+        changed.unionByName(added).localCheckpoint(),
+        Seq("src/f2.py").toDF("file_path"))
       updated.vertices
         .select(lit("V").as("kind"), col("id").as("a"),
           col("label").as("b"), col("name").as("c"))

@@ -261,10 +261,6 @@ object Bm25 {
       .agg(max(col("vscore")).as("score"))
   }
 
-  def scoreVariants(spark: org.apache.spark.sql.SparkSession,
-      postings: DataFrame, variants: Seq[Seq[String]]): DataFrame =
-    scoreVariantsIndexed(spark, buildIndex(postings), variants)
-
   /** Batched multi-QUERY scoring: `queryTerms` is (qid, term, qtf) for N
     * independent queries; every query scores against the index in ONE
     * postings join, aggregated per (qid, id). The per-query loop the

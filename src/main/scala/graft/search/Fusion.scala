@@ -1,6 +1,6 @@
 package graft.search
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Rank fusion + rerank stages of the search pipeline.

@@ -27,7 +27,6 @@ import graft.ingest.FileDiscovery
   * Hybrid = both rank lists collected (≤ 2·limit rows each), RRF with
   * identifier-aware alpha on the driver, then metadata attached by one
   * broadcast join, the heuristic boost stage (Q15) and the top-k cut.
-  * The optional MMR finisher runs driver-side on the collected top-N.
   */
 class SearchEngine(spark: SparkSession) {
   import spark.implicits._
@@ -253,17 +252,6 @@ class SearchEngine(spark: SparkSession) {
       .filter(col("chunk_id") =!= chunkId)
   }
 
-  /** Q16 file flavor (`search.py:434-483` + `:714-746`): use a file — or
-    * one named function extracted from it — as the query.
-    */
-  def searchSimilarToFile(vectors: DataFrame, fileContent: String,
-      functionName: Option[String], limit: Int): DataFrame = {
-    val query = functionName
-      .flatMap(n => extractFunction(fileContent, n))
-      .getOrElse(fileContent)
-    vectorSearch(vectors, query, limit, threshold = Some(0.0))
-  }
-
   /** Q16 batch flavor, fully distributed: every seed chunk's CONTENT is
     * run through query preprocessing (the reference's content-as-query
     * path, `search.py:434-483`) and re-embedded IN-PLAN — no driver
@@ -414,29 +402,5 @@ class SearchEngine(spark: SparkSession) {
         when(col("all_lines").isNotNull, slice(col("all_lines"),
           col("end_line") + 1, lit(contextLines))))
       .drop("all_lines")
-  }
-
-  /** S11 authorship enrichment: attach last_author / last_modified /
-    * last_commit from a blame table — the reference's
-    * `enrich_with_git_blame` over SearchResults, as one join instead of a
-    * per-result subprocess (`core/git_blame.py:262-330`).
-    */
-  def withAuthorship(results: DataFrame, blame: DataFrame): DataFrame =
-    graft.ingest.GitBlame.enrichChunks(results, blame)
-
-  /** MMR diversity finisher (Q11): collect top-3k candidates, greedy-pick
-    * k diverse results driver-side.
-    */
-  def mmrFinish(results: DataFrame, k: Int, lambda: Double = 0.7): Seq[Mmr.Candidate] = {
-    val cands = results
-      .select(col("chunk_id"), col("similarity_score"), col("vector"))
-      .orderBy(col("similarity_score").desc, col("chunk_id"))
-      .limit(3 * k)
-      .collect()
-      .zipWithIndex
-      .map { case (r, i) =>
-        Mmr.Candidate(i.toLong, r.getDouble(1), r.getSeq[Float](2).toArray)
-      }
-    Mmr.rerank(cands.toSeq, lambda, k)
   }
 }

@@ -16,7 +16,7 @@ import graft.ingest.FileDiscovery
   * debounce buffer, and per-event mutation of the stores
   * (`core/watcher.py`). Spark-first: change notifications become an
   * event *stream* (file_path, event_type, ts); each micro-batch is
-  * debounced relationally (last event per file wins — exactly the
+  * debounced after a collect (last event per file wins — exactly the
   * reference's coalescing buffer) and applied as one idempotent
   * set-algebra transaction (delete → rechunk → re-embed → upsert) via
   * `foreachBatch`. The trigger interval IS the debounce window.
@@ -26,17 +26,26 @@ object WatchStream {
   final case class FileEvent(file_path: String, event_type: String,
       ts: Timestamp, dest_path: String = null)
 
-  /** ST2 debounce: last event per file within the micro-batch
-    * (watcher.py:88-120 "collect pending changes, flush after quiet").
+  /** ST2 debounce: the last event per file within the micro-batch
+    * (watcher.py:88-120 "collect pending changes, flush after quiet"),
+    * sorted by path. A batch holds one row per file-system event, so it
+    * is collected and folded in memory, with no Spark aggregation.
+    * Of events on equal `ts`, whatever the row order, one that re-reads
+    * the file (`modified`, then `created`) wins, since [[applyBatch]]
+    * then acts on the file as it is on disk; then `moved`, then
+    * `deleted`; then the greater `dest_path` (null lowest). A null `ts`
+    * sorts before every other.
     */
-  def latestEventPerFile(batch: DataFrame): DataFrame = {
+  def latestEventPerFile(batch: DataFrame): Seq[FileEvent] = {
+    import batch.sparkSession.implicits._
     val withDest =
       if (batch.columns.contains("dest_path")) batch
       else batch.withColumn("dest_path", lit(null).cast("string"))
-    withDest.groupBy(col("file_path"))
-      .agg(
-        max_by(col("event_type"), col("ts")).as("event_type"),
-        max_by(col("dest_path"), col("ts")).as("dest_path"))
+    val rank = Seq("deleted", "moved", "created", "modified")
+    val order = Ordering.by((e: FileEvent) => (Option(e.ts).map(t => (t.getTime, t.getNanos)),
+      rank.indexOf(e.event_type), Option(e.event_type), Option(e.dest_path)))
+    withDest.select("file_path", "event_type", "ts", "dest_path").as[FileEvent]
+      .collect().groupBy(_.file_path).values.map(_.max(order)).toSeq.sortBy(_.file_path)
   }
 
   /** ST3: apply one debounced micro-batch to the chunks/vectors tables —
@@ -48,17 +57,16 @@ object WatchStream {
       chunksPath: String, vectorsPath: String,
       kgPath: Option[String] = None): Unit = {
     import spark.implicits._
-    // the debounced batch is metadata-scale: one row per touched file
     val events = latestEventPerFile(batch)
-      .as[(String, String, String)].collect()
-    val deleted = events.collect { case (p, "deleted", _) => p }
+    val deleted = events.collect { case FileEvent(p, "deleted", _, _) => p }
     // move = metadata-only path rewrite (reference watcher.py:218-360),
     // no re-chunk/re-embed
-    val moves = events.collect { case (p, "moved", d) if d != null => (p, d) }
-    val touched = events.collect {
-      case (p, "created" | "modified", _) if new java.io.File(p).isFile => p
-    }
-    val rechunked = FileDiscovery.readFiles(spark, touched.toSeq)
+    val moves = events.collect { case FileEvent(p, "moved", _, d) if d != null => (p, d) }
+    // a created or modified file that is gone by now loses its rows,
+    // as a deleted one does
+    val reread = events.collect { case FileEvent(p, "created" | "modified", _, _) => p }
+    val touched = reread.filter(p => new java.io.File(p).isFile)
+    val rechunked = FileDiscovery.readFiles(spark, touched)
       .flatMap(Chunker.chunkFile _).toDF()
     // streamed re-chunks inherit the file's known subproject from the
     // stored table (no full listing in a micro-batch to re-detect
@@ -68,7 +76,7 @@ object WatchStream {
     val newChunks =
       if (stored.columns.contains("subproject_name")) {
         val sub = element_at(typedlit(stored
-          .filter(col("file_path").isin(touched.toSeq: _*))
+          .filter(col("file_path").isin(touched: _*))
           .select("file_path", "subproject_name", "subproject_path")
           .as[(String, String, String)].collect()
           .map { case (p, name, path) => p -> (name, path) }.toMap), col("file_path"))
@@ -76,7 +84,7 @@ object WatchStream {
           .withColumn("subproject_path", sub("_2"))
       } else rechunked
     IndexStore.applyChanges(spark, stored, chunksPath, vectorsPath, kgPath,
-      (deleted ++ touched).toSeq, moves.toSeq, newChunks)
+      deleted ++ reread, moves, newChunks)
   }
 
   /** Wire an event stream into the debounced reindex sink. The trigger

@@ -1,6 +1,6 @@
 package graft.util
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew-mitigation helpers (SURVEY §7 100 TB posture). A hot key —

@@ -115,7 +115,7 @@ class EntryPointsSpec extends SparkSpec {
     val chunks = Seq(f).toDS().flatMap(graft.chunk.Chunker.chunkFile _).toDF()
     val kg = graft.graph.Kg.fromChunks(chunks)
     val eps = EntryPoints.fromFiles(spark, Seq(f).toDS()).toDF()
-    val dead = graft.analyze.Analytics.deadCode(chunks, kg, Some(eps))
+    val dead = graft.analyze.Analytics.deadCode(kg, Some(eps))
       .select("name").as[String].collect().toSet
     assert(dead.contains("orphan"))
     assert(!dead.contains("entry"))

@@ -94,9 +94,7 @@ class GitHooksSpec extends SparkSpec {
     val events = spark.read.schema(GitHooks.eventSchema)
       .json(spool.getAbsolutePath)
     val latest = WatchStream.latestEventPerFile(events)
-      .orderBy(col("file_path"))
-      .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2)))
+      .map(e => (e.file_path, e.event_type, e.dest_path))
     assert(latest.toSeq == Seq(
       ("src/a.py", "modified", null),
       ("src/b.py", "deleted", null),

@@ -147,7 +147,7 @@ class GraphAnalyticsSpec extends SparkSpec {
   }
 
   test("dead code: unreachable helper flagged, called code not") {
-    val dead = Analytics.deadCode(chunks, kg)
+    val dead = Analytics.deadCode(kg)
     val names = dead.select("name").as[String].collect().toSet
     // parse_file is called by load_config (reached from ConfigLoader? only
     // if an entry reaches it) — at minimum the reachability result is a

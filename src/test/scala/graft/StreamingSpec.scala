@@ -29,9 +29,40 @@ class StreamingSpec extends SparkSpec {
       FileEvent("/a.py", "modified", t(2000)),
       FileEvent("/a.py", "deleted", t(3000)),
       FileEvent("/b.py", "created", t(1500))).toDF()
-    val out = WatchStream.latestEventPerFile(batch).collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
+    val out = WatchStream.latestEventPerFile(batch)
+      .map(e => e.file_path -> e.event_type).toMap
     assert(out == Map("/a.py" -> "deleted", "/b.py" -> "created"))
+  }
+
+  test("debounce breaks equal-ts ties by event type, then destination") {
+    val t = new Timestamp(1000)
+    val events = Seq(
+      FileEvent("/c.py", "deleted", t), FileEvent("/c.py", "created", t),
+      FileEvent("/d.py", "moved", t, "/y.py"), FileEvent("/d.py", "moved", t, "/z.py"),
+      FileEvent("/d.py", "deleted", t))
+    for (batch <- Seq(events, events.reverse))
+      assert(WatchStream.latestEventPerFile(batch.toDF()) == Seq(
+        FileEvent("/c.py", "created", t), FileEvent("/d.py", "moved", t, "/z.py")))
+  }
+
+  test("a modified file that is gone by the batch loses its rows") {
+    withTempDir { dir =>
+      val repo = dir.resolve("repo"); Files.createDirectories(repo)
+      val fileB = repo.resolve("b.py")
+      Files.writeString(repo.resolve("a.py"), "def alpha():\n    return 1\n")
+      Files.writeString(fileB, "def beta():\n    return 2\n")
+      val chunksPath = dir.resolve("chunks").toString
+      val vectorsPath = dir.resolve("vectors").toString
+      new SearchEngine(spark).indexRepo(repo.toString, chunksPath, vectorsPath)
+      Files.delete(fileB)
+      // modified and deleted in one tick: the modify wins the tie
+      val t = new Timestamp(5L)
+      WatchStream.applyBatch(spark, Seq(FileEvent(fileB.toString, "deleted", t),
+        FileEvent(fileB.toString, "modified", t)).toDF(), chunksPath, vectorsPath)
+      for (p <- Seq(chunksPath, vectorsPath))
+        assert(spark.read.parquet(p).filter(col("file_path") === fileB.toString)
+          .isEmpty, p)
+    }
   }
 
   test("event stream drives incremental reindex through foreachBatch") {
