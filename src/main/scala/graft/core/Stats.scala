@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** IndexStats / ProjectStatus / HealthStatus (`core/models.py:559-586`,
@@ -19,7 +19,7 @@ object Stats {
       languages: Map[String, Long],
       chunk_types: Map[String, Long])
 
-  def indexStats(spark: SparkSession, chunks: DataFrame, vectors: DataFrame): IndexStats = {
+  def indexStats(chunks: DataFrame, vectors: DataFrame): IndexStats = {
     val embedded = chunks.join(vectors.select("chunk_id"), Seq("chunk_id"), "left_semi").count()
     val total = chunks.count()
     val langs = chunks.groupBy("language").count()

@@ -1,7 +1,13 @@
 package graft.index
 
+import scala.util.{Try, Using}
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.chunk.Chunker
 import graft.embed.HashEmbedder
@@ -44,8 +50,41 @@ object IndexStore {
     spark.catalog.refreshByPath(path)
   }
 
+  /** Read an index table with no Spark job: the schema comes from
+    * [[footerSchema]] on the driver, where `spark.read.parquet` would
+    * infer it in a job. A table without one (another Parquet writer, a
+    * partitioned layout, an unreadable footer) falls back to that
+    * inference, which also raises the usual error for a missing path.
+    */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    footerSchema(spark, path).fold(spark.read.parquet(path))(
+      spark.read.schema(_).parquet(path))
+
+  /** The schema Spark's Parquet writer recorded as JSON in the footer
+    * (`org.apache.spark.sql.parquet.row.metadata`) of the first data
+    * file by name directly under `path`, or of `path` itself. Spark's
+    * inference also reads one file's footer unless `mergeSchema` is
+    * set; every writer here writes a whole table in one schema. None
+    * for a missing path, no data file, subdirectories or no such key.
+    */
+  def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val hp = new Path(path)
+    def hidden(p: Path) = p.getName.startsWith("_") || p.getName.startsWith(".")
+    Try {
+      val fs = hp.getFileSystem(conf)
+      val st = fs.getFileStatus(hp)
+      val entries = if (st.isDirectory) fs.listStatus(hp).filterNot(e => hidden(e.getPath))
+        else Array(st)
+      if (entries.exists(_.isDirectory)) None
+      else entries.map(_.getPath).sortBy(_.getName).headOption.flatMap { f =>
+        Using.resource(ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))) { r =>
+          Option(r.getFooter.getFileMetaData.getKeyValueMetaData
+            .get("org.apache.spark.sql.parquet.row.metadata"))
+        }
+      }.map(DataType.fromJson).collect { case s: StructType => s }
+    }.toOption.flatten
+  }
 
   /** Additive schema evolution on read (`vectors_backend.py:182-215`
     * `_evolve_schema_if_needed`): columns in `target` missing from the
@@ -199,12 +238,13 @@ object IndexStore {
       vectorsPath: String, kgPath: Option[String], replaced: Seq[String],
       moves: Seq[(String, String)], newChunks: DataFrame): Unit = {
     import spark.implicits._
-    // eager checkpoint: materialize the (change-sized) chunk rows once,
-    // so the object-typed flatMap segment never reaches the downstream
-    // union/join optimizer — Catalyst can push a Project into the
-    // object pipeline there and fail serialization (seen as
-    // INTERNAL_ERROR 'object' writer on the KG union path)
-    val fresh = newChunks.localCheckpoint(eager = true)
+    // checkpoint: the plan is cut at a LogicalRDD, so the object-typed
+    // flatMap segment never reaches the downstream union/join optimizer
+    // — Catalyst can push a Project into the object pipeline there and
+    // fail serialization (seen as INTERNAL_ERROR 'object' writer on the
+    // KG union path). Lazy: the chunks write below materializes the
+    // (change-sized) rows, and the vectors and KG plans read them back
+    val fresh = newChunks.localCheckpoint(eager = false)
     val moved = moves.toDF("old_path", "new_path")
     def rewrite(path: String, table: DataFrame, rows: DataFrame): Unit =
       overwriteSafe(spark, rows.coalesce(math.max(1, table.inputFiles.length)), path)

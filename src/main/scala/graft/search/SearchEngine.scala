@@ -179,9 +179,10 @@ class SearchEngine(spark: SparkSession) {
     * for identifier-shaped queries (Q3) unless given, heuristic boost
     * (Q15). Both rank lists are collected (≤ 2·limit rows each) and
     * fused on the driver by [[Fusion.rrfLocal]]; the fused rows are
-    * broadcast into one join that attaches the vectors table's metadata
-    * (every fused row kept, the corpus side streamed), then boosted and
-    * cut to `limit`.
+    * broadcast into one inner join that attaches the vectors table's
+    * metadata, so the vectors scan streams past the broadcast fused
+    * rows (a chunk id the vectors table lacks drops out), then boosted
+    * and cut to `limit`.
     */
   def hybridSearch(vectors: DataFrame, chunks: DataFrame, query: String,
       limit: Int, alpha: Option[Double] = None): DataFrame = {
@@ -193,7 +194,7 @@ class SearchEngine(spark: SparkSession) {
       ranks(keywordSearch(chunks, query, limit * 2)),
       alpha.getOrElse(QueryProcessor.hybridAlpha(query)))
       .toDF("chunk_id", "rrf_score")
-    val withMeta = vectors.join(broadcast(fused), Seq("chunk_id"), "right")
+    val withMeta = vectors.join(broadcast(fused), Seq("chunk_id"))
       .select(("chunk_id" +: "rrf_score" +: vectors.columns.filter(_ != "chunk_id"))
         .map(col).toSeq: _*)
     Fusion.ranked(boost(withMeta, query, "rrf_score"), "chunk_id", "boosted", limit)
@@ -313,12 +314,10 @@ class SearchEngine(spark: SparkSession) {
     * REPLACES the ranking score and the candidate set is cut to keepTopN
     * (= limit×3 upstream, kept for MMR). Default scorer is the
     * deterministic feature model in graft.search.FeatureScorer; drop in a
-    * real model by passing another PairScorer to Rerank.
-    * (`scoreCol` is accepted for call-site compatibility; reference
-    * semantics discard the prior score.)
+    * real model by passing another PairScorer to Rerank. As in the
+    * reference, the prior score is discarded.
     */
-  def rerankProxy(results: DataFrame, query: String, scoreCol: String,
-      keepTopN: Int): DataFrame = {
+  def rerankProxy(results: DataFrame, query: String, keepTopN: Int): DataFrame = {
     if (Tokenizer.tokenize(QueryProcessor.preprocess(query)).isEmpty) return results
     Rerank(results, query, keepTopN)
   }

@@ -58,7 +58,7 @@ object AnomalyStream {
     Scored(key, period, x, c, mean, z)
   }
 
-  private def fold(key: String, points: Iterator[SeriesPoint], window: Int,
+  private def fold(points: Iterator[SeriesPoint], window: Int,
       state: GroupState[Ring]): Iterator[Scored] = {
     val sorted = points.toSeq.sortBy(p => (p.period, p.value))
     var ring = state.getOption.map(_.values).getOrElse(Seq.empty)
@@ -77,7 +77,7 @@ object AnomalyStream {
       .groupByKey(_.key)
       .flatMapGroupsWithState[Ring, Scored](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (k, it, state) => fold(k, it, window, state)
+        (_, it, state) => fold(it, window, state)
       }
   }
 }

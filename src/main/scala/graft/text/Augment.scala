@@ -31,7 +31,7 @@ object Augment {
     val toks = TextFunctions.tokens(col(textCol))
     docs.select(col(idCol).as("doc_id"), toks.as("toks"))
       .select(col("doc_id"), col("toks"),
-        filter(col("toks"), (t, i) =>
+        filter(col("toks"), (_, i) =>
           PortableHash.hash60(lit("aug"),
             concat(col("doc_id").cast("string"), lit(":"),
               i.cast("string"), lit(":"), lit(seed.toString)))

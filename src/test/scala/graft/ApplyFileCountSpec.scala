@@ -5,8 +5,6 @@ import java.sql.Timestamp
 import java.util.Comparator
 
 import graft.search.SearchEngine
-import graft.serve.Tools
-import graft.serve.Tools.Project
 import graft.streaming.WatchStream
 import graft.streaming.WatchStream.FileEvent
 
@@ -25,20 +23,9 @@ class ApplyFileCountSpec extends SparkSpec {
   test("six edit batches do not grow any table's file count") {
     val dir = Files.createTempDirectory("apply-files")
     try {
-      val from = Paths.get(sampleRepo)
-      val repo = dir.resolve("repo")
-      Files.walk(from).forEach { f =>
-        val t = repo.resolve(from.relativize(f).toString)
-        if (Files.isDirectory(f)) Files.createDirectories(t) else Files.copy(f, t)
-        ()
-      }
-      val p = Project(spark, repo.toString,
-        chunksPath = dir.resolve("chunks").toString,
-        vectorsPath = dir.resolve("vectors").toString,
-        kgPath = Some(dir.resolve("kg").toString))
+      val p = indexedSampleCopy(dir)
+      val repo = Paths.get(p.root)
       val engine = new SearchEngine(spark)
-      engine.indexRepo(p.root, p.chunksPath, p.vectorsPath)
-      Tools.dispatch(p, "kg_build", Map.empty).fold(e => fail(e), identity)
       val tables = Seq(p.chunksPath, p.vectorsPath,
         s"${p.kgPath.get}/vertices", s"${p.kgPath.get}/edges")
       val built = tables.map(parquetFiles)

@@ -33,7 +33,7 @@ class PipelineStagesSpec extends SparkSpec {
 
   test("rerank proxy lifts exact-token matches") {
     val results = engine.vectorSearch(vectors, "parse file", 10, Some(0.0))
-    val reranked = engine.rerankProxy(results, "parse file", "similarity_score", 5)
+    val reranked = engine.rerankProxy(results, "parse file", 5)
     val top = reranked.orderBy(col("rank")).select("name").as[String].collect()
     assert(top.nonEmpty)
     assert(reranked.count() <= 5)

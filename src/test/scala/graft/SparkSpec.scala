@@ -1,7 +1,13 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.search.SearchEngine
+import graft.serve.Tools
+import graft.serve.Tools.Project
 
 /** Shared session: one per JVM, REBUILT if a prior suite's context died.
   *
@@ -30,6 +36,27 @@ trait SparkSpec extends AnyFunSuite {
     */
   def sampleRepo: String =
     new java.io.File("src/test/resources/sample_repo").getAbsolutePath
+
+  /** A copy of [[sampleRepo]] at `dir/repo`, indexed into `dir/chunks`
+    * and `dir/vectors`, with its knowledge graph built by `kg_build` at
+    * `dir/kg`: a spec may edit the tree and its index freely.
+    */
+  def indexedSampleCopy(dir: Path): Project = {
+    val from = Paths.get(sampleRepo)
+    val repo = dir.resolve("repo")
+    Files.walk(from).forEach { f =>
+      val t = repo.resolve(from.relativize(f).toString)
+      if (Files.isDirectory(f)) Files.createDirectories(t) else Files.copy(f, t)
+      ()
+    }
+    val p = Project(spark, repo.toString,
+      chunksPath = dir.resolve("chunks").toString,
+      vectorsPath = dir.resolve("vectors").toString,
+      kgPath = Some(dir.resolve("kg").toString))
+    new SearchEngine(spark).indexRepo(p.root, p.chunksPath, p.vectorsPath)
+    Tools.dispatch(p, "kg_build", Map.empty).fold(e => fail(e), identity)
+    p
+  }
 }
 
 object SparkSpec {

@@ -15,7 +15,7 @@ class StatsSpec extends SparkSpec {
   }
 
   test("index stats aggregate counts and histograms") {
-    val s = Stats.indexStats(spark, chunks, vectors)
+    val s = Stats.indexStats(chunks, vectors)
     assert(s.total_chunks == chunks.count())
     assert(s.total_files == 3)
     assert(s.embedded_chunks == s.total_chunks && s.unembedded_chunks == 0)
