@@ -546,9 +546,8 @@ object Stress {
       .filter(pmod(hash(col("file_path")), lit(100)) === 0)
       .withColumn("name", concat(col("name"), lit("_v2")))
       .withColumn("hierarchy_path", concat(col("hierarchy_path"), lit("_v2")))
-    val empty = spark.range(0).select(lit("").as("file_path"))
     val (tDiff, _) = timed {
-      val updated = Kg.differentialUpdate(kg, rechunked.localCheckpoint(), empty)
+      val updated = Kg.differentialUpdate(kg, rechunked, Nil)
       updated.vertices.count() + updated.edges.count()
     }
     kg.vertices.unpersist()

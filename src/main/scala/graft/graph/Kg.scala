@@ -1,5 +1,7 @@
 package graft.graph
 
+import java.util.regex.Pattern
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -21,148 +23,142 @@ object Kg {
 
   final case class KgTables(vertices: DataFrame, edges: DataFrame)
 
-  /** Build entity/file/module vertices + CONTAINS/CALLS/IMPORTS/INHERITS
-    * edges from a chunks table (`core/kg_builder.py:949-1236` semantics:
-    * name-resolved via a global entity-name map, self-references dropped).
+  /** A vertex row of the code graph. */
+  final case class Vertex(id: String, label: String, name: String,
+      file_path: String, parent_name: String)
+
+  /** An edge key; every code-graph edge has weight 1.0. */
+  final case class Edge(src: String, dst: String, rel_type: String)
+
+  /** A CALLS or INHERITS edge from `src` to every entity named
+    * `target_name`, once names are resolved.
+    */
+  final case class NameRef(src: String, target_name: String, rel_type: String)
+
+  /** What one chunk contributes to the code graph. */
+  final case class ChunkKg(vertices: Seq[Vertex], edges: Seq[Edge],
+      refs: Seq[NameRef])
+
+  /** The chunk types that become entity vertices. */
+  private val EntityLabels: Seq[String] = Seq("function", "class", "method")
+
+  private val FileName = Pattern.compile("([^/]+)$")
+  private val TagList = Pattern.compile("(?m)^tags:\\s*\\[([^\\]]*)\\]")
+  private val Comma = UTF8String.fromString(",")
+
+  /** `regexp_extract(s, p, 1)`: null for null, "" without a match. */
+  private def extract(p: Pattern, s: String): String =
+    if (s == null) null
+    else {
+      val m = p.matcher(s)
+      if (m.find()) Option(m.group(1)).getOrElse("") else ""
+    }
+
+  /** `concat(file, "::", path)`: null if either is null. */
+  private def qualified(file: String, path: String): String =
+    if (file == null || path == null) null else s"$file::$path"
+
+  /** The code-graph rules for one chunk (`core/kg_builder.py:949-1236`,
+    * frontmatter tags `kg_builder.py:2609-2640`), in the semantics of
+    * the Spark expressions they replace: `regexp_extract` gives "" on no
+    * match, `split` keeps trailing empty strings, `trim` strips ASCII
+    * spaces only, `explode` drops a null array but keeps null elements,
+    * `concat` with a null is null, and a null `parent_name` yields no
+    * CONTAINS edge.
     *
-    * `extraNames` widens the name-resolution map beyond the chunks being
-    * built — the differential rebuild passes the surviving entity
-    * vertices of the names the change uses, so a changed file's calls
-    * still resolve to entities in unchanged files (the reference's
-    * global prescan, `kg_builder.py:1237-1268`, plays the same role).
+    * Vertices: an entity (function/class/method chunks, id
+    * `file::hierarchy_path`), the chunk's file, one module per import
+    * and one tag per frontmatter tag. Edges: file or class -CONTAINS->
+    * entity, file -IMPORTS-> module, file -HAS_TAG-> tag. The entity's
+    * calls (and a class's bases) are name references that
+    * [[fromChunks]] and [[differentialUpdate]] resolve against the
+    * entity names they know; a reference that cannot resolve (no
+    * source id, no target) is left out. `content` is read only for a
+    * `<frontmatter>` chunk.
     */
-  def fromChunks(chunks: DataFrame,
-      extraNames: Option[DataFrame] = None): KgTables = {
-    val entities = chunks
-      .filter(col("chunk_type").isin("function", "class", "method"))
-      .select(
-        concat(col("file_path"), lit("::"), col("hierarchy_path")).as("id"),
-        col("chunk_type").as("label"),
-        col("name"), col("file_path"), col("parent_name"))
-    val files = chunks
-      .select(col("file_path").as("id"), lit("file").as("label"),
-        regexp_extract(col("file_path"), "([^/]+)$", 1).as("name"),
-        col("file_path"), lit("").as("parent_name"))
-    val modules = chunks
-      .select(explode(col("imports")).as("m"))
-      .select(col("m").as("id"), lit("module").as("label"),
-        col("m").as("name"), lit("").as("file_path"), lit("").as("parent_name"))
+  def chunkKg(filePath: String, chunkType: String, name: String,
+      hierarchyPath: String, parentName: String, calls: Seq[String],
+      imports: Seq[String], inheritsFrom: Seq[String],
+      content: String): ChunkKg = {
+    def all(xs: Seq[String]) = Option(xs).getOrElse(Nil)
+    val entity = EntityLabels.contains(chunkType)
+    val id = qualified(filePath, hierarchyPath)
+    val modules = all(imports)
+    val tags =
+      if (name != "<frontmatter>" || content == null) Nil
+      else UTF8String.fromString(extract(TagList, content)).split(Comma, -1)
+        .toSeq.map(_.trim.toString).filter(_.nonEmpty)
+    val contains =
+      if (!entity || parentName == null) Nil
+      else if (parentName.isEmpty) Seq(Edge(filePath, id, "CONTAINS"))
+      else Seq(Edge(qualified(filePath, parentName), id, "CONTAINS"))
+    def refs(targets: Seq[String], rel: String) =
+      if (id == null) Nil
+      else targets.filter(_ != null).map(NameRef(id, _, rel))
+    ChunkKg(
+      (if (entity) Seq(Vertex(id, chunkType, name, filePath, parentName)) else Nil) ++
+        (Vertex(filePath, "file", extract(FileName, filePath), filePath, "") +:
+          modules.map(m => Vertex(m, "module", m, "", ""))) ++
+        tags.map(t => Vertex(t, "tag", t, "", "")),
+      contains ++ modules.map(Edge(filePath, _, "IMPORTS")) ++
+        tags.map(Edge(filePath, _, "HAS_TAG")),
+      if (!entity) Nil
+      else refs(all(calls), "CALLS") ++
+        (if (chunkType == "class") refs(all(inheritsFrom), "INHERITS") else Nil))
+  }
 
-    // file -CONTAINS-> top-level entity; class -CONTAINS-> method
-    val containsFile = entities.filter(col("parent_name") === "")
-      .select(col("file_path").as("src"), col("id").as("dst"),
-        lit("CONTAINS").as("rel_type"))
-    val containsClass = entities.filter(col("parent_name") =!= "")
-      .select(
-        concat(col("file_path"), lit("::"), col("parent_name")).as("src"),
-        col("id").as("dst"), lit("CONTAINS").as("rel_type"))
+  /** The chunk columns [[chunkKg]] reads, in its parameter order;
+    * content only for a `<frontmatter>` chunk.
+    */
+  private val kgFields: Seq[Column] = Seq(col("file_path"), col("chunk_type"),
+    col("name"), col("hierarchy_path"), col("parent_name"), col("calls"),
+    col("imports"), col("inherits_from"),
+    when(col("name") === "<frontmatter>", col("content")).as("content"))
 
-    // name-resolution map (global prescan, `kg_builder.py:1237-1268`)
-    val localNames = entities.select(col("name").as("target_name"), col("id").as("dst"))
-    val byName = extraNames
-      .map(x => localNames.unionByName(
-        x.select(col("name").as("target_name"), col("id").as("dst"))))
-      .getOrElse(localNames)
+  // nondeterministic only so that Catalyst calls it once per row: it
+  // would otherwise copy the call into the non-empty filter it infers
+  // for each explode of its fields (measured: three calls per branch)
+  private val chunkKgUdf = udf(chunkKg _).asNondeterministic()
+    .withName("graft_kg_chunk")
 
-    val calls = chunks
-      .filter(col("chunk_type").isin("function", "class", "method"))
-      .select(
-        concat(col("file_path"), lit("::"), col("hierarchy_path")).as("src"),
-        explode(col("calls")).as("target_name"))
-      .join(byName, Seq("target_name"))
+  /** Build entity/file/module/tag vertices + CONTAINS/CALLS/IMPORTS/
+    * INHERITS/HAS_TAG edges from a chunks table: [[chunkKg]] per chunk
+    * as one UDF, then its name references resolved through a global
+    * entity-name map (the reference's prescan, `kg_builder.py:1237-1268`)
+    * with self-references dropped, and one dedup per output table:
+    * repeated files, modules, imports, tags and resolved names collapse
+    * there.
+    */
+  def fromChunks(chunks: DataFrame): KgTables = {
+    val parts = chunks.select(chunkKgUdf(kgFields: _*).as("kg"))
+    def rows(field: String) =
+      parts.select(explode(col(s"kg.$field")).as("r")).select("r.*")
+    val vertices = rows("vertices")
+    val byName = vertices.filter(col("label").isin(EntityLabels: _*))
+      .select(col("name").as("target_name"), col("id").as("dst"))
+    val resolved = rows("refs").join(byName, Seq("target_name"))
       .filter(col("src") =!= col("dst"))
-      .select(col("src"), col("dst"), lit("CALLS").as("rel_type"))
-
-    val imports = chunks
-      .select(col("file_path").as("src"), explode(col("imports")).as("dst"),
-        lit("IMPORTS").as("rel_type"))
-
-    val inherits = chunks
-      .filter(col("chunk_type") === "class")
-      .select(
-        concat(col("file_path"), lit("::"), col("hierarchy_path")).as("src"),
-        explode(col("inherits_from")).as("target_name"))
-      .join(byName, Seq("target_name"))
-      .filter(col("src") =!= col("dst"))
-      .select(col("src"), col("dst"), lit("INHERITS").as("rel_type"))
-
-    // frontmatter tags (kg_builder.py:2609-2640): `tags: [a, b]` in a
-    // markdown <frontmatter> chunk → Tag vertices + file -HAS_TAG-> tag
-    val tagEdges = chunks
-      .filter(col("name") === "<frontmatter>")
-      .select(col("file_path").as("src"),
-        explode(split(regexp_extract(col("content"),
-          "(?m)^tags:\\s*\\[([^\\]]*)\\]", 1), ",")).as("dst"))
-      .select(col("src"), trim(col("dst")).as("dst"),
-        lit("HAS_TAG").as("rel_type"))
-      .filter(col("dst") =!= "")
-    val tagVertices = tagEdges
-      .select(col("dst").as("id"), lit("tag").as("label"),
-        col("dst").as("name"), lit("").as("file_path"), lit("").as("parent_name"))
-
-    // one dedup per output table: repeated files, modules, imports,
-    // tags and resolved names collapse here
-    val edges = containsFile.unionByName(containsClass).unionByName(calls)
-      .unionByName(imports).unionByName(inherits).unionByName(tagEdges)
-      .withColumn("weight", lit(1.0))
-      .dropDuplicates("src", "dst", "rel_type")
-    KgTables(entities.unionByName(files).unionByName(modules)
-      .unionByName(tagVertices).dropDuplicates("id"), edges)
+      .select(col("src"), col("dst"), col("rel_type"))
+    KgTables(vertices.dropDuplicates("id"),
+      rows("edges").unionByName(resolved)
+        .withColumn("weight", lit(1.0))
+        .dropDuplicates("src", "dst", "rel_type"))
   }
-
-  /** Hash-based change detection (`kg_builder.py` `_get_changed_files`,
-    * issue #108 semantics): full-outer join current vs stored
-    * (file_path, content_hash) → (file_path, status) with status in
-    * {changed, new, deleted}; unchanged files drop out. An empty/missing
-    * stored side classifies every current file as new, mirroring the
-    * no-prior-metadata case.
-    */
-  def changedFileSets(current: DataFrame, stored: DataFrame): DataFrame = {
-    val c = current.select(col("file_path"), col("content_hash").as("cur_h"))
-    val s = stored.select(col("file_path"), col("content_hash").as("old_h"))
-    c.join(s, Seq("file_path"), "full_outer")
-      .withColumn("status",
-        when(col("old_h").isNull, "new")
-          .when(col("cur_h").isNull, "deleted")
-          .when(col("cur_h") =!= col("old_h"), "changed"))
-      .filter(col("status").isNotNull)
-      .select(col("file_path"), col("status"))
-  }
-
-  /** Remove every vertex belonging to `files` plus all edges touching a
-    * removed vertex (`knowledge_graph.py` `delete_entities_for_files`,
-    * which Kuzu-DETACH-deletes nodes by file_path). Module/tag vertices
-    * carry no file_path and survive; an empty or non-matching file set
-    * is a no-op. The file set and the removed ids are collected (both
-    * the size of the change), so each table is one filtered scan.
-    */
-  def deleteEntitiesForFiles(kg: KgTables, files: DataFrame): KgTables = {
-    import files.sparkSession.implicits._
-    without(kg, files.select(col("file_path")).as[String].collect())
-  }
-
-  private def without(kg: KgTables, files: Seq[String]): KgTables = {
-    import kg.vertices.sparkSession.implicits._
-    val removed = kg.vertices
-      .filter(col("file_path") =!= "" && in(col("file_path"), files))
-      .select(col("id")).as[String].collect()
-    KgTables(kg.vertices.filter(!in(col("id"), removed)),
-      kg.edges.filter(!in(col("src"), removed) && !in(col("dst"), removed)))
-  }
-
-  /** `c IN xs`, false rather than null for a null `c`. */
-  private def in(c: Column, xs: Seq[String]): Column =
-    coalesce(c.isin(xs.distinct: _*), lit(false))
 
   /** Differential (incremental) KG rebuild (issue #108 /
-    * `test_differential_kg.py`): delete the vertices+edges of changed
-    * and deleted files, rebuild only the re-chunked files' subgraph —
-    * resolving its names against the surviving entities of those names
-    * — and merge. The delta is derived once and materialized; each
-    * result table then reads only its own stored table: the surviving
-    * rows minus the delta's keys (a broadcast anti-join), plus the
-    * delta. A caller may therefore overwrite one table before writing
-    * the other.
+    * `test_differential_kg.py`): delete the vertices and edges of
+    * changed and deleted files, rebuild only the re-chunked files'
+    * subgraph, resolving its names against the surviving entities of
+    * those names, and merge.
+    *
+    * The delta is derived on the driver: one collect of the change's
+    * rows (the change is change-sized) runs the same [[chunkKg]] rules
+    * as [[fromChunks]], and one scan of the stored vertices returns the
+    * ids of the touched files' vertices and the stored entities whose
+    * names the change references. Each result table is its stored rows,
+    * filtered by a literal key set, unioned with a local relation: no
+    * job until it is read, and neither reads the other table's path, so
+    * a caller may overwrite one table before writing the other.
     *
     * Precondition: the stored vertex ids and (src, dst, rel_type) edge
     * keys are unique, as [[fromChunks]] and this function write them.
@@ -173,30 +169,52 @@ object Kg {
     * `fromChunks` rebuild reconciles, exactly as the reference's full
     * rebuild does.
     *
-    * @param rechunked chunk rows for changed+new files only, already
-    *                  materialized (e.g. a `localCheckpoint`): they are
-    *                  read twice, and an object-typed plan (a `flatMap`
-    *                  over `Chunker.chunkFile`) must not reach the merge
+    * @param rechunked chunk rows for changed and new files only
     * @param deleted   file paths that disappeared
     */
   def differentialUpdate(kg: KgTables, rechunked: DataFrame,
-      deleted: DataFrame): KgTables = {
-    import rechunked.sparkSession.implicits._
-    val change = rechunked.select(col("file_path"), col("calls"), col("inherits_from"))
-      .as[(String, Seq[String], Seq[String])].collect()
-    val names = change.flatMap(c => Option(c._2).toSeq.flatten ++ Option(c._3).toSeq.flatten)
-    val survivors = without(kg,
-      change.map(_._1) ++ deleted.select(col("file_path")).as[String].collect())
-    val delta = fromChunks(rechunked, Some(survivors.vertices.filter(
-      col("label").isin("function", "class", "method") && in(col("name"), names))))
-    def merge(stored: DataFrame, fresh: DataFrame, keys: String*): DataFrame = {
-      val freshKeys = broadcast(fresh.select(keys.map(k => col(k).as(s"delta_$k")): _*))
-      stored.join(freshKeys,
-          keys.map(k => col(k) <=> col(s"delta_$k")).reduce(_ && _), "left_anti")
-        .unionByName(fresh)
-    }
-    KgTables(merge(survivors.vertices, delta.vertices.localCheckpoint(), "id"),
-      merge(survivors.edges, delta.edges.localCheckpoint(), "src", "dst", "rel_type"))
+      deleted: Seq[String]): KgTables = {
+    val spark = rechunked.sparkSession
+    import spark.implicits._
+    val change = rechunked.select(kgFields: _*).as[(String, String, String,
+      String, String, Seq[String], Seq[String], Seq[String], String)].collect().toSeq
+    val parts = change.map((chunkKg _).tupled)
+    val files = (change.map(_._1) ++ deleted).filter(f => f != null && f.nonEmpty)
+      .distinct
+    val names = parts.flatMap(_.refs.map(_.target_name)).distinct
+    val stored = kg.vertices
+      .filter(col("file_path").isin(files: _*) ||
+        (col("label").isin(EntityLabels: _*) && col("name").isin(names: _*)))
+      .select("id", "name", "file_path").as[(String, String, String)].collect()
+    val touched = files.toSet
+    // as `IN` matches it: a null id is never removed
+    val removed = stored.collect { case (id, _, f) if touched(f) && id != null => id }
+      .toSet
+    val survivors = stored.toSeq.filter { case (id, _, f) => !touched(f) && !removed(id) }
+    val byName = (parts.flatMap(_.vertices).filter(v => EntityLabels.contains(v.label))
+      .map(v => v.name -> v.id) ++ survivors.map { case (id, n, _) => n -> id })
+      .groupMap(_._1)(_._2)
+    val resolved = parts.flatMap(_.refs).flatMap(r =>
+      byName.getOrElse(r.target_name, Nil).filter(d => d != null && d != r.src)
+        .map(Edge(r.src, _, r.rel_type)))
+    val vertices = parts.flatMap(_.vertices).distinctBy(_.id)
+    val edges = (parts.flatMap(_.edges) ++ resolved).distinct
+    // an edge key matches as `<=>` does: a struct comparison takes two
+    // null fields as equal; only edges from a delta source are compared
+    val edgeKey = array_contains(typedLit(edges.map(e => (e.src, e.dst, e.rel_type))),
+      struct(col("src").as("_1"), col("dst").as("_2"), col("rel_type").as("_3")))
+    KgTables(
+      kg.vertices.filter(!in(col("id"), removed.toSeq ++ vertices.map(_.id)))
+        .unionByName(vertices.toDF()),
+      kg.edges.filter(!in(col("src"), removed.toSeq) && !in(col("dst"), removed.toSeq) &&
+          !(in(col("src"), edges.map(_.src)) && edgeKey))
+        .unionByName(edges.toDF().withColumn("weight", lit(1.0))))
+  }
+
+  /** `c <=> x` for some x in `xs`, as a literal set: no job. */
+  private def in(c: Column, xs: Seq[String]): Column = {
+    val set = coalesce(c.isin(xs.filter(_ != null).distinct: _*), lit(false))
+    if (xs.contains(null)) set || c.isNull else set
   }
 
   /** Multi-tag AND filter (`knowledge_graph.py:3104-3124`): nodes that
@@ -704,8 +722,8 @@ object Kg {
   /** kg_query entity lookup (`mcp/tool_schemas.py:700-772`): entities
     * related to `entityName`, optionally filtered to one of the 8
     * directional relationship keywords; no filter = 1-hop in either
-    * direction. The seed id set is tiny → broadcast; one pass over the
-    * edge relation.
+    * direction. The seed and neighbour id sets are tiny → broadcast;
+    * one pass over the edge relation and one over the vertices.
     */
   def related(kg: KgTables, entityName: String,
       relationship: Option[String] = None, limit: Int = 25): DataFrame = {
@@ -723,8 +741,7 @@ object Kg {
             .select(e("src").as("id"))
       case None => oneHop(kg.edges, ids)
     }
-    neighborIds.distinct()
-      .join(kg.vertices, Seq("id"))
+    kg.vertices.join(broadcast(neighborIds.distinct()), Seq("id"))
       .select(col("id"), col("name"), col("label"))
       .orderBy(col("name"), col("id"))
       .limit(limit)

@@ -25,7 +25,7 @@ import graft.ingest.FileDiscovery
   * new rows cost work the size of the change, but the write still
   * rewrites each touched table in FULL through a staging swap
   * ([[overwriteSafe]]); rewriting only the file buckets a change
-  * touches is ROADMAP direction 1.
+  * touches is ROADMAP direction 4.
   */
 object IndexStore {
 
@@ -243,7 +243,8 @@ object IndexStore {
     // — Catalyst can push a Project into the object pipeline there and
     // fail serialization (seen as INTERNAL_ERROR 'object' writer on the
     // KG union path). Lazy: the chunks write below materializes the
-    // (change-sized) rows, and the vectors and KG plans read them back
+    // (change-sized) rows, and the vectors write and the KG collect read
+    // them back
     val fresh = newChunks.localCheckpoint(eager = false)
     val moved = moves.toDF("old_path", "new_path")
     def rewrite(path: String, table: DataFrame, rows: DataFrame): Unit =
@@ -266,12 +267,11 @@ object IndexStore {
       val dests = moves.map(_._2).filter(p => new java.io.File(p).isFile)
       val rechunked = if (dests.isEmpty) fresh else fresh.unionByName(
         FileDiscovery.readFiles(spark, dests).flatMap(Chunker.chunkFile _)
-          .toDF().localCheckpoint(eager = true), allowMissingColumns = true)
-      // the update's delta is materialized, so neither write plan reads
-      // the other table's path: the vertices swap cannot pull files
-      // from under the edges write
-      val updated = Kg.differentialUpdate(kg, rechunked,
-        (replaced ++ moves.map(_._1)).toDF("file_path"))
+          .toDF(), allowMissingColumns = true)
+      // the update's delta is local, so neither write plan reads the
+      // other table's path: the vertices swap cannot pull files from
+      // under the edges write
+      val updated = Kg.differentialUpdate(kg, rechunked, replaced ++ moves.map(_._1))
       rewrite(s"$kp/vertices", kg.vertices, updated.vertices)
       rewrite(s"$kp/edges", kg.edges, updated.edges)
     }

@@ -456,9 +456,8 @@ object GraphPack {
           kg0raw.vertices.localCheckpoint(true),
           kg0raw.edges.localCheckpoint(true))
       }
-      val updated = Kg.differentialUpdate(kg0,
-        changed.unionByName(added).localCheckpoint(),
-        Seq("src/f2.py").toDF("file_path"))
+      val updated = Kg.differentialUpdate(kg0, changed.unionByName(added),
+        Seq("src/f2.py"))
       updated.vertices
         .select(lit("V").as("kind"), col("id").as("a"),
           col("label").as("b"), col("name").as("c"))

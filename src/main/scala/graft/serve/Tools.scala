@@ -67,7 +67,7 @@ object Tools {
   private def vectors(p: Project): DataFrame =
     IndexStore.read(p.spark, p.vectorsPath)
 
-  /** One table of the built KG; each read infers its schema in a job. */
+  /** One table of the built KG, read with its footer schema (no job). */
   private def kgTable(p: Project, name: String): Either[String, DataFrame] =
     p.kgPath.map(kp => IndexStore.read(p.spark, s"$kp/$name"))
       .toRight("knowledge graph not built: run kg_build first")

@@ -9,10 +9,11 @@ import graft.core.FileRecord
 import graft.graph.Kg
 
 /** Differential (incremental) KG rebuild — mirrors the reference's
-  * `tests/unit/core/test_differential_kg.py` (issue #108): hash-based
-  * change detection (`_get_changed_files`), entity deletion by file set
-  * (`delete_entities_for_files`), and the end-to-end add/modify/delete
-  * update, including the streaming `applyBatch` wiring.
+  * `tests/unit/core/test_differential_kg.py` (issue #108): the
+  * add/modify/delete update, entity deletion by file set
+  * (`delete_entities_for_files`) included, and the streaming
+  * `applyBatch` wiring. Change detection is `IndexStore.changedFiles`,
+  * specified with the index.
   */
 class DifferentialKgSpec extends SparkSpec {
   import spark.implicits._
@@ -36,59 +37,6 @@ class DifferentialKgSpec extends SparkSpec {
       |    return func_a()
       |""".stripMargin
 
-  private def hashesDf(rows: (String, String)*) =
-    rows.toDF("file_path", "content_hash")
-
-  // ---- _get_changed_files semantics --------------------------------------
-
-  test("changedFileSets: no prior metadata → every current file is new") {
-    val out = Kg.changedFileSets(
-      hashesDf("src/a.py" -> "aaaa", "src/b.py" -> "bbbb"),
-      hashesDf().limit(0))
-      .as[(String, String)].collect().toSet
-    assert(out == Set("src/a.py" -> "new", "src/b.py" -> "new"))
-  }
-
-  test("changedFileSets: identical hashes → empty") {
-    val h = hashesDf("src/a.py" -> "aaaa", "src/b.py" -> "bbbb")
-    assert(Kg.changedFileSets(h, h).count() == 0)
-  }
-
-  test("changedFileSets: changed / new / deleted classified per file") {
-    val stored = hashesDf(
-      "src/a.py" -> "aaaa", "src/b.py" -> "bbbb", "src/c.py" -> "cccc")
-    val current = hashesDf(
-      "src/a.py" -> "aaaa", "src/b.py" -> "xxxx", "src/d.py" -> "dddd")
-    val out = Kg.changedFileSets(current, stored)
-      .as[(String, String)].collect().toSet
-    assert(out == Set(
-      "src/b.py" -> "changed", "src/c.py" -> "deleted", "src/d.py" -> "new"))
-  }
-
-  // ---- delete_entities_for_files -----------------------------------------
-
-  test("deleteEntitiesForFiles removes the file's nodes and touching edges") {
-    val kg = Kg.fromChunks(chunksOf("src/a.py" -> srcA, "src/b.py" -> srcB))
-    assert(kg.edges.filter(col("rel_type") === "CALLS" &&
-      col("src") === "src/b.py::func_b").count() == 1)
-
-    val after = Kg.deleteEntitiesForFiles(kg, Seq("src/a.py").toDF("file_path"))
-    assert(after.vertices.filter(col("file_path") === "src/a.py").count() == 0)
-    // the CALLS edge from surviving func_b pointed at a removed entity → gone
-    assert(after.edges.filter(col("rel_type") === "CALLS").count() == 0)
-    assert(after.vertices.filter(col("id") === "src/b.py::func_b").count() == 1)
-  }
-
-  test("deleteEntitiesForFiles: empty and non-matching file sets are no-ops") {
-    val kg = Kg.fromChunks(chunksOf("src/a.py" -> srcA, "src/b.py" -> srcB))
-    val (v0, e0) = (kg.vertices.count(), kg.edges.count())
-    val afterEmpty = Kg.deleteEntitiesForFiles(kg, Seq.empty[String].toDF("file_path"))
-    assert(afterEmpty.vertices.count() == v0 && afterEmpty.edges.count() == e0)
-    val afterMiss = Kg.deleteEntitiesForFiles(kg,
-      Seq("nonexistent/file.py").toDF("file_path"))
-    assert(afterMiss.vertices.count() == v0 && afterMiss.edges.count() == e0)
-  }
-
   // ---- differentialUpdate -------------------------------------------------
 
   test("modify: changed file re-chunks and its calls resolve to survivors") {
@@ -98,7 +46,7 @@ class DifferentialKgSpec extends SparkSpec {
         |    return func_b()
         |""".stripMargin
     val updated = Kg.differentialUpdate(kg,
-      chunksOf("src/a.py" -> srcA2), Seq.empty[String].toDF("file_path"))
+      chunksOf("src/a.py" -> srcA2), Nil)
 
     // helper disappeared with the old version of a.py
     assert(updated.vertices.filter(col("id") === "src/a.py::helper").count() == 0)
@@ -121,13 +69,37 @@ class DifferentialKgSpec extends SparkSpec {
         |    return func_a()
         |""".stripMargin
     val updated = Kg.differentialUpdate(kg,
-      chunksOf("src/c.py" -> srcC), Seq("src/b.py").toDF("file_path"))
+      chunksOf("src/c.py" -> srcC), Seq("src/b.py"))
 
     assert(updated.vertices.filter(col("file_path") === "src/b.py").count() == 0)
     assert(updated.edges.filter(col("src").startsWith("src/b.py")).count() == 0)
     assert(updated.edges.filter(col("rel_type") === "CALLS" &&
       col("src") === "src/c.py::func_c" &&
       col("dst") === "src/a.py::func_a").count() == 1)
+  }
+
+  test("empty and non-matching deleted sets with no new rows are no-ops") {
+    val kg = Kg.fromChunks(chunksOf("src/a.py" -> srcA, "src/b.py" -> srcB))
+    def rows(t: Kg.KgTables) = (t.vertices.collect().toSet, t.edges.collect().toSet)
+    val before = rows(kg)
+    val none = chunksOf()
+    assert(rows(Kg.differentialUpdate(kg, none, Nil)) == before)
+    assert(rows(Kg.differentialUpdate(kg, none, Seq("nonexistent/file.py"))) == before)
+  }
+
+  test("null keys merge as <=> compares them") {
+    import graft.KgDeltaPropertySpec.Chunk
+    // a null import makes a null-id module and a null IMPORTS target; a
+    // chunk with no path makes a null-id file and null edge sources
+    val loose = Seq(
+      Chunk("src/a.py", "function", "f", "f", "", Nil, Seq("m", null), Nil, ""),
+      Chunk(null, "code", "x", "x", "", Nil, Seq("m"), Nil, "")).toDF()
+    val kg = Kg.fromChunks(loose)
+    def keys(t: Kg.KgTables) = (
+      t.vertices.select("id").collect().map(_.toString).sorted.toSeq,
+      t.edges.select("src", "dst", "rel_type").collect().map(_.toString).sorted.toSeq)
+    assert(keys(kg)._1.contains("[null]") && keys(kg)._2.contains("[null,m,IMPORTS]"))
+    assert(keys(Kg.differentialUpdate(kg, loose, Nil)) == keys(kg))
   }
 
   test("drift-free delta matches a full rebuild") {
@@ -140,7 +112,7 @@ class DifferentialKgSpec extends SparkSpec {
         |    return helper()
         |""".stripMargin
     val diff = Kg.differentialUpdate(kg,
-      chunksOf("src/c.py" -> srcC), Seq.empty[String].toDF("file_path"))
+      chunksOf("src/c.py" -> srcC), Nil)
     val full = Kg.fromChunks(
       chunksOf("src/a.py" -> srcA, "src/b.py" -> srcB, "src/c.py" -> srcC))
     assert(diff.vertices.select("id").as[String].collect().toSet ==

@@ -18,7 +18,8 @@ import graft.KgDeltaPropertySpec.Chunk
   * re-created. An anchor file that no batch touches imports every module
   * and carries every tag, so module and tag vertices never go stale.
   * After each batch the two graphs must be equal as row sets, with
-  * unique vertex ids and edge keys.
+  * unique vertex ids and edge keys, and the full build must equal the
+  * relational reference build (`ParitySpec.relationalKg`).
   */
 class KgDeltaPropertySpec extends SparkSpec {
   import spark.implicits._
@@ -107,16 +108,20 @@ class KgDeltaPropertySpec extends SparkSpec {
         val rechunked = touched.toSeq.flatMap(p => next.getOrElse(p, Nil))
         val gone = touched.filterNot(next.contains).toSeq
         val updated = Kg.differentialUpdate(kg, rechunked.toDF(),
-          (gone ++ touched.filter(next.contains)).toDF("file_path"))
+          gone ++ touched.filter(next.contains))
         kg = Kg.KgTables(updated.vertices.localCheckpoint(),
           updated.edges.localCheckpoint())
         files = next
-        val full = Kg.fromChunks(files.values.flatten.toSeq.toDF())
+        val finalChunks = files.values.flatten.toSeq.toDF()
+        val full = Kg.fromChunks(finalChunks)
+        val ref = ParitySpec.relationalKg(finalChunks)
         val clue = s"round $round batch $batch touched ${touched.toSeq.sorted}"
         assert(unique(kg.vertices, "id"), clue)
         assert(unique(kg.edges, "src", "dst", "rel_type"), clue)
         assert(rows(kg.vertices) == rows(full.vertices), clue)
         assert(rows(kg.edges) == rows(full.edges), clue)
+        assert(rows(full.vertices) == rows(ref.vertices), clue)
+        assert(rows(full.edges) == rows(ref.edges), clue)
       }
     }
   }

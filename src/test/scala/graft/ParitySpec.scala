@@ -4,7 +4,10 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.{PortableHash, VectorFunctions}
+import graft.graph.Kg
+import graft.search.SearchEngine
 import graft.text.TextFunctions
+import graft.KgDeltaPropertySpec.Chunk
 
 /** Bit-parity contracts that the oracle checks depend on. */
 class ParitySpec extends SparkSpec {
@@ -99,5 +102,120 @@ class ParitySpec extends SparkSpec {
     val fast = df.select(VectorFunctions.dotF(col("a"), col("b"))).collect().head
     val hof = df.select(VectorFunctions.dotFHof(col("a"), col("b"))).collect().head
     assert(fast.isNullAt(0) && hof.isNullAt(0))
+  }
+
+  private def rows(df: DataFrame): Set[org.apache.spark.sql.Row] = {
+    val cols = df.columns.sorted
+    df.select(cols.map(col): _*).collect().toSet
+  }
+
+  private def sameKg(chunks: DataFrame): Unit = {
+    val ref = ParitySpec.relationalKg(chunks)
+    val kg = Kg.fromChunks(chunks)
+    assert(rows(kg.vertices) == rows(ref.vertices))
+    assert(rows(kg.edges) == rows(ref.edges))
+  }
+
+  test("fromChunks matches the relational KG build on the sample repo") {
+    val chunks = new SearchEngine(spark).buildIndex(sampleRepo)._1
+    assert(Kg.fromChunks(chunks).edges.filter(col("rel_type") === "CALLS").count() > 0)
+    sameKg(chunks)
+  }
+
+  test("fromChunks matches the relational KG build on edge inputs") {
+    val chunks = Seq(
+      // null parent_name: an entity with neither CONTAINS edge
+      Chunk("src/a.py", "method", "run", "A.run", null, Seq("helper"), Nil, Nil, ""),
+      Chunk("src/a.py", "class", "A", "A", "", Seq("run"), Seq("os"), Seq("Base", null), ""),
+      Chunk("src/a.py", "function", "helper", "helper", "", Seq("helper", null), Nil, Nil, ""),
+      // a null calls array and a null import element
+      Chunk("src/b.py", "function", "b", "b", "", null, Seq("sys", null), null, ""),
+      Chunk("src/b.py", "class", "Base", "Base", "", Nil, null, Nil, ""),
+      // a path with no '/', and one ending in '/'
+      Chunk("README", "function", "top", "top", "", Seq("b", "A"), Nil, Nil, ""),
+      Chunk("dir/", "code", "x", "x", "", Seq("b"), Nil, Nil, ""),
+      // an empty tag between separators, trailing spaces, tab padding
+      Chunk("docs/a.md", "text", "<frontmatter>", "<frontmatter>", "", Nil, Nil, Nil,
+        "title: t\ntags: [a, , b ]\n"),
+      Chunk("docs/b.md", "text", "<frontmatter>", "<frontmatter>", "", Nil, Nil, Nil,
+        "tags: [\tc\t, d,]\nmore: x\n"),
+      Chunk("docs/c.md", "text", "<frontmatter>", "<frontmatter>", "", Nil, Nil, Nil,
+        "no tags here\n"),
+      Chunk("docs/d.md", "text", "<frontmatter>", "<frontmatter>", "", Nil, Nil, Nil, null),
+      Chunk("docs/e.md", "text", "notes", "notes", "", Nil, Nil, Nil, "tags: [e]\n"),
+      Chunk("src/c.py", null, null, null, "", Seq("b"), Nil, Nil, "")).toDF()
+    sameKg(chunks)
+    val tags = Kg.fromChunks(chunks).vertices.filter(col("label") === "tag")
+      .select("id").as[String].collect().toSet
+    assert(tags == Set("a", "b", "\tc\t", "d"))
+  }
+}
+
+object ParitySpec {
+
+  /** The relational KG build `Kg.fromChunks` ran before its per-chunk
+    * rules became one function, kept as the reference for it: one
+    * projection or explode per vertex and edge kind over the chunks,
+    * names resolved through the entity-name map, one dedup per table.
+    */
+  def relationalKg(chunks: DataFrame): Kg.KgTables = {
+    val entities = chunks
+      .filter(col("chunk_type").isin("function", "class", "method"))
+      .select(
+        concat(col("file_path"), lit("::"), col("hierarchy_path")).as("id"),
+        col("chunk_type").as("label"),
+        col("name"), col("file_path"), col("parent_name"))
+    val files = chunks
+      .select(col("file_path").as("id"), lit("file").as("label"),
+        regexp_extract(col("file_path"), "([^/]+)$", 1).as("name"),
+        col("file_path"), lit("").as("parent_name"))
+    val modules = chunks
+      .select(explode(col("imports")).as("m"))
+      .select(col("m").as("id"), lit("module").as("label"),
+        col("m").as("name"), lit("").as("file_path"), lit("").as("parent_name"))
+    val containsFile = entities.filter(col("parent_name") === "")
+      .select(col("file_path").as("src"), col("id").as("dst"),
+        lit("CONTAINS").as("rel_type"))
+    val containsClass = entities.filter(col("parent_name") =!= "")
+      .select(
+        concat(col("file_path"), lit("::"), col("parent_name")).as("src"),
+        col("id").as("dst"), lit("CONTAINS").as("rel_type"))
+    val byName = entities.select(col("name").as("target_name"), col("id").as("dst"))
+    val calls = chunks
+      .filter(col("chunk_type").isin("function", "class", "method"))
+      .select(
+        concat(col("file_path"), lit("::"), col("hierarchy_path")).as("src"),
+        explode(col("calls")).as("target_name"))
+      .join(byName, Seq("target_name"))
+      .filter(col("src") =!= col("dst"))
+      .select(col("src"), col("dst"), lit("CALLS").as("rel_type"))
+    val imports = chunks
+      .select(col("file_path").as("src"), explode(col("imports")).as("dst"),
+        lit("IMPORTS").as("rel_type"))
+    val inherits = chunks
+      .filter(col("chunk_type") === "class")
+      .select(
+        concat(col("file_path"), lit("::"), col("hierarchy_path")).as("src"),
+        explode(col("inherits_from")).as("target_name"))
+      .join(byName, Seq("target_name"))
+      .filter(col("src") =!= col("dst"))
+      .select(col("src"), col("dst"), lit("INHERITS").as("rel_type"))
+    val tagEdges = chunks
+      .filter(col("name") === "<frontmatter>")
+      .select(col("file_path").as("src"),
+        explode(split(regexp_extract(col("content"),
+          "(?m)^tags:\\s*\\[([^\\]]*)\\]", 1), ",")).as("dst"))
+      .select(col("src"), trim(col("dst")).as("dst"),
+        lit("HAS_TAG").as("rel_type"))
+      .filter(col("dst") =!= "")
+    val tagVertices = tagEdges
+      .select(col("dst").as("id"), lit("tag").as("label"),
+        col("dst").as("name"), lit("").as("file_path"), lit("").as("parent_name"))
+    val edges = containsFile.unionByName(containsClass).unionByName(calls)
+      .unionByName(imports).unionByName(inherits).unionByName(tagEdges)
+      .withColumn("weight", lit(1.0))
+      .dropDuplicates("src", "dst", "rel_type")
+    Kg.KgTables(entities.unionByName(files).unionByName(modules)
+      .unionByName(tagVertices).dropDuplicates("id"), edges)
   }
 }

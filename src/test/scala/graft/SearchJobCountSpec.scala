@@ -11,10 +11,14 @@ import org.apache.spark.sql.catalyst.optimizer.BuildRight
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions.{col, size}
 
+import graft.chunk.Chunker
+import graft.graph.Kg
 import graft.index.IndexStore
+import graft.ingest.FileDiscovery
 import graft.search.SearchEngine
 import graft.serve.Tools
 import graft.serve.Tools.Project
@@ -29,9 +33,10 @@ import graft.streaming.WatchStream
   * index table takes its schema from a Parquet footer on the driver,
   * with no schema-inference job. An edit batch through `applyBatch`
   * derives its new rows with work the size of the change: no
-  * corpus-wide shuffle, no KG delta derived twice, no job to debounce
-  * its events, and its chunk rows are checkpointed by the chunks write
-  * itself.
+  * corpus-wide shuffle, no job to debounce its events, and its chunk
+  * rows are checkpointed by the chunks write itself. Its KG delta comes
+  * from one collect of the change and one scan of the stored vertices,
+  * and merges into each KG table in that table's write.
   */
 class SearchJobCountSpec extends SparkSpec {
 
@@ -182,6 +187,18 @@ class SearchJobCountSpec extends SparkSpec {
     assert(n == 4)
   }
 
+  test("kg_query broadcasts the neighbour ids and streams the vertices scan") {
+    val (related, _) = toolJobs("kg_query", Map("entity_name" -> "parse_file"))
+    related.collect()
+    val plan = related.queryExecution.executedPlan
+    val top = Plans.collect(plan) { case j: BroadcastHashJoinExec => j }.head
+    assert(top.joinType == Inner && top.buildSide == BuildRight, plan)
+    assert(Plans.find(top.right)(_.isInstanceOf[HashAggregateExec]).nonEmpty, plan)
+    assert(Plans.find(top.left)(_.isInstanceOf[FileSourceScanExec]).nonEmpty, plan)
+    assert(Plans.find(top.left)(p =>
+      p.isInstanceOf[BroadcastHashJoinExec] || p.isInstanceOf[HashAggregateExec]).isEmpty, plan)
+  }
+
   test("applyBatch with the KG: a warm 2-file modify") {
     import spark.implicits._
     val p = indexedSampleCopy(Files.createTempDirectory("apply-jobs"))
@@ -199,6 +216,34 @@ class SearchJobCountSpec extends SparkSpec {
     assert(IndexStore.read(spark, s"${p.kgPath.get}/vertices")
       .filter(col("name") === "Fresh2").count() == 2)
     info(s"$n jobs")
-    assert(n <= 15, s"$n jobs")
+    assert(n <= 7, s"$n jobs")
+  }
+
+  test("differentialUpdate and both KG writes on a 2-file change") {
+    import spark.implicits._
+    val p = indexedSampleCopy(Files.createTempDirectory("kg-delta-jobs"))
+    val kp = p.kgPath.get
+    val edited = Seq("src/parser.py" -> "\nclass Fresh:\n    pass\n",
+      "src/search.js" -> "\nclass Fresh {}\n").map { case (f, c) =>
+        val path = Paths.get(p.root).resolve(f)
+        Files.writeString(path, Files.readString(path) + c)
+        path.toString
+      }
+    val rechunked = FileDiscovery.readFiles(spark, edited)
+      .flatMap(Chunker.chunkFile _).toDF()
+    def update(): Unit = {
+      val kg = Kg.KgTables(IndexStore.read(spark, s"$kp/vertices"),
+        IndexStore.read(spark, s"$kp/edges"))
+      val updated = Kg.differentialUpdate(kg, rechunked, Nil)
+      IndexStore.overwriteSafe(spark, updated.vertices, s"$kp/vertices")
+      IndexStore.overwriteSafe(spark, updated.edges, s"$kp/edges")
+    }
+    update() // warm
+    // the change collect, the vertex scan and one write per table
+    val n = jobs(update())
+    assert(IndexStore.read(spark, s"$kp/vertices")
+      .filter(col("name") === "Fresh").count() == 2)
+    info(s"$n jobs")
+    assert(n <= 4, s"$n jobs")
   }
 }
