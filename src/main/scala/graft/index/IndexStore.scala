@@ -162,18 +162,34 @@ object IndexStore {
     * absent or different in the stored table. Output = disk rows to
     * (re)index.
     */
-  def changedFiles(disk: DataFrame, stored: DataFrame): DataFrame = {
-    // aggregate to ONE row per stored file (a duplicate would fan out the
-    // disk row and double-chunk the file); a file with MIXED stored
-    // hashes (torn partial update) always reindexes
-    val storedHash = stored.groupBy(col("file_path")).agg(
+  def changedFiles(disk: DataFrame, stored: DataFrame): DataFrame =
+    disk.join(storedHashes(stored), Seq("file_path"), "left")
+      .filter(changed)
+      .drop("stored_hash", "n_hashes")
+
+  /** ONE row per stored file (a duplicate would fan out the disk row and
+    * double-chunk the file): its greatest hash and its number of hashes.
+    */
+  private def storedHashes(stored: DataFrame): DataFrame =
+    stored.groupBy(col("file_path")).agg(
       org.apache.spark.sql.functions.max(col("file_hash")).as("stored_hash"),
       countDistinct(col("file_hash")).as("n_hashes"))
-    disk.join(storedHash, Seq("file_path"), "left")
-      .filter(col("stored_hash").isNull || col("n_hashes") > 1 ||
-        col("stored_hash") =!= col("file_hash"))
-      .drop("stored_hash", "n_hashes")
-  }
+
+  /** A disk file with no stored hash, a different one, or MIXED stored
+    * hashes (torn partial update, which always reindexes).
+    */
+  private val changed = col("stored_hash").isNull || col("n_hashes") > 1 ||
+    col("stored_hash") =!= col("file_hash")
+
+  /** How many files [[changedFiles]] and [[deletedFiles]] name together,
+    * from one aggregate over one full outer join, so `disk` is derived
+    * once.
+    */
+  def staleFileCount(disk: DataFrame, stored: DataFrame): Long =
+    disk.withColumn("on_disk", lit(true))
+      .join(storedHashes(stored), Seq("file_path"), "full_outer")
+      .agg(count(when(col("on_disk").isNull || changed, 1)))
+      .head().getLong(0)
 
   /** Deleted files (stored paths no longer on disk). */
   def deletedFiles(disk: DataFrame, stored: DataFrame): DataFrame =

@@ -229,8 +229,10 @@ object Bm25 {
   /** Score every document against a tokenized query, deriving the index
     * inline (one-shot path; callers with a stable corpus should
     * buildIndex + writeIndex once and use scoreIndexed). Serving does not
-    * use it: [[SearchEngine.keywordSearch]] computes the same scores in
-    * a fixed number of jobs, and this pipeline is its test reference.
+    * use it: [[SearchEngine.keywordSearch]] and
+    * [[SearchEngine.hybridSearch]] compute the same scores with one
+    * shared row-local scoring pass (hybrid search gathers the statistics
+    * in its vector scan), and this pipeline is their test reference.
     */
   def score(spark: org.apache.spark.sql.SparkSession,
       postings: DataFrame, queryTokens: Seq[String]): DataFrame =

@@ -1,7 +1,10 @@
 package graft.search
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Row, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
 import graft.chunk.Chunker
 import graft.core.FileRecord
@@ -21,12 +24,17 @@ import graft.ingest.FileDiscovery
   *
   * Search side: each query runs a fixed handful of Spark jobs, whatever
   * the corpus size. Vector = cosine + threshold + top-k over the
-  * vectors table (one job). Keyword = 3-pass tokenizer + BM25 as one
-  * global statistics aggregate (N, Σdl, the query terms' df) and one
-  * row-local scoring pass; the query's idf is computed on the driver.
-  * Hybrid = both rank lists collected (≤ 2·limit rows each), RRF with
-  * identifier-aware alpha on the driver, then metadata attached by one
-  * broadcast join, the heuristic boost stage (Q15) and the top-k cut.
+  * vectors table (one job). Keyword = 3-pass tokenizer + BM25: one
+  * aggregate gives the corpus statistics (N, Σdl, the query terms' df),
+  * the query's idf is computed on the driver, then one row-local
+  * scoring pass. Hybrid = three jobs over the vectors table alone: the
+  * vector top-k scan also gathers the BM25 statistics through
+  * `Dataset.observe`, one BM25 scoring pass, and the render of the
+  * ≤ 4·limit collected rows, fused by RRF with identifier-aware alpha
+  * on the driver, boosted (Q15) and cut to the top-k. The per-query
+  * numbers reach Spark in closures (UDFs, the statistics aggregator),
+  * not as literals inlined into generated code, so a new query
+  * compiles no class.
   */
 class SearchEngine(spark: SparkSession) {
   import spark.implicits._
@@ -110,94 +118,151 @@ class SearchEngine(spark: SparkSession) {
 
   /** Vector search over a vectors DataFrame. */
   def vectorSearch(vectors: DataFrame, query: String, limit: Int,
-      threshold: Option[Double] = None): DataFrame = {
+      threshold: Option[Double] = None): DataFrame =
+    Fusion.ranked(similar(vectors, query, threshold),
+      "chunk_id", "similarity_score", limit)
+
+  /** `vectors` with each row's cosine to the query embedding as
+    * `similarity_score`, below-threshold rows dropped.
+    */
+  private def similar(vectors: DataFrame, query: String,
+      threshold: Option[Double]): DataFrame = {
     val q = QueryProcessor.preprocess(query)
     val th = threshold.getOrElse(QueryProcessor.adaptiveThreshold(q))
-    val qvec = typedlit(embedQuery(q))
-    val scored = vectors
-      .withColumn("similarity_score", VectorFunctions.cosine(col("vector"), qvec))
+    vectors
+      .withColumn("similarity_score",
+        VectorFunctions.cosine(col("vector"), typedlit(embedQuery(q))))
       .filter(col("similarity_score") >= th)
-    Fusion.ranked(scored, "chunk_id", "similarity_score", limit)
+  }
+
+  /** A chunk's BM25 text (`bm25_backend.py:88-122`): content, the name
+    * twice, file_path and chunk_type. The chunks and vectors tables both
+    * carry these columns.
+    */
+  private val bm25Text =
+    concat_ws(" ", col("content"), col("name"), col("name"),
+      col("file_path"), col("chunk_type"))
+
+  /** The query's distinct BM25 terms, each with its count in the query. */
+  private def queryTerms(query: String): Seq[(String, Int)] =
+    Tokenizer.tokenize(QueryProcessor.preprocess(query))
+      .groupBy(identity).map { case (t, os) => (t, os.size) }.toSeq
+
+  /** The BM25 statistics of `terms` as one aggregate over the BM25 text:
+    * N (chunks with at least one token), Σdl, then each term's df.
+    */
+  private def bm25Stats(terms: Seq[String]): Column =
+    udaf(new SearchEngine.Bm25Stats(terms)).apply(bm25Text)
+
+  /** BM25Okapi of the BM25 text against the query (k1 = 1.5, b = 0.75,
+    * the epsilon floor): the same scores as [[Bm25.score]] without
+    * building its index, from the [[bm25Stats]] of the query's terms.
+    * None when no query term occurs in the corpus. idf is computed on
+    * the driver with `StrictMath.log` (what Spark's `log` runs, so scores
+    * stay bit-identical). The vocabulary-wide average idf needs a
+    * `groupBy(term)` over every posting of `docs`, so that pass runs only
+    * when a query term's raw idf is negative (df > N/2), the one case the
+    * floor changes a score. Scoring is row-local: one UDF counts tf in
+    * each chunk's tokens. The per-query scalars (terms, qtf·idf, avgdl,
+    * and N for the average idf) sit in UDF closures rather than in
+    * literals, which Catalyst inlines into the generated code, so a new
+    * query reuses the compiled classes.
+    */
+  private def bm25Score(docs: DataFrame, qtf: Seq[(String, Int)],
+      stats: Seq[Long]): Option[Column] = {
+    import Bm25.{B, Epsilon, K1}
+    val n = stats.head
+    // a term no chunk holds adds nothing to any score
+    val raw = qtf.zip(stats.drop(2)).filter(_._2 > 0).map { case ((t, k), df) =>
+      (t, k, StrictMath.log(n - df + 0.5) - StrictMath.log(df + 0.5)) }
+    lazy val avgIdf = docs
+      .select(explode(array_distinct(udf(Tokenizer.tokenize _).apply(bm25Text)))
+        .as("term"))
+      .groupBy(col("term")).agg(count(lit(1)).as("df"))
+      .agg(sum(udf((df: Long) =>
+          StrictMath.log(n - df + 0.5) - StrictMath.log(df + 0.5)).apply(col("df"))) /
+        count(lit(1)))
+      .head().getDouble(0)
+    val weights = raw.map { case (t, k, r) =>
+      (t, k * (if (r < 0) Epsilon * avgIdf else r)) }
+    val avgdl = stats(1).toDouble / n
+    Option.when(weights.nonEmpty)(udf { (text: String) =>
+      val toks = Tokenizer.tokenize(text)
+      val dl = toks.size
+      weights.map { case (t, w) =>
+        val tf = toks.count(_ == t)
+        w * (tf * (K1 + 1)) / (tf + K1 * ((1 - B) + B * dl / avgdl))
+      }.reduce(_ + _)
+    }.apply(bm25Text))
   }
 
   /** BM25 keyword search over chunks (corpus = content + 2×name +
-    * file_path + chunk_type, `bm25_backend.py:88-122`): BM25Okapi with
-    * k1 = 1.5, b = 0.75 and the epsilon floor, the same scores as
-    * [[Bm25.score]] without building its index. One global aggregate
-    * gives N (chunks with at least one token), Σdl and each query term's
-    * df; idf is computed on the driver with `StrictMath.log` (what
-    * Spark's `log` runs, so scores stay bit-identical). The
-    * vocabulary-wide average idf needs a `groupBy(term)` over every
-    * posting, so that pass runs only when a query term's raw idf is
-    * negative (df > N/2), the one case the floor changes a score.
-    * Scoring is one row-local pass: tf is counted inside each chunk's
-    * token array and the per-query scalars go in as literals. Output:
-    * (chunk_id, score, rank) for the top `limit` chunks with score > 0.
+    * file_path + chunk_type): one global aggregate gives the
+    * [[bm25Stats]], then one row-local scoring pass by [[bm25Score]].
+    * Output: (chunk_id, score, rank) for the top `limit` chunks with
+    * score > 0.
     */
   def keywordSearch(chunks: DataFrame, query: String, limit: Int): DataFrame = {
-    import Bm25.{B, Epsilon, K1}
-    val tokenizeUdf = udf((s: String) => Tokenizer.tokenize(s))
-    val docs = chunks.select(col("chunk_id"), tokenizeUdf(concat_ws(" ",
-      col("content"), col("name"), col("name"), col("file_path"),
-      col("chunk_type"))).as("toks"))
-    val toks = col("toks")
-    val dl = size(toks)
-    val qtf = Tokenizer.tokenize(QueryProcessor.preprocess(query))
-      .groupBy(identity).map { case (t, os) => (t, os.size) }.toSeq
-    val contribs = if (qtf.isEmpty) Nil else {
-      val st = docs.agg(count(when(dl > 0, 1)), sum(dl) +:
-        qtf.map { case (t, _) => count(when(array_contains(toks, t), 1)) }: _*)
-        .head()
-      val n = st.getLong(0)
-      // a term no chunk holds adds nothing to any score
-      val raw = qtf.zipWithIndex.map { case ((t, k), i) => (t, k, st.getLong(i + 2)) }
-        .filter(_._3 > 0).map { case (t, k, df) =>
-          (t, k, StrictMath.log(n - df + 0.5) - StrictMath.log(df + 0.5)) }
-      lazy val avgIdf = docs.select(explode(array_distinct(toks)).as("term"))
-        .groupBy(col("term")).agg(count(lit(1)).as("df"))
-        .agg(sum(log(lit(n) - col("df") + 0.5) - log(col("df") + 0.5)) /
-          count(lit(1)))
-        .head().getDouble(0)
-      lazy val avgdl = st.getLong(1).toDouble / n // Σdl is null on no rows
-      raw.map { case (t, k, r) =>
-        val idf = if (r < 0) Epsilon * avgIdf else r
-        val tf = dl - size(array_remove(toks, t))
-        lit(k) * lit(idf) * (tf * (K1 + 1)) /
-          (tf + lit(K1) * (lit(1 - B) + lit(B) * dl / lit(avgdl)))
-      }
-    }
-    val scored = docs.select(col("chunk_id"),
-      contribs.reduceOption(_ + _).getOrElse(lit(0.0)).as("score"))
+    val qtf = queryTerms(query)
+    val score = Option.when(qtf.nonEmpty)(
+        chunks.agg(bm25Stats(qtf.map(_._1))).head().getSeq[Long](0))
+      .flatMap(bm25Score(chunks, qtf, _))
+    val scored = chunks.select(col("chunk_id"),
+      score.getOrElse(lit(0.0)).as("score"))
     // P7 zero-score filter on the ranked cut: chunks with score > 0 rank
     // first, so it drops the same rows as filtering before the cut, and
-    // it cannot be pushed into the scan with the tokenizer inlined once
-    // per reference to `toks`
+    // it cannot be pushed into the scan, where it would run the scoring
+    // UDF a second time
     Fusion.ranked(scored, "chunk_id", "score", limit).filter(col("score") > 0)
   }
 
   /** Hybrid search: RRF fusion of vector + keyword ranks, alpha lowered
     * for identifier-shaped queries (Q3) unless given, heuristic boost
-    * (Q15). Both rank lists are collected (≤ 2·limit rows each) and
-    * fused on the driver by [[Fusion.rrfLocal]]; the fused rows are
-    * broadcast into one inner join that attaches the vectors table's
-    * metadata, so the vectors scan streams past the broadcast fused
-    * rows (a chunk id the vectors table lacks drops out), then boosted
-    * and cut to `limit`.
+    * (Q15), in three Spark jobs over the vectors table alone, which holds
+    * every keyword field:
+    *  1. one scan collects the vector top 2·limit rows, and an observed
+    *     [[bm25Stats]] gathers the BM25 statistics in the same pass;
+    *  2. one [[bm25Score]] pass collects the keyword top 2·limit rows
+    *     with score > 0 (skipped when the query has no term in the
+    *     corpus);
+    *  3. the caller's action renders the result: ranks are positions in
+    *     the two collected lists, fused by [[Fusion.rrfLocal]], and the
+    *     boost and the `limit` cut run over those ≤ 4·limit local rows.
     */
-  def hybridSearch(vectors: DataFrame, chunks: DataFrame, query: String,
-      limit: Int, alpha: Option[Double] = None): DataFrame = {
-    def ranks(results: DataFrame): Map[String, Int] =
-      results.select(col("chunk_id"), col("rank")).collect()
-        .map(r => r.getString(0) -> r.getInt(1)).toMap
-    val fused = Fusion.rrfLocal(
-      ranks(vectorSearch(vectors, query, limit * 2, threshold = Some(0.0))),
-      ranks(keywordSearch(chunks, query, limit * 2)),
-      alpha.getOrElse(QueryProcessor.hybridAlpha(query)))
-      .toDF("chunk_id", "rrf_score")
-    val withMeta = vectors.join(broadcast(fused), Seq("chunk_id"))
-      .select(("chunk_id" +: "rrf_score" +: vectors.columns.filter(_ != "chunk_id"))
-        .map(col).toSeq: _*)
-    Fusion.ranked(boost(withMeta, query, "rrf_score"), "chunk_id", "boosted", limit)
+  def hybridSearch(vectors: DataFrame, query: String, limit: Int,
+      alpha: Option[Double] = None): DataFrame = {
+    val qtf = queryTerms(query)
+    val cols = "chunk_id" +: vectors.columns.toSeq.filter(_ != "chunk_id")
+    // the top 2·limit rows of `scored` by `scoreCol`, in rank order
+    def top(scored: DataFrame, scoreCol: String): DataFrame =
+      scored.orderBy(col(scoreCol).desc, col("chunk_id").asc)
+        .limit(limit * 2).select((cols :+ scoreCol).map(col): _*)
+    val vecTop = top(similar(
+      if (qtf.isEmpty) vectors
+      else vectors.observe("bm25_stats", bm25Stats(qtf.map(_._1)).as("stats")),
+      query, Some(0.0)), "similarity_score")
+    val vecRows = vecTop.collect()
+    val kwRows = vecTop.queryExecution.observedMetrics.get("bm25_stats")
+      .flatMap(st => bm25Score(vectors, qtf, st.getSeq[Long](0)))
+      .map(score => top(vectors.withColumn("score", score), "score").collect()
+        .filter(_.getDouble(cols.size) > 0))
+      .getOrElse(Array.empty[Row])
+    def ranks(rows: Array[Row]): Map[String, Int] =
+      rows.iterator.zipWithIndex.map { case (r, i) => r.getString(0) -> (i + 1) }.toMap
+    val byId = (vecRows ++ kwRows).map(r => r.getString(0) -> r).toMap
+    val fused = Fusion.rrfLocal(ranks(vecRows), ranks(kwRows),
+        alpha.getOrElse(QueryProcessor.hybridAlpha(query)))
+      .map { case (id, rrf) =>
+        val r = byId(id)
+        Row.fromSeq(id +: rrf +: r.toSeq.slice(1, cols.size))
+      }
+    val schema = StructType(vectors.schema("chunk_id") +:
+      StructField("rrf_score", DoubleType, nullable = false) +:
+      cols.tail.map(vectors.schema(_)))
+    val local = spark.createDataFrame(java.util.Arrays.asList(fused: _*), schema)
+    // in one partition the cut needs no shuffle to merge partition tops
+    Fusion.ranked(boost(local, query, "rrf_score").coalesce(1),
+      "chunk_id", "boosted", limit)
   }
 
   /** Heuristic rerank boosts (Q15, `core/result_ranker.py:7-208`):
@@ -226,16 +291,16 @@ class SearchEngine(spark: SparkSession) {
   /** Q17 search_by_context: description + focus areas concatenated into
     * the query (`search.py:485-519`).
     */
-  def searchByContext(vectors: DataFrame, chunks: DataFrame,
-      description: String, focusAreas: Seq[String], limit: Int): DataFrame =
-    hybridSearch(vectors, chunks, (description +: focusAreas).mkString(" "), limit)
+  def searchByContext(vectors: DataFrame, description: String,
+      focusAreas: Seq[String], limit: Int): DataFrame =
+    hybridSearch(vectors, (description +: focusAreas).mkString(" "), limit)
 
   /** Q18 search_with_context: results + query analysis + related-query
     * suggestions (`search.py:521-569`).
     */
-  def searchWithContext(vectors: DataFrame, chunks: DataFrame,
-      query: String, limit: Int): (DataFrame, Map[String, Any]) = {
-    val results = hybridSearch(vectors, chunks, query, limit)
+  def searchWithContext(vectors: DataFrame, query: String,
+      limit: Int): (DataFrame, Map[String, Any]) = {
+    val results = hybridSearch(vectors, query, limit)
     val analysis = Map[String, Any](
       "preprocessed" -> QueryProcessor.preprocess(query),
       "threshold" -> QueryProcessor.adaptiveThreshold(query),
@@ -401,5 +466,32 @@ class SearchEngine(spark: SparkSession) {
         when(col("all_lines").isNotNull, slice(col("all_lines"),
           col("end_line") + 1, lit(contextLines))))
       .drop("all_lines")
+  }
+}
+
+object SearchEngine {
+  private val LongArray = ExpressionEncoder[Array[Long]]()
+
+  /** Sums N, Σdl and each term's df over BM25 texts. The terms sit in
+    * the aggregator, not in the plan, so the compiled code is the same
+    * for every query.
+    */
+  private final class Bm25Stats(terms: Seq[String])
+      extends Aggregator[String, Array[Long], Array[Long]] {
+    override def zero: Array[Long] = new Array[Long](terms.size + 2)
+    override def reduce(b: Array[Long], text: String): Array[Long] = {
+      val toks = Tokenizer.tokenize(text)
+      if (toks.nonEmpty) b(0) += 1
+      b(1) += toks.size
+      terms.indices.foreach(i => if (toks.contains(terms(i))) b(i + 2) += 1)
+      b
+    }
+    override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
+      a.indices.foreach(i => a(i) += b(i))
+      a
+    }
+    override def finish(b: Array[Long]): Array[Long] = b
+    override def bufferEncoder: Encoder[Array[Long]] = LongArray
+    override def outputEncoder: Encoder[Array[Long]] = LongArray
   }
 }

@@ -193,17 +193,17 @@ object Tools {
     lazy val engine = new SearchEngine(s)
     tool match {
       case "search_code" =>
-        Right(engine.hybridSearch(vectors(p), chunks(p),
+        Right(engine.hybridSearch(vectors(p),
           str(args, "query").get, int(args, "limit", 10)))
       case "search_similar" =>
         Right(engine.searchSimilar(vectors(p),
           str(args, "chunk_id").get, int(args, "limit", 10)))
       case "search_context" =>
-        Right(engine.searchByContext(vectors(p), chunks(p),
+        Right(engine.searchByContext(vectors(p),
           str(args, "description").get, strs(args, "focus_areas"),
           int(args, "limit", 10)))
       case "search_hybrid" =>
-        Right(engine.hybridSearch(vectors(p), chunks(p),
+        Right(engine.hybridSearch(vectors(p),
           str(args, "query").get, int(args, "limit", 10),
           args.get("alpha").map(_.toString.toDouble)))
       case "search_bm25f" =>
@@ -320,12 +320,13 @@ object Tools {
       case "wiki_generate" =>
         Right(Analytics.directoryRollups(chunks(p)))
       case "kg_build" =>
-        need(p.kgPath, "knowledge graph").map { kp =>
+        // counted over the two tables just written, not by deriving the
+        // graph from the chunks a second time
+        need(p.kgPath, "knowledge graph").flatMap { kp =>
           val built = Kg.fromChunks(chunks(p))
           IndexStore.write(built.vertices, s"$kp/vertices")
           IndexStore.write(built.edges, s"$kp/edges")
-          val (labels, rels) = Kg.stats(built)
-          ontology(labels, rels)
+          route(p, "kg_stats", Map.empty)
         }
       case "kg_stats" | "kg_ontology" =>
         kg(p).map { k =>

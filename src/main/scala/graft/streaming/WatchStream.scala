@@ -103,14 +103,12 @@ object WatchStream {
       .start()
 
   /** ST4 search-triggered staleness check (`core/auto_indexer.py`):
-    * count changed files cheaply; caller reindexes when under threshold.
+    * count changed and deleted files with one discovery scan; caller
+    * reindexes when under threshold.
     */
-  def staleFileCount(spark: SparkSession, root: String, chunksPath: String): Long = {
-    val disk = FileDiscovery.discover(spark, root).toDF()
-    val stored = IndexStore.read(spark, chunksPath)
-    IndexStore.changedFiles(disk, stored).count() +
-      IndexStore.deletedFiles(disk, stored).count()
-  }
+  def staleFileCount(spark: SparkSession, root: String, chunksPath: String): Long =
+    IndexStore.staleFileCount(FileDiscovery.discover(spark, root).toDF(),
+      IndexStore.read(spark, chunksPath))
 
   /** Windowed event-rate analytics with watermarking (the reference has
     * no late-data semantics — this is the Spark-native upgrade for the

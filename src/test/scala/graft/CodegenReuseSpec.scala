@@ -12,15 +12,17 @@ import graft.serve.Tools
 import graft.serve.Tools.Project
 import graft.streaming.WatchStream
 
-/** A warm edit cycle compiles no generated code. Spark keeps compiled
-  * classes in a cache of `spark.sql.codegen.cache.maxEntries` entries
-  * (static, default 100, set JVM-wide in build.sbt). One edit cycle,
+/** A warm edit cycle, and a search for a new name, compile no
+  * generated code. Spark keeps compiled classes in a cache of
+  * `spark.sql.codegen.cache.maxEntries` entries (static, default 100,
+  * set JVM-wide in build.sbt). One edit cycle,
   * `applyBatch` with the KG then `search_code` and `kg_query` for the
   * fresh name, needs more distinct classes than the default holds, so
   * each operation evicted the next one's code and every cycle
   * recompiled it. The working set printed here (one edit cycle plus
   * one call of every MCP tool, from an empty cache) is what the
-  * constant is sized from.
+  * constant is sized from. A search keeps its per-query values out of
+  * the generated code, so a new query compiles nothing either.
   */
 class CodegenReuseSpec extends SparkSpec {
 
@@ -100,6 +102,15 @@ class CodegenReuseSpec extends SparkSpec {
       s"$tools more for one call of every tool)")
     val second = compiled(cycle(p, "FreshTwo"))
     info(s"second cycle: $second classes")
-    assert(second <= 12, s"$second classes compiled")
+    assert(second == 0, s"$second classes compiled")
+  }
+
+  test("a warm search_code for a name not searched before compiles nothing") {
+    val p = indexedSampleCopy(Files.createTempDirectory("codegen-search"))
+    def search(name: String) = Tools.dispatch(p, "search_code", Map("query" -> name))
+      .fold(e => fail(e), identity).toJSON.take(100)
+    assert(search("load_config").nonEmpty)
+    val n = compiled(assert(search("parse_file").nonEmpty))
+    assert(n == 0, s"$n classes compiled")
   }
 }

@@ -60,8 +60,8 @@ class EngineSpec extends SparkSpec {
   }
 
   test("hybrid search returns ranked fused results") {
-    val (chunks, vectors) = engine.buildIndex(sampleRepo)
-    val hits = engine.hybridSearch(vectors, chunks, "search index query", 5).collect()
+    val (_, vectors) = engine.buildIndex(sampleRepo)
+    val hits = engine.hybridSearch(vectors, "search index query", 5).collect()
     assert(hits.nonEmpty && hits.length <= 5)
     val ranks = hits.map(_.getAs[Int]("rank")).sorted.toSeq
     assert(ranks == (1 to hits.length))

@@ -147,10 +147,59 @@ class SearchEquivalenceSpec extends SparkSpec {
         .join(vectors, Seq("chunk_id"), "left")
       val want = Fusion.ranked(engine.boost(fused, q, "rrf_score"),
         "chunk_id", "boosted", 5)
-      val got = engine.hybridSearch(vectors, chunks, q, 5, given)
+      val got = engine.hybridSearch(vectors, q, 5, given)
       assert(got.columns.toSeq == want.columns.toSeq)
       assert(rows(got, "boosted") == rows(want, "boosted"), q)
       assert(rows(got, "rrf_score") == rows(want, "rrf_score"), q)
     }
+  }
+
+  /** `hybridSearch` over `vecs` against the lazy RRF composition, with
+    * `vecs` as the keyword corpus too: the table the search reads.
+    */
+  private def assertHybridEqual(vecs: DataFrame, q: String,
+      limit: Int = 5): Seq[(String, Int, Double)] = {
+    val v = engine.vectorSearch(vecs, q, limit * 2, threshold = Some(0.0))
+      .select(col("chunk_id").as("id"), col("rank"))
+    val k = referenceKeyword(vecs, q, limit * 2)
+      .select(col("chunk_id").as("id"), col("rank"))
+    val fused = Fusion.rrf(v, k, QueryProcessor.hybridAlpha(q))
+      .withColumnRenamed("id", "chunk_id")
+      .join(vecs, Seq("chunk_id"), "left")
+    val want = Fusion.ranked(engine.boost(fused, q, "rrf_score"),
+      "chunk_id", "boosted", limit)
+    val got = engine.hybridSearch(vecs, q, limit)
+    assert(got.columns.toSeq == want.columns.toSeq)
+    assert(rows(got, "rrf_score") == rows(want, "rrf_score"), q)
+    val boosted = rows(got, "boosted")
+    assert(boosted == rows(want, "boosted"), q)
+    boosted
+  }
+
+  test("hybridSearch equals the lazy RRF composition: query with no tokens") {
+    assert(queryTokens("?? 42").isEmpty)
+    assert(assertHybridEqual(vectors, "?? 42").size == 5)
+  }
+
+  test("hybridSearch equals the lazy RRF composition: term absent from the corpus") {
+    assert(referenceKeyword(vectors, "zyzzyvaqq", 10).isEmpty)
+    assert(assertHybridEqual(vectors, "zyzzyvaqq").size == 5)
+    assert(assertHybridEqual(vectors, "zyzzyvaqq parse").size == 5)
+  }
+
+  test("hybridSearch equals the lazy RRF composition: a chunk with zero tokens") {
+    // the zero-token chunk shares the vector of the query's best vector
+    // hit, so it ranks on the vector side and never on the keyword side
+    val q = "parse file"
+    val best = engine.vectorSearch(vectors, q, 1, threshold = Some(0.0))
+      .select("chunk_id").head().getString(0)
+    val empty = vectors.filter(col("chunk_id") === best)
+      .withColumn("chunk_id", lit("zz-no-tokens"))
+      .withColumns(Seq("content", "name", "file_path", "chunk_type")
+        .map(_ -> lit("")).toMap)
+    val vecs = vectors.unionByName(empty)
+    assert(withToks(vecs).filter(size(col("toks")) === 0)
+      .select("chunk_id").as[String].collect().toSeq == Seq("zz-no-tokens"))
+    assert(assertHybridEqual(vecs, q, 20).map(_._1).contains("zz-no-tokens"))
   }
 }

@@ -4,16 +4,20 @@ import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.optimizer.BuildRight
 import org.apache.spark.sql.catalyst.plans.Inner
-import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions.{col, size}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.chunk.Chunker
 import graft.graph.Kg
@@ -26,9 +30,12 @@ import graft.streaming.WatchStream
 
 /** Jobs per query on the serving path. A keyword search is one
   * statistics aggregate plus one scoring pass (three more jobs when the
-  * epsilon floor needs the vocabulary's average idf), and `search_code`
-  * a fixed handful on top, whatever the corpus size. Deriving the BM25
+  * epsilon floor needs the vocabulary's average idf), whatever the
+  * corpus size. `search_code` is three jobs over the vectors table: the
+  * vector top-k scan that also gathers the BM25 statistics, the BM25
+  * scoring pass and the render of the collected rows. Deriving the BM25
   * index inline again costs well over a dozen jobs and fails here.
+  * `get_project_status` discovers the files on disk once.
   * `trace_execution_flow` runs one edge scan per BFS level. Reading an
   * index table takes its schema from a Parquet footer on the driver,
   * with no schema-inference job. An edit batch through `applyBatch`
@@ -100,31 +107,68 @@ class SearchJobCountSpec extends SparkSpec {
     assert(keywordJobs("?? 42") <= 1)
   }
 
-  test("search_code through dispatch and toJSON.take") {
-    def call() = Tools.dispatch(project, "search_code",
-      Map("query" -> "FileParser")).fold(e => fail(e), identity)
+  /** Jobs of a warm `search_code` (or `search_hybrid`) dispatch plus
+    * toJSON.take.
+    */
+  private def searchJobs(tool: String, query: String): Int = {
+    def call() = Tools.dispatch(project, tool,
+      Map("query" -> query)).fold(e => fail(e), identity)
       .toJSON.take(100)
     assert(call().nonEmpty)
-    assert(jobs(call()) == 6)
+    jobs(call())
   }
 
-  test("hybridSearch broadcasts the fused rows and streams the vectors scan") {
+  test("search_code through dispatch and toJSON.take") {
+    assert(searchJobs("search_code", "FileParser") == 3)
+  }
+
+  test("search_hybrid through dispatch and toJSON.take") {
+    assert(searchJobs("search_hybrid", "search index query") == 3)
+  }
+
+  test("search_code with no query term in the corpus skips the scoring pass") {
+    assert(searchJobs("search_code", "zyzzyvaqq") == 2)
+    assert(searchJobs("search_code", "?? 42") == 2)
+  }
+
+  test("hybridSearch scans the vectors table twice and renders local rows") {
     val engine = new SearchEngine(spark)
     val vectors = IndexStore.read(spark, project.vectorsPath)
     for (query <- Seq("FileParser", "search index query")) {
-      val out = engine.hybridSearch(vectors,
-        IndexStore.read(spark, project.chunksPath), query, 10)
+      val collected = ArrayBuffer.empty[SparkPlan]
+      val l = new QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+          collected.synchronized(collected += qe.executedPlan)
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(l)
+      val out = try {
+        val out = engine.hybridSearch(vectors, query, 10)
+        ListenerBusDrain(spark.sparkContext)
+        out
+      } finally spark.listenerManager.unregister(l)
       val rows = out.collect()
       assert(rows.nonEmpty && rows.forall(_.getAs[String]("file_path") != null))
-      val joins = Plans.collect(out.queryExecution.executedPlan) {
-        case j: BroadcastHashJoinExec => j
+      val plan = out.queryExecution.executedPlan
+      assert(Plans.find(plan)(_.isInstanceOf[FileSourceScanExec]).isEmpty, plan)
+      assert(Plans.find(plan)(_.isInstanceOf[Exchange]).isEmpty, plan)
+      assert(collected.size == 2)
+      for (p <- collected) {
+        val scanned = Plans.collect(p) { case s: FileSourceScanExec =>
+          s.relation.location.rootPaths.map(_.toUri.getPath)
+        }
+        assert(scanned == Seq(Seq(project.vectorsPath)), p)
       }
-      assert(joins.size == 1, out.queryExecution.executedPlan)
-      val j = joins.head
-      assert(j.joinType == Inner && j.buildSide == BuildRight)
-      assert(Plans.find(j.right)(_.isInstanceOf[LocalTableScanExec]).nonEmpty)
-      assert(Plans.find(j.left)(_.isInstanceOf[FileSourceScanExec]).nonEmpty)
     }
+  }
+
+  test("get_project_status: one discovery scan for the stale count") {
+    def call() = Tools.dispatch(project, "get_project_status")
+      .fold(e => fail(e), identity).collect()
+    assert(call().head.getAs[Long]("n_stale_files") == 0L)
+    val n = jobs(call())
+    info(s"$n jobs")
+    assert(n == 8, s"$n jobs")
   }
 
   test("an index table's footer schema is the schema Spark infers") {

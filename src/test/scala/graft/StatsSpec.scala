@@ -37,7 +37,7 @@ class StatsSpec extends SparkSpec {
   }
 
   test("search_with_context returns analysis alongside results") {
-    val (results, analysis) = engine.searchWithContext(vectors, chunks, "find config", 5)
+    val (results, analysis) = engine.searchWithContext(vectors, "find config", 5)
     assert(results.count() > 0)
     assert(analysis("preprocessed") == "find configuration")
     assert(analysis("related_queries").asInstanceOf[Seq[String]].nonEmpty)

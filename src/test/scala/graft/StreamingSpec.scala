@@ -129,6 +129,7 @@ class StreamingSpec extends SparkSpec {
     withTempDir { dir =>
       val repo = dir.resolve("repo"); Files.createDirectories(repo)
       Files.writeString(repo.resolve("a.py"), "def alpha():\n    return 1\n")
+      Files.writeString(repo.resolve("b.py"), "def beta():\n    return 4\n")
       val chunksPath = dir.resolve("chunks").toString
       val vectorsPath = dir.resolve("vectors").toString
       new SearchEngine(spark).indexRepo(repo.toString, chunksPath, vectorsPath)
@@ -136,6 +137,9 @@ class StreamingSpec extends SparkSpec {
       Files.writeString(repo.resolve("a.py"), "def alpha():\n    return 2\n")
       Files.writeString(repo.resolve("new.py"), "def nu():\n    return 3\n")
       assert(WatchStream.staleFileCount(spark, repo.toString, chunksPath) == 2)
+      // a deleted file counts once, beside the modified and the new one
+      Files.delete(repo.resolve("b.py"))
+      assert(WatchStream.staleFileCount(spark, repo.toString, chunksPath) == 3)
     }
   }
 
