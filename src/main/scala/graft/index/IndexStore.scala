@@ -243,6 +243,14 @@ object IndexStore {
     * written back in at most as many files as it had, so repeated
     * batches do not grow the file count.
     *
+    * Write order: vectors, KG edges, KG vertices, chunks. A retry
+    * decides what to redo from the chunks table (change detection,
+    * [[changedFiles]], reads only it) and, in the KG, from the stored
+    * vertices (the ids the delta removes), so each goes after the tables
+    * it governs. A batch cut before the chunks swap is then detected
+    * again, and the retry lands it on every table, because each swap
+    * drops the `replaced` paths' rows before it appends.
+    *
     * @param stored    the chunks table at `chunksPath`, as the caller
     *                  read it to derive the change
     * @param replaced  paths whose stored rows go: deleted files and
@@ -258,8 +266,8 @@ object IndexStore {
     // flatMap segment never reaches the downstream union/join optimizer
     // — Catalyst can push a Project into the object pipeline there and
     // fail serialization (seen as INTERNAL_ERROR 'object' writer on the
-    // KG union path). Lazy: the chunks write below materializes the
-    // (change-sized) rows, and the vectors write and the KG collect read
+    // KG union path). Lazy: the vectors write below materializes the
+    // (change-sized) rows, and the KG collect and the chunks write read
     // them back
     val fresh = newChunks.localCheckpoint(eager = false)
     val moved = moves.toDF("old_path", "new_path")
@@ -272,7 +280,6 @@ object IndexStore {
       rewrite(path, table, applyMoves(table.filter(
           !coalesce(col("file_path").isin(replaced.distinct: _*), lit(false))), moved)
         .unionByName(rows, allowMissingColumns = true))
-    swap(chunksPath, stored, fresh)
     swap(vectorsPath, read(spark, vectorsPath), vectorsOf(fresh))
 
     // the KG treats a move as a change at its destination (drop the old
@@ -285,12 +292,15 @@ object IndexStore {
         FileDiscovery.readFiles(spark, dests).flatMap(Chunker.chunkFile _)
           .toDF(), allowMissingColumns = true)
       // the update's delta is local, so neither write plan reads the
-      // other table's path: the vertices swap cannot pull files from
-      // under the edges write
+      // other table's path: the edges swap cannot pull files from under
+      // the vertices write
       val updated = Kg.differentialUpdate(kg, rechunked, replaced ++ moves.map(_._1))
-      rewrite(s"$kp/vertices", kg.vertices, updated.vertices)
       rewrite(s"$kp/edges", kg.edges, updated.edges)
+      rewrite(s"$kp/vertices", kg.vertices, updated.vertices)
     }
+    // chunks last (see the Scaladoc): change detection reads only this
+    // table, so a batch cut after its swap would never be retried
+    swap(chunksPath, stored, fresh)
   }
 
   /** Unembedded chunks (J3, `vectors_backend.py:1355-1397`): in chunks

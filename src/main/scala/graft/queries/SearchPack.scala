@@ -257,13 +257,17 @@ object SearchPack {
         .limit(20)
   }
 
+  /** bq1's and ac1's (doc_id, term) postings, derived as the tools derive theirs. */
+  private def docTerms(s: SparkSession, d: String): DataFrame =
+    graft.search.BooleanQuery.fromPositional(graft.search.Phrase
+      .positionalPostings(Tables.documents(s, d), "doc_id", TextFunctions.tokens))
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Boolean set retrieval (must/should/must-not) over the inverted
     // postings: pushdown term filters, one groupBy for ALL, semi/anti
     // joins for ANY/NONE — three query shapes unioned under a qid.
     "bq1_boolean_search" -> ((s, d) => {
-      val p = graft.search.BooleanQuery
-        .postings(Tables.documents(s, d), "doc_id", "text").cache()
+      val p = docTerms(s, d).cache()
       BoolQueries.map { case (qid, must, should, not) =>
         graft.search.BooleanQuery.query(p, must, should, not)
           .select(lit(qid).as("qid"), col("doc_id"))
@@ -274,9 +278,7 @@ object SearchPack {
     // Prefix autocomplete: top-3 vocabulary terms by document frequency
     // per 2-char prefix (edge-ngram completion index over the postings).
     "ac1_autocomplete" -> ((s, d) => {
-      val p = graft.search.BooleanQuery
-        .postings(Tables.documents(s, d), "doc_id", "text")
-      graft.search.BooleanQuery.completions(p, prefixLen = 2, k = 3)
+      graft.search.BooleanQuery.completions(docTerms(s, d), prefixLen = 2, k = 3)
         .orderBy(col("prefix"), col("rank"))
     }),
 

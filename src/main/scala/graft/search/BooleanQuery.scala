@@ -3,8 +3,6 @@ package graft.search
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.text.TextFunctions
-
 /** Boolean set retrieval (must / should / must-not) over an inverted
   * postings relation — the unranked filter mode beside BM25 ranking
   * ([[Bm25]]) and positional phrase search ([[Phrase]]): "docs with ALL
@@ -20,12 +18,12 @@ import graft.text.TextFunctions
   */
 object BooleanQuery {
 
-  /** Distinct (doc_id, term) postings of a document table. */
-  def postings(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs.select(col(idCol).as("doc_id"),
-        explode(TextFunctions.tokens(col(textCol))).as("term"))
-      .filter(col("term") =!= "")
-      .distinct()
+  /** Distinct (doc_id, term) postings, projected from the positional
+    * ones ([[Phrase.positionalPostings]]) that phrase and proximity
+    * search read: one tokenization serves every keyword mode.
+    */
+  def fromPositional(positional: DataFrame): DataFrame =
+    positional.select(col("id").as("doc_id"), col("term")).distinct()
 
   /** Doc ids satisfying: contains ALL `must`, at least one of `should`
     * (skipped when empty), and none of `mustNot`.

@@ -122,9 +122,11 @@ object Chat {
   }
 
   /** The agentic tool loop (`chat.py:1594-1712`): model turns execute
-    * tool calls through `Tools.dispatch` until a text answer arrives;
-    * exhausting `maxIterations` triggers the reference's explicit
-    * synthesis turn (never a silent truncation).
+    * tool calls through [[Tools.run]], rendered by [[renderResult]],
+    * until a text answer arrives. Any failing call, at planning or at
+    * execution, reaches the model as an `ERROR: …` tool message and the
+    * loop goes on; exhausting `maxIterations` triggers the reference's
+    * explicit synthesis turn (never a silent truncation).
     */
   def processQuery(p: Tools.Project, session: ChatSession, query: String,
       llm: ChatLlm, maxIterations: Int = 30): ChatOutcome = {
@@ -142,9 +144,8 @@ object Chat {
             calls.map(c => s"[tool_call ${c.name}]").mkString(" "))
           calls.foreach { c =>
             trace += c
-            val content = Tools.dispatch(p, c.name, c.args) match {
-              case Right(df) =>
-                val (text, n) = renderResult(df)
+            val content = Tools.run(p, c.name, c.args)(renderResult(_)) match {
+              case Right((text, n)) =>
                 c.args.get("query").foreach(q =>
                   session.addSearchSummary(c.name, q.toString, n))
                 text

@@ -3,16 +3,16 @@ package graft.serve
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
 
-/** MCP JSON-RPC framing over the existing tool dispatch — the
-  * reference serves its 27 tools as an MCP stdio server speaking
-  * JSON-RPC 2.0 (`mcp/server.py:303-380`), so a real MCP client can
-  * connect to ServeMain: `initialize` → capability envelope,
-  * `tools/list` → the 33 tool schemas, `tools/call` → a
-  * CallToolResult whose content is the result rows as JSON (tool
-  * failures become `isError: true` results, matching the reference's
-  * error-CallToolResult wrapping, not protocol errors). Notifications
-  * (no id) get no response; unknown methods / unparsable frames get
-  * standard JSON-RPC error envelopes with the request id echoed.
+/** MCP JSON-RPC framing over the tool table — the reference serves its
+  * 27 tools as an MCP stdio server speaking JSON-RPC 2.0
+  * (`mcp/server.py:303-380`), so a real MCP client can connect to
+  * ServeMain: `initialize` → capability envelope, `tools/list` → the
+  * 33 tool schemas, `tools/call` → [[Tools.run]], whose rows become a
+  * CallToolResult's JSON text (any tool failure is an `isError: true`
+  * result, the reference's error-CallToolResult wrapping, not a
+  * protocol error). Notifications (no id) get no response; unknown
+  * methods / unparsable frames get standard JSON-RPC error envelopes
+  * with the request id echoed.
   *
   * Jackson does the (de)serialization — it ships with Spark's
   * classpath; no new dependency.
@@ -66,13 +66,7 @@ object McpServer {
           schema.put("type", "object")
           val props = schema.putObject("properties")
           t.params.foreach { pm =>
-            props.putObject(pm.name).put("type", pm.kind match {
-              case "int" => "integer"
-              case "float" | "double" => "number"
-              case "bool" => "boolean"
-              case "strings" | "list" => "array"
-              case _ => "string"
-            })
+            props.putObject(pm.name).put("type", pm.kind)
           }
           val req = t.params.filter(_.required)
           if (req.nonEmpty) {
@@ -87,15 +81,7 @@ object McpServer {
           .filter(_.isObject).map(toArgs).getOrElse(Map.empty[String, Any])
         val r = M.createObjectNode()
         val content = r.putArray("content")
-        // the Spark ACTION runs here, not in dispatch (which only
-        // catches plan-construction failures) — an execution-time
-        // error (missing store, ANSI cast, lost executor) must become
-        // an isError CallToolResult, never kill the serve loop
-        Tools.dispatch(p, name, args).flatMap { df =>
-          try Right(df.toJSON.take(maxRows))
-          catch { case e: Exception =>
-            Left(s"tool $name failed: ${e.getMessage}") }
-        } match {
+        Tools.run(p, name, args)(_.toJSON.take(maxRows)) match {
           case Left(err) =>
             content.addObject().put("type", "text").put("text", err)
             r.put("isError", true)
@@ -112,7 +98,7 @@ object McpServer {
     }
   }
 
-  /** JSON argument object → the Map[String, Any] Tools.dispatch takes
+  /** JSON argument object → the Map[String, Any] a tool takes
     * (the line shell passes strings / Seq[String]; mirror that).
     */
   private def toArgs(node: JsonNode): Map[String, Any] = {

@@ -1,6 +1,6 @@
 package graft.serve
 
-/** Minimal long-running serving shell over [[Tools.dispatch]] — the
+/** Minimal long-running serving shell over [[Tools.run]] — the
   * transport role of the reference's MCP server loop
   * (`mcp/server.py:431-520`) and CLI (`cli/main.py:589`), kept
   * deliberately thin: one line in, one result out, engine state (the
@@ -9,8 +9,9 @@ package graft.serve
   *
   * Protocol (stdio, line-oriented — no network, no added deps):
   *   list                          → one line per tool: name, params
-  *   <tool> k=v k2=a,b,c           → dispatch; rows stream back as JSON
-  *                                   lines, then `ok <n>` or `err <msg>`
+  *   <tool> k=v k2=a,b,c           → run; rows stream back as JSON
+  *                                   lines, then `ok <n>`, or one
+  *                                   `err <msg>` line for any failure
   *   quit                          → exit
   *
   * Usage: runMain graft.serve.ServeMain <root> <chunksPath>
@@ -41,10 +42,9 @@ object ServeMain {
           s"${t.name}($ps)$seam — ${t.description}"
         }
       case tool +: rest =>
-        Tools.dispatch(p, tool, parseArgs(rest)) match {
+        Tools.run(p, tool, parseArgs(rest))(_.toJSON.take(maxRows + 1)) match {
           case Left(err) => Seq(s"err $err")
-          case Right(df) =>
-            val rows = df.toJSON.take(maxRows + 1)
+          case Right(rows) =>
             val shown = rows.take(maxRows).toSeq
             shown :+ (if (rows.length > maxRows) s"ok ${shown.length}+"
               else s"ok ${shown.length}")

@@ -6,20 +6,24 @@ import org.apache.spark.sql.functions._
 import graft.analyze.Analytics
 import graft.graph.Kg
 import graft.index.IndexStore
-import graft.search.SearchEngine
+import graft.search.{BooleanQuery, Phrase, SearchEngine}
+import graft.text.TextFunctions
 
 /** The reference's serving front door — the 27 MCP tools
   * (`mcp/tool_schemas.py:46-1284`) and the CLI subcommands that shadow
   * them (`cli/main.py:589`) — as ONE typed dispatch table over the
   * Spark data planes this library already implements, plus the five
   * engine-extra search modes (BM25F, phrase, proximity, boolean,
-  * autocomplete) exposed with the same validation surface. Each tool is a
-  * (param spec, handler) pair; `dispatch` validates arguments exactly
-  * as the server's CallToolRequest path does (unknown tool / missing
-  * required argument → error result, `mcp/server.py:303-380`) and
-  * returns the tool's result as a DataFrame — the transport shell
-  * (stdio JSON-RPC / CLI printing) stays out of the engine, as a Spark
-  * library should; any host can wrap `dispatch` in a loop.
+  * autocomplete) exposed with the same validation surface. Each tool is
+  * one (param spec, handler) entry of `tools`, and [[specs]], [[spec]]
+  * and [[dispatch]] derive from those entries. A param's `kind` is its
+  * JSON Schema type (`string`, `integer`, `number`, `array`).
+  * `dispatch` validates arguments as the server's CallToolRequest path
+  * does (unknown tool / missing required argument → error result,
+  * `mcp/server.py:303-380`) and plans the result as a DataFrame; [[run]]
+  * adds the caller's action under the same error wrapping. The MCP
+  * server, the line shell and chat all call `run`, so a failing call
+  * answers the same error in each and ends none of them.
   *
   * LLM-backed tools (interpret_analysis, review_*, code_review,
   * wiki_generate) are marked `llmSeam = true`: dispatch returns their
@@ -46,6 +50,21 @@ object Tools {
       parentsPath: Option[String] = None,
       commitsPath: Option[String] = None)
 
+  private type Handler = (Project, Map[String, Any]) => Either[String, DataFrame]
+
+  /** One tool: its spec and the handler that plans its result. */
+  private final case class Tool(spec: ToolSpec, handle: Handler) {
+    def seam: Tool = copy(spec = spec.copy(llmSeam = true))
+  }
+
+  private def tool(name: String, description: String, params: Param*)(
+      handle: Handler): Tool = Tool(ToolSpec(name, description, params), handle)
+
+  private def required(name: String, kind: String = "string"): Param =
+    Param(name, kind, required = true)
+
+  private val limit = Param("limit", "integer")
+
   // ---- argument access -------------------------------------------------
 
   private def str(a: Map[String, Any], k: String): Option[String] =
@@ -60,6 +79,10 @@ object Tools {
       case Some(one) => Seq(one.toString)
       case None => Nil
     }
+
+  // ---- the stores and the inputs handlers share ------------------------
+
+  private def engine(p: Project): SearchEngine = new SearchEngine(p.spark)
 
   private def chunks(p: Project): DataFrame =
     IndexStore.read(p.spark, p.chunksPath)
@@ -80,300 +103,271 @@ object Tools {
       what: String): Either[String, String] =
     p.toRight(s"$what table not configured for this project")
 
-  // ---- the registry ----------------------------------------------------
-
-  val specs: Seq[ToolSpec] = Seq(
-    ToolSpec("search_code", "hybrid semantic+keyword code search",
-      Seq(Param("query", "string", required = true),
-        Param("limit", "int"))),
-    ToolSpec("search_similar", "chunks similar to a given chunk",
-      Seq(Param("chunk_id", "string", required = true),
-        Param("limit", "int"))),
-    ToolSpec("search_context",
-      "search by a task description plus focus areas",
-      Seq(Param("description", "string", required = true),
-        Param("focus_areas", "array"), Param("limit", "int"))),
-    ToolSpec("search_hybrid", "hybrid search with explicit alpha",
-      Seq(Param("query", "string", required = true),
-        Param("alpha", "double"), Param("limit", "int"))),
-    ToolSpec("search_bm25f",
-      "field-weighted keyword search (entity names boosted 3x)",
-      Seq(Param("query", "string", required = true),
-        Param("limit", "int"))),
-    ToolSpec("search_phrase", "exact adjacent-phrase search",
-      Seq(Param("phrase", "string", required = true),
-        Param("limit", "int"))),
-    ToolSpec("search_proximity",
-      "rank chunks by minimum distance between two terms",
-      Seq(Param("term_a", "string", required = true),
-        Param("term_b", "string", required = true),
-        Param("limit", "int"))),
-    ToolSpec("search_boolean",
-      "set retrieval: all of `must`, any of `should`, none of `must_not`",
-      Seq(Param("must", "array"), Param("should", "array"),
-        Param("must_not", "array"))),
-    ToolSpec("autocomplete",
-      "top index-vocabulary completions for a prefix",
-      Seq(Param("prefix", "string", required = true),
-        Param("limit", "int"))),
-    ToolSpec("get_project_status", "index freshness and size counters",
-      Nil),
-    ToolSpec("index_project", "full chunk+embed index build", Nil),
-    ToolSpec("embed_chunks", "embed indexed chunks' context text",
-      Seq(Param("limit", "int"))),
-    ToolSpec("analyze_project", "complexity grade distribution", Nil),
-    ToolSpec("visualize_export",
-      "chunk-graph + directory-treemap export (nodes and links)", Nil),
-    ToolSpec("analyze_file", "per-chunk metrics for one file",
-      Seq(Param("file_path", "string", required = true))),
-    ToolSpec("find_smells", "code-smell findings", Nil),
-    ToolSpec("get_complexity_hotspots", "most complex entities",
-      Seq(Param("limit", "int"))),
-    ToolSpec("check_circular_dependencies",
-      "files on import cycles", Nil),
-    ToolSpec("interpret_analysis",
-      "LLM narration of the analysis tables", Nil, llmSeam = true),
-    ToolSpec("save_report", "persist the analysis report",
-      Seq(Param("path", "string", required = true))),
-    ToolSpec("review_repository", "repository-level review evidence",
-      Nil, llmSeam = true),
-    ToolSpec("review_pull_request",
-      "review evidence scoped to changed files",
-      Seq(Param("files", "array", required = true)), llmSeam = true),
-    ToolSpec("code_review", "single-file review evidence",
-      Seq(Param("file_path", "string", required = true)),
-      llmSeam = true),
-    ToolSpec("wiki_generate", "directory-level wiki skeleton",
-      Nil, llmSeam = true),
-    ToolSpec("kg_build", "build + persist the knowledge graph", Nil),
-    ToolSpec("kg_stats", "KG label/relationship counts", Nil),
-    ToolSpec("kg_query", "entities related to a named entity",
-      Seq(Param("entity_name", "string", required = true),
-        Param("relationship", "string"), Param("limit", "int"))),
-    ToolSpec("kg_ontology", "node and relationship type inventory",
-      Nil),
-    ToolSpec("kg_ia", "doc-section information architecture", Nil),
-    ToolSpec("trace_execution_flow", "call paths from an entry point",
-      Seq(Param("entry_point", "string", required = true),
-        Param("max_depth", "int"))),
-    ToolSpec("kg_history", "commits touching a named entity",
-      Seq(Param("entity_name", "string", required = true))),
-    ToolSpec("kg_callers_at_commit",
-      "callers of an entity as of a commit",
-      Seq(Param("entity_name", "string", required = true),
-        Param("commit", "string", required = true))),
-    ToolSpec("story_generate", "repository history phases",
-      Seq(Param("phases", "int"))))
-
-  def spec(name: String): Option[ToolSpec] = specs.find(_.name == name)
-
-  /** Validate + route. Mirrors the server's error surface: unknown tool
-    * and missing required arguments come back as Left, never thrown
-    * (`mcp/server.py:303-380` wraps everything into an error
-    * CallToolResult).
+  /** Positional postings (id, term, pos) of the chunks' content: the
+    * phrase and proximity input, and (projected) the boolean one.
     */
-  def dispatch(p: Project, tool: String,
-      args: Map[String, Any] = Map.empty): Either[String, DataFrame] = {
-    spec(tool) match {
-      case None => Left(s"unknown tool: $tool")
-      case Some(ts) =>
-        val missing = ts.params.filter(_.required)
-          .map(_.name).filterNot(args.contains)
-        if (missing.nonEmpty)
-          Left(s"missing required argument(s): ${missing.mkString(", ")}")
-        else
-          try route(p, tool, args)
-          catch { case e: Exception => Left(s"tool $tool failed: ${e.getMessage}") }
-    }
+  private def positional(p: Project): DataFrame =
+    Phrase.positionalPostings(chunks(p).select(col("chunk_id"), col("content")),
+      "chunk_id", TextFunctions.tokens, "content")
+
+  private def status(p: Project): DataFrame = {
+    val stale = graft.streaming.WatchStream
+      .staleFileCount(p.spark, p.root, p.chunksPath)
+    chunks(p).agg(
+      countDistinct(col("file_path")).as("n_files"),
+      count(lit(1)).as("n_chunks"),
+      countDistinct(col("language")).as("n_languages"))
+      .withColumn("n_stale_files", lit(stale))
   }
 
-  private def route(p: Project, tool: String,
-      args: Map[String, Any]): Either[String, DataFrame] = {
-    val s = p.spark
-    lazy val engine = new SearchEngine(s)
-    tool match {
-      case "search_code" =>
-        Right(engine.hybridSearch(vectors(p),
-          str(args, "query").get, int(args, "limit", 10)))
-      case "search_similar" =>
-        Right(engine.searchSimilar(vectors(p),
-          str(args, "chunk_id").get, int(args, "limit", 10)))
-      case "search_context" =>
-        Right(engine.searchByContext(vectors(p),
-          str(args, "description").get, strs(args, "focus_areas"),
-          int(args, "limit", 10)))
-      case "search_hybrid" =>
-        Right(engine.hybridSearch(vectors(p),
-          str(args, "query").get, int(args, "limit", 10),
-          args.get("alpha").map(_.toString.toDouble)))
-      case "search_bm25f" =>
-        // name field weighted 3x over content — a deployment persists
-        // this index once (Bm25.writeIndexBucketed, the br1 layout);
-        // the tool layer derives it inline over the project's chunks
-        val terms = graft.search.Tokenizer.tokenize(
-          graft.search.QueryProcessor.preprocess(str(args, "query").get))
-        if (terms.isEmpty) Left("query has no indexable terms")
-        else {
-          val fielded = chunks(p).select(col("chunk_id"), col("name"),
-            col("content"))
-          val idx = graft.search.Bm25.buildIndex(
-            graft.search.Bm25F.fieldPostings(fielded, "chunk_id",
-              Seq("name" -> 3, "content" -> 1)))
-          Right(graft.search.Fusion.ranked(
-            graft.search.Bm25.scoreIndexed(s, idx, terms),
-            "id", "score", int(args, "limit", 10))
-            .withColumnRenamed("id", "chunk_id"))
-        }
-      case "search_phrase" =>
-        val terms = graft.search.Tokenizer.tokenize(str(args, "phrase").get)
-        if (terms.isEmpty) Left("phrase has no indexable terms")
-        else Right(graft.search.Phrase.phraseSearch(
-          graft.search.Phrase.positionalPostings(
-            chunks(p).select(col("chunk_id"), col("content")),
-            "chunk_id", graft.text.TextFunctions.tokens, "content"),
-          terms, int(args, "limit", 10)))
-      case "search_proximity" =>
-        val (a, b) = (str(args, "term_a").get.toLowerCase,
-          str(args, "term_b").get.toLowerCase)
-        Right(graft.search.Phrase.proximityPairs(
-          graft.search.Phrase.positionalPostings(
-            chunks(p).select(col("chunk_id"), col("content")),
-            "chunk_id", graft.text.TextFunctions.tokens, "content"),
-          a, b, int(args, "limit", 10)))
-      case "search_boolean" =>
-        val (must, should, not) = (strs(args, "must"),
-          strs(args, "should"), strs(args, "must_not"))
-        if (must.isEmpty && should.isEmpty)
-          Left("search_boolean needs at least one `must` or `should` term")
-        else Right(graft.search.BooleanQuery.query(
-          graft.search.BooleanQuery.postings(chunks(p), "chunk_id",
-            "content"),
-          must.map(_.toLowerCase), should.map(_.toLowerCase),
-          not.map(_.toLowerCase))
-          .withColumnRenamed("doc_id", "chunk_id"))
-      case "autocomplete" =>
-        val prefix = str(args, "prefix").get.toLowerCase
-        if (prefix.isEmpty) Left("prefix must be non-empty")
-        else Right(graft.search.BooleanQuery.completions(
-            graft.search.BooleanQuery.postings(chunks(p), "chunk_id",
-              "content"),
-            prefixLen = prefix.length, k = int(args, "limit", 5))
-          .filter(col("prefix") === prefix))
-      case "get_project_status" =>
-        val ch = chunks(p)
-        val stale = graft.streaming.WatchStream
-          .staleFileCount(s, p.root, p.chunksPath)
-        Right(ch.agg(
-          countDistinct(col("file_path")).as("n_files"),
-          count(lit(1)).as("n_chunks"),
-          countDistinct(col("language")).as("n_languages"))
-          .withColumn("n_stale_files", lit(stale)))
-      case "index_project" =>
-        engine.indexRepo(p.root, p.chunksPath, p.vectorsPath)
-        route(p, "get_project_status", Map.empty)
-      case "embed_chunks" =>
+  private def fileMetrics(p: Project, a: Map[String, Any]): DataFrame =
+    chunks(p).filter(col("file_path") === str(a, "file_path").get)
+      .select(col("name"), col("chunk_type"), col("complexity"),
+        col("cognitive_complexity"), col("nesting_depth"),
+        col("token_count"))
+      .orderBy(col("name"))
+
+  // LLM seam: the evidence table the model narrates
+  private val health: Handler = (p, _) => Right(Analytics.fileHealth(chunks(p)))
+
+  private def kgStats(p: Project): Either[String, DataFrame] =
+    kg(p).map { k =>
+      val (labels, rels) = Kg.stats(k)
+      labels.select(lit("node").as("kind"), col("label").as("name"),
+          col("count"))
+        .unionByName(rels.select(lit("relationship").as("kind"),
+          col("rel_type").as("name"), col("count")))
+        .orderBy(col("kind"), col("name"))
+    }
+
+  // ---- the registry ----------------------------------------------------
+
+  private val tools: Seq[Tool] = Seq(
+    tool("search_code", "hybrid semantic+keyword code search",
+      required("query"), limit) { (p, a) =>
+      Right(engine(p).hybridSearch(vectors(p), str(a, "query").get,
+        int(a, "limit", 10)))
+    },
+    tool("search_similar", "chunks similar to a given chunk",
+      required("chunk_id"), limit) { (p, a) =>
+      Right(engine(p).searchSimilar(vectors(p), str(a, "chunk_id").get,
+        int(a, "limit", 10)))
+    },
+    tool("search_context", "search by a task description plus focus areas",
+      required("description"), Param("focus_areas", "array"), limit) { (p, a) =>
+      Right(engine(p).searchByContext(vectors(p), str(a, "description").get,
+        strs(a, "focus_areas"), int(a, "limit", 10)))
+    },
+    tool("search_hybrid", "hybrid search with explicit alpha",
+      required("query"), Param("alpha", "number"), limit) { (p, a) =>
+      Right(engine(p).hybridSearch(vectors(p), str(a, "query").get,
+        int(a, "limit", 10), a.get("alpha").map(_.toString.toDouble)))
+    },
+    tool("search_bm25f",
+      "field-weighted keyword search (entity names boosted 3x)",
+      required("query"), limit) { (p, a) =>
+      // name field weighted 3x over content — a deployment persists
+      // this index once (Bm25.writeIndexBucketed, the br1 layout);
+      // the tool layer derives it inline over the project's chunks
+      val terms = graft.search.Tokenizer.tokenize(
+        graft.search.QueryProcessor.preprocess(str(a, "query").get))
+      if (terms.isEmpty) Left("query has no indexable terms")
+      else {
+        val fielded = chunks(p).select(col("chunk_id"), col("name"),
+          col("content"))
+        val idx = graft.search.Bm25.buildIndex(
+          graft.search.Bm25F.fieldPostings(fielded, "chunk_id",
+            Seq("name" -> 3, "content" -> 1)))
+        Right(graft.search.Fusion.ranked(
+          graft.search.Bm25.scoreIndexed(p.spark, idx, terms),
+          "id", "score", int(a, "limit", 10))
+          .withColumnRenamed("id", "chunk_id"))
+      }
+    },
+    tool("search_phrase", "exact adjacent-phrase search",
+      required("phrase"), limit) { (p, a) =>
+      val terms = graft.search.Tokenizer.tokenize(str(a, "phrase").get)
+      if (terms.isEmpty) Left("phrase has no indexable terms")
+      else Right(Phrase.phraseSearch(positional(p), terms, int(a, "limit", 10)))
+    },
+    tool("search_proximity",
+      "rank chunks by minimum distance between two terms",
+      required("term_a"), required("term_b"), limit) { (p, a) =>
+      Right(Phrase.proximityPairs(positional(p),
+        str(a, "term_a").get.toLowerCase, str(a, "term_b").get.toLowerCase,
+        int(a, "limit", 10)))
+    },
+    tool("search_boolean",
+      "set retrieval: all of `must`, any of `should`, none of `must_not`",
+      Param("must", "array"), Param("should", "array"),
+      Param("must_not", "array")) { (p, a) =>
+      val Seq(must, should, not) = Seq("must", "should", "must_not")
+        .map(strs(a, _).map(_.toLowerCase))
+      if (must.isEmpty && should.isEmpty)
+        Left("search_boolean needs at least one `must` or `should` term")
+      else Right(BooleanQuery.query(BooleanQuery.fromPositional(positional(p)),
+          must, should, not)
+        .withColumnRenamed("doc_id", "chunk_id"))
+    },
+    tool("autocomplete", "top index-vocabulary completions for a prefix",
+      required("prefix"), limit) { (p, a) =>
+      val prefix = str(a, "prefix").get.toLowerCase
+      if (prefix.isEmpty) Left("prefix must be non-empty")
+      else Right(BooleanQuery.completions(
+          BooleanQuery.fromPositional(positional(p)),
+          prefixLen = prefix.length, k = int(a, "limit", 5))
+        .filter(col("prefix") === prefix))
+    },
+    tool("get_project_status", "index freshness and size counters")(
+      (p, _) => Right(status(p))),
+    tool("index_project", "full chunk+embed index build") { (p, _) =>
+      engine(p).indexRepo(p.root, p.chunksPath, p.vectorsPath)
+      Right(status(p))
+    },
+    tool("embed_chunks", "embed indexed chunks' context text", limit) {
+      (p, a) =>
         val base = chunks(p).withColumn("ctx",
           graft.embed.HashEmbedder.contextText(col("file_path"),
             col("language"), col("name"), col("content")))
-        val lim = int(args, "limit", Int.MaxValue)
+        val lim = int(a, "limit", Int.MaxValue)
         Right(graft.embed.HashEmbedder.embed(
           if (lim == Int.MaxValue) base else base.limit(lim),
           "chunk_id", "ctx"))
-      case "analyze_project" =>
-        Right(Analytics.gradeDistribution(chunks(p)))
-      case "visualize_export" =>
-        // the visualize command's data side (graph_builder.py:334-730):
-        // directory/file/chunk nodes + containment/hierarchy links —
-        // the JSON/HTML exporters are presentation over these rows
-        Right(graft.analyze.Visualize.graphExport(
-          chunks(p).select(col("file_path"), col("name"),
-            col("chunk_type"), col("start_line"), col("end_line"),
-            col("complexity"), size(col("parameters")).as("n_params"),
-            col("nesting_depth"), col("parent_name")))
-          .orderBy(col("kind"), col("id"), col("source"), col("target")))
-      case "analyze_file" =>
-        Right(chunks(p)
-          .filter(col("file_path") === str(args, "file_path").get)
-          .select(col("name"), col("chunk_type"), col("complexity"),
-            col("cognitive_complexity"), col("nesting_depth"),
-            col("token_count"))
-          .orderBy(col("name")))
-      case "find_smells" =>
-        Right(Analytics.smells(chunks(p)))
-      case "get_complexity_hotspots" =>
-        Right(Analytics.hotspots(chunks(p), int(args, "limit", 10)))
-      case "check_circular_dependencies" =>
-        Right(Analytics.cyclicFiles(chunks(p)))
-      case "interpret_analysis" | "review_repository" =>
-        // LLM seam: the evidence table the model narrates
-        Right(Analytics.fileHealth(chunks(p)))
-      case "review_pull_request" =>
-        val files = strs(args, "files")
-        Right(Analytics.fileHealth(
-          chunks(p).filter(col("file_path").isin(files: _*))))
-      case "code_review" =>
-        route(p, "analyze_file", args)
-      case "save_report" =>
+    },
+    tool("analyze_project", "complexity grade distribution")(
+      (p, _) => Right(Analytics.gradeDistribution(chunks(p)))),
+    tool("visualize_export",
+      "chunk-graph + directory-treemap export (nodes and links)") { (p, _) =>
+      // the visualize command's data side (graph_builder.py:334-730):
+      // directory/file/chunk nodes + containment/hierarchy links —
+      // the JSON/HTML exporters are presentation over these rows
+      Right(graft.analyze.Visualize.graphExport(
+        chunks(p).select(col("file_path"), col("name"),
+          col("chunk_type"), col("start_line"), col("end_line"),
+          col("complexity"), size(col("parameters")).as("n_params"),
+          col("nesting_depth"), col("parent_name")))
+        .orderBy(col("kind"), col("id"), col("source"), col("target")))
+    },
+    tool("analyze_file", "per-chunk metrics for one file",
+      required("file_path"))((p, a) => Right(fileMetrics(p, a))),
+    tool("find_smells", "code-smell findings")(
+      (p, _) => Right(Analytics.smells(chunks(p)))),
+    tool("get_complexity_hotspots", "most complex entities", limit)(
+      (p, a) => Right(Analytics.hotspots(chunks(p), int(a, "limit", 10)))),
+    tool("check_circular_dependencies", "files on import cycles")(
+      (p, _) => Right(Analytics.cyclicFiles(chunks(p)))),
+    tool("interpret_analysis", "LLM narration of the analysis tables")(health).seam,
+    tool("save_report", "persist the analysis report", required("path")) {
+      (p, a) =>
         val out = Analytics.fileHealth(chunks(p))
-        out.write.mode("overwrite").json(str(args, "path").get)
+        out.write.mode("overwrite").json(str(a, "path").get)
         Right(out)
-      case "wiki_generate" =>
-        Right(Analytics.directoryRollups(chunks(p)))
-      case "kg_build" =>
-        // counted over the two tables just written, not by deriving the
-        // graph from the chunks a second time
-        need(p.kgPath, "knowledge graph").flatMap { kp =>
-          val built = Kg.fromChunks(chunks(p))
-          IndexStore.write(built.vertices, s"$kp/vertices")
-          IndexStore.write(built.edges, s"$kp/edges")
-          route(p, "kg_stats", Map.empty)
-        }
-      case "kg_stats" | "kg_ontology" =>
-        kg(p).map { k =>
-          val (labels, rels) = Kg.stats(k)
-          ontology(labels, rels)
-        }
-      case "kg_query" =>
-        val rel = str(args, "relationship")
-        rel match {
+    },
+    tool("review_repository", "repository-level review evidence")(health).seam,
+    tool("review_pull_request", "review evidence scoped to changed files",
+      required("files", "array")) { (p, a) =>
+      Right(Analytics.fileHealth(
+        chunks(p).filter(col("file_path").isin(strs(a, "files"): _*))))
+    }.seam,
+    tool("code_review", "single-file review evidence",
+      required("file_path"))((p, a) => Right(fileMetrics(p, a))).seam,
+    tool("wiki_generate", "directory-level wiki skeleton") {
+      (p, _) => Right(Analytics.directoryRollups(chunks(p)))
+    }.seam,
+    tool("kg_build", "build + persist the knowledge graph") { (p, _) =>
+      // counted over the two tables just written, not by deriving the
+      // graph from the chunks a second time
+      need(p.kgPath, "knowledge graph").flatMap { kp =>
+        val built = Kg.fromChunks(chunks(p))
+        IndexStore.write(built.vertices, s"$kp/vertices")
+        IndexStore.write(built.edges, s"$kp/edges")
+        kgStats(p)
+      }
+    },
+    tool("kg_stats", "KG label/relationship counts")((p, _) => kgStats(p)),
+    tool("kg_query", "entities related to a named entity",
+      required("entity_name"), Param("relationship", "string"), limit) {
+      (p, a) =>
+        str(a, "relationship") match {
           case Some(r) if !Kg.RelationshipKeywords.contains(r) =>
             Left(s"unknown relationship: $r (expected one of " +
               s"${Kg.RelationshipKeywords.keys.toSeq.sorted.mkString(", ")})")
-          case _ =>
-            kg(p).map(k => Kg.related(k, str(args, "entity_name").get,
-              rel, int(args, "limit", 25)))
+          case rel =>
+            kg(p).map(k => Kg.related(k, str(a, "entity_name").get,
+              rel, int(a, "limit", 25)))
         }
-      case "kg_ia" =>
-        Right(chunks(p).filter(col("chunk_type") === "doc_section")
-          .select(col("file_path"), col("hierarchy_path"), col("name"))
-          .orderBy(col("file_path"), col("hierarchy_path")))
-      case "trace_execution_flow" =>
-        kgTable(p, "edges").map(Kg.bfsPaths(_,
-          str(args, "entry_point").get, int(args, "max_depth", 8)))
-      case "kg_history" =>
-        need(p.entitiesPath, "entity history").map(ep =>
-          Kg.entityHistory(IndexStore.read(s, ep),
-            str(args, "entity_name").get))
-      case "kg_callers_at_commit" =>
-        for {
-          ep <- need(p.entitiesPath, "entity history")
-          pp <- need(p.parentsPath, "commit parents")
-          edges <- kgTable(p, "edges")
-        } yield Kg.callersAtCommit(edges, IndexStore.read(s, ep),
-          str(args, "entity_name").get, IndexStore.read(s, pp),
-          str(args, "commit").get)
-      case "story_generate" =>
-        need(p.commitsPath, "commit log").map(cp =>
-          Analytics.storyPhases(IndexStore.read(s, cp),
-            int(args, "phases", 5)))
-      case other => Left(s"unknown tool: $other")
-    }
-  }
+    },
+    tool("kg_ontology", "node and relationship type inventory")(
+      (p, _) => kgStats(p)),
+    tool("kg_ia", "doc-section information architecture") { (p, _) =>
+      Right(chunks(p).filter(col("chunk_type") === "doc_section")
+        .select(col("file_path"), col("hierarchy_path"), col("name"))
+        .orderBy(col("file_path"), col("hierarchy_path")))
+    },
+    tool("trace_execution_flow", "call paths from an entry point",
+      required("entry_point"), Param("max_depth", "integer")) { (p, a) =>
+      kgTable(p, "edges").map(Kg.bfsPaths(_,
+        str(a, "entry_point").get, int(a, "max_depth", 8)))
+    },
+    tool("kg_history", "commits touching a named entity",
+      required("entity_name")) { (p, a) =>
+      need(p.entitiesPath, "entity history").map(ep =>
+        Kg.entityHistory(IndexStore.read(p.spark, ep),
+          str(a, "entity_name").get))
+    },
+    tool("kg_callers_at_commit", "callers of an entity as of a commit",
+      required("entity_name"), required("commit")) { (p, a) =>
+      for {
+        ep <- need(p.entitiesPath, "entity history")
+        pp <- need(p.parentsPath, "commit parents")
+        edges <- kgTable(p, "edges")
+      } yield Kg.callersAtCommit(edges, IndexStore.read(p.spark, ep),
+        str(a, "entity_name").get, IndexStore.read(p.spark, pp),
+        str(a, "commit").get)
+    },
+    tool("story_generate", "repository history phases",
+      Param("phases", "integer")) { (p, a) =>
+      need(p.commitsPath, "commit log").map(cp =>
+        Analytics.storyPhases(IndexStore.read(p.spark, cp),
+          int(a, "phases", 5)))
+    })
 
-  private def ontology(labels: DataFrame, rels: DataFrame): DataFrame =
-    labels.select(lit("node").as("kind"), col("label").as("name"),
-        col("count"))
-      .unionByName(rels.select(lit("relationship").as("kind"),
-        col("rel_type").as("name"), col("count")))
-      .orderBy(col("kind"), col("name"))
+  private val byName: Map[String, Tool] = tools.map(t => t.spec.name -> t).toMap
+
+  val specs: Seq[ToolSpec] = tools.map(_.spec)
+
+  def spec(name: String): Option[ToolSpec] = byName.get(name).map(_.spec)
+
+  private def failed(tool: String, e: Exception): String =
+    s"tool $tool failed: ${e.getMessage}"
+
+  /** Validate + plan. Mirrors the server's error surface: unknown tool,
+    * missing required arguments and a failure while planning come back
+    * as Left, never thrown (`mcp/server.py:303-380` wraps everything
+    * into an error CallToolResult). The plan's action has not run; a
+    * shell calls [[run]], which runs it under the same wrapping.
+    */
+  def dispatch(p: Project, tool: String,
+      args: Map[String, Any] = Map.empty): Either[String, DataFrame] =
+    byName.get(tool).toRight(s"unknown tool: $tool").flatMap { t =>
+      val missing = t.spec.params.filter(_.required)
+        .map(_.name).filterNot(args.contains)
+      if (missing.nonEmpty)
+        Left(s"missing required argument(s): ${missing.mkString(", ")}")
+      else
+        try t.handle(p, args)
+        catch { case e: Exception => Left(failed(tool, e)) }
+    }
+
+  /** The one call path of every shell: [[dispatch]], then `action` on
+    * the planned result. A failure at execution (an unreadable data
+    * file, an ANSI cast, a lost executor) becomes `Left("tool <name>
+    * failed: …")`, as one at planning does.
+    */
+  def run[T](p: Project, tool: String, args: Map[String, Any])(
+      action: DataFrame => T): Either[String, T] =
+    dispatch(p, tool, args).flatMap { df =>
+      try Right(action(df))
+      catch { case e: Exception => Left(failed(tool, e)) }
+    }
 }

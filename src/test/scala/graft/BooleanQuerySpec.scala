@@ -1,6 +1,7 @@
 package graft
 
-import graft.search.BooleanQuery
+import graft.search.{BooleanQuery, Phrase}
+import graft.text.TextFunctions
 
 class BooleanQuerySpec extends SparkSpec {
   import spark.implicits._
@@ -12,7 +13,11 @@ class BooleanQuerySpec extends SparkSpec {
     (4L, "table scan batch key"),
     (5L, "window batch fast")).toDF("doc_id", "text")
 
-  private lazy val p = BooleanQuery.postings(docs, "doc_id", "text")
+  private def postings(d: org.apache.spark.sql.DataFrame) =
+    BooleanQuery.fromPositional(
+      Phrase.positionalPostings(d, "doc_id", TextFunctions.tokens))
+
+  private lazy val p = postings(docs)
 
   private def ids(must: Seq[String], should: Seq[String] = Nil,
       not: Seq[String] = Nil) =
@@ -43,7 +48,7 @@ class BooleanQuerySpec extends SparkSpec {
 
   test("term repetition within a doc does not double-count the ALL check") {
     val rep = Seq((9L, "spark spark spark")).toDF("doc_id", "text")
-    val pr = BooleanQuery.postings(rep, "doc_id", "text")
+    val pr = postings(rep)
     assert(BooleanQuery.query(pr, Seq("spark"), Nil, Nil)
       .collect().map(_.getLong(0)).toSet == Set(9L))
     assert(BooleanQuery.query(pr, Seq("spark", "join"), Nil, Nil)

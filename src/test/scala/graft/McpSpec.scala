@@ -60,6 +60,24 @@ class McpSpec extends SparkSpec {
     assert((0 until req.size()).map(req.get(_).asText()).contains("query"))
   }
 
+  test("tools/list types every property with a JSON Schema type") {
+    val tools = rpc("""{"jsonrpc":"2.0","id":2,"method":"tools/list"}""")
+      .get.get("result").get("tools")
+    val types = (for {
+      t <- (0 until tools.size()).map(tools.get)
+      props = t.get("inputSchema").get("properties")
+      name <- scala.jdk.CollectionConverters.IteratorHasAsScala(
+        props.fieldNames()).asScala
+    } yield s"${t.get("name").asText()}.$name" ->
+      props.get(name).get("type").asText()).toMap
+    for (array <- Seq("search_boolean.must", "search_boolean.should",
+        "search_boolean.must_not", "search_context.focus_areas",
+        "review_pull_request.files"))
+      assert(types.get(array).contains("array"), array)
+    assert(types.values.toSet.subsetOf(Set("string", "integer", "number", "array")),
+      types)
+  }
+
   test("tools/call returns result rows as text content") {
     val r = rpc("""{"jsonrpc":"2.0","id":3,"method":"tools/call",""" +
       """"params":{"name":"get_project_status","arguments":{}}}""").get

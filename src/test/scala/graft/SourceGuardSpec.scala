@@ -32,10 +32,12 @@ class SourceGuardSpec extends AnyFunSuite {
 
   private val sources = scalaFiles("src/main/scala")
 
+  private def withoutComments(text: String): String =
+    text.replaceAll("(?s)/\\*.*?\\*/", " ").replaceAll("//[^\n]*", "")
+
   /** The identifiers of a source's code, its comments dropped. */
   private def identifiers(text: String): Seq[String] =
-    "[A-Za-z_][A-Za-z0-9_]*".r.findAllIn(
-      text.replaceAll("(?s)/\\*.*?\\*/", " ").replaceAll("//[^\n]*", "")).toSeq
+    "[A-Za-z_][A-Za-z0-9_]*".r.findAllIn(withoutComments(text)).toSeq
 
   private val mainIds = sources.map { case (f, text) => f -> identifiers(text).toSet }
 
@@ -91,6 +93,14 @@ class SourceGuardSpec extends AnyFunSuite {
     for (name <- Seq("IvfCache", "PqCache", "DedupCache", "AncestryCache",
         "lastCentroids", "lastCodebook"))
       assert(filesWith(name).isEmpty, name)
+  }
+
+  test("the shells call tools through Tools.run, the one call path") {
+    val call = "Tools\\s*\\.\\s*(dispatch\\b|_)".r
+    val named = sources.collect { case (f, text) if f != "graft/serve/Tools.scala" &&
+      call.findFirstIn(withoutComments(text)).isDefined => f }
+    assert(named.isEmpty, s"Tools.dispatch named in ${named.toSeq.sorted}")
+    assert(sources("graft/serve/Tools.scala").contains("def dispatch("))
   }
 
   test("every top-level type is named by another main file, or listed with its reason") {
