@@ -152,8 +152,10 @@ object Kg {
     * those names, and merge.
     *
     * The delta is derived on the driver: one collect of the change's
-    * rows (the change is change-sized) runs the same [[chunkKg]] rules
-    * as [[fromChunks]], and one scan of the stored vertices returns the
+    * rows (the change is change-sized; no job when `rechunked` is a
+    * local relation, as [[graft.index.IndexStore.applyChanges]] passes
+    * it) runs the same [[chunkKg]] rules as [[fromChunks]], and one
+    * scan of the stored vertices returns the
     * ids of the touched files' vertices and the stored entities whose
     * names the change references. Each result table is its stored rows,
     * filtered by a literal key set, unioned with a local relation: no

@@ -1,11 +1,17 @@
 package graft.index
 
+import java.util.concurrent.{CompletionException, Executors}
+
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 import scala.util.{Try, Using}
 
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{classic, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -26,6 +32,10 @@ import graft.ingest.FileDiscovery
   * rewrites each touched table in FULL through a staging swap
   * ([[overwriteSafe]]); rewriting only the file buckets a change
   * touches is ROADMAP direction 4.
+  *
+  * A change set ([[applyChanges]]) stages every table it rewrites
+  * first, concurrently, and swaps them in only after each stage has
+  * finished, in the order that lets a retry repair a cut batch.
   */
 object IndexStore {
 
@@ -34,20 +44,60 @@ object IndexStore {
     out.write.mode(SaveMode.Overwrite).parquet(path)
   }
 
-  /** Overwrite `path` with a plan that may READ from `path`: write to a
-    * staging dir first, then swap. Depending on `.cache()` retention to
-    * make read-and-overwrite safe is a race (the write job may recompute
-    * a partition from the source being deleted); staging + rename makes
+  /** Overwrite `path` with a plan that may READ from `path`: [[stage]],
+    * then [[swap]]. Depending on `.cache()` retention to make
+    * read-and-overwrite safe is a race (the write job may recompute a
+    * partition from the source being deleted); staging + rename makes
     * the update atomic-ish and self-consistent regardless of caching.
+    * [[applyChanges]] runs the two halves apart: every table's stage,
+    * then every swap.
     */
   def overwriteSafe(spark: SparkSession, df: DataFrame, path: String): Unit = {
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val staging = new org.apache.hadoop.fs.Path(path + "._staging")
+    stage(df, path)
+    swap(spark, path)
+  }
+
+  /** The Spark job of [[overwriteSafe]]: write `df` to the staging
+    * directory of `path`. The live table stays as it was, so any plan
+    * that reads it stays valid until the [[swap]].
+    */
+  private def stage(df: DataFrame, path: String): Unit =
+    df.write.mode(SaveMode.Overwrite).parquet(staging(path))
+
+  /** Driver metadata only: replace `path` with its staged table (delete,
+    * rename) and drop what Spark cached of the old files.
+    */
+  private def swap(spark: SparkSession, path: String): Unit = {
+    val hp = new Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    df.write.mode(SaveMode.Overwrite).parquet(staging.toString)
     fs.delete(hp, true)
-    fs.rename(staging, hp)
+    fs.rename(new Path(staging(path)), hp)
     spark.catalog.refreshByPath(path)
+  }
+
+  private def staging(path: String): String = path + "._staging"
+
+  /** Runs `stages` at once, one pool thread each, every thread carrying
+    * the caller's Spark local properties (job group, tags, active
+    * session) so their jobs count and cancel with the caller's. Waits
+    * for every stage, then rethrows the first failure in `stages` order;
+    * the threads have ended when this returns or throws.
+    */
+  private def concurrently(spark: SparkSession)(stages: (() => Unit)*): Unit = {
+    val threads = ArrayBuffer.empty[Thread]
+    val pool = Executors.newFixedThreadPool(stages.size, (r: Runnable) =>
+      threads.synchronized { val t = new Thread(r, "index-stage"); threads += t; t })
+    try {
+      val session = spark.asInstanceOf[classic.SparkSession]
+      stages.map(s => SQLExecution.withThreadLocalCaptured(session, pool)(s()))
+        .flatMap(f => Try(f.join()).failed.toOption).headOption.foreach {
+          case e: CompletionException if e.getCause != null => throw e.getCause
+          case e => throw e
+        }
+    } finally {
+      pool.shutdown()
+      threads.synchronized(threads.toList).foreach(_.join())
+    }
   }
 
   /** Read an index table with no Spark job: the schema comes from
@@ -66,6 +116,9 @@ object IndexStore {
     * inference also reads one file's footer unless `mergeSchema` is
     * set; every writer here writes a whole table in one schema. None
     * for a missing path, no data file, subdirectories or no such key.
+    * The read options come from the session's Hadoop conf: without them
+    * Parquet builds a fresh `Configuration`, which parses Hadoop's XML
+    * defaults again on every call (7–15 ms a call, against 0.3–1.9 ms).
     */
   def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
     val conf = spark.sparkContext.hadoopConfiguration
@@ -78,7 +131,8 @@ object IndexStore {
         else Array(st)
       if (entries.exists(_.isDirectory)) None
       else entries.map(_.getPath).sortBy(_.getName).headOption.flatMap { f =>
-        Using.resource(ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))) { r =>
+        Using.resource(ParquetFileReader.open(HadoopInputFile.fromPath(f, conf),
+            HadoopReadOptions.builder(conf).build())) { r =>
           Option(r.getFooter.getFileMetaData.getKeyValueMetaData
             .get("org.apache.spark.sql.parquet.row.metadata"))
         }
@@ -130,7 +184,8 @@ object IndexStore {
   /** S4 compaction: rewrite a table into ~targetBytes files (the
     * reference compacts every ~20k appended rows,
     * `chunks_backend.py:553-605`; here it is one repartition rewrite,
-    * to be scheduled after heavy append phases).
+    * to be scheduled after heavy append phases). The rewrite reads the
+    * table it replaces, so it goes through [[overwriteSafe]].
     */
   def compact(spark: SparkSession, path: String,
       targetBytes: Long = 128L * 1024 * 1024): Unit = {
@@ -138,10 +193,7 @@ object IndexStore {
       spark.sparkContext.hadoopConfiguration)
     val size = fs.getContentSummary(new org.apache.hadoop.fs.Path(path)).getLength
     val parts = math.max(1, (size / targetBytes).toInt)
-    val df = spark.read.parquet(path).repartition(parts).cache()
-    df.count()
-    df.write.mode(SaveMode.Overwrite).parquet(path)
-    df.unpersist()
+    overwriteSafe(spark, read(spark, path).repartition(parts), path)
   }
 
   /** Upsert semantics of `vectors_backend.py:482-677` (delete same ids,
@@ -236,19 +288,27 @@ object IndexStore {
     * reference's delete-then-append upsert, `vectors_backend.py:482-677`):
     * drop the rows of every `replaced` path, rewrite `moves`
     * (old_path → new_path) in place (S7: the moved rows keep their
-    * chunk ids and vectors), append `newChunks` and their vectors, and
-    * swap each table with [[overwriteSafe]], whose refresh is the one
-    * on this path. With `kgPath`, the KG tables under it get the same
-    * change through [[graft.graph.Kg.differentialUpdate]]. Each table is
-    * written back in at most as many files as it had, so repeated
-    * batches do not grow the file count.
+    * chunk ids and vectors), append `newChunks` and their vectors. With
+    * `kgPath`, the KG tables under it get the same change through
+    * [[graft.graph.Kg.differentialUpdate]]. Each table is written back
+    * in at most as many files as it had, so repeated batches do not
+    * grow the file count.
     *
-    * Write order: vectors, KG edges, KG vertices, chunks. A retry
-    * decides what to redo from the chunks table (change detection,
+    * `newChunks` is collected once (it is change-sized), and every
+    * table builds its new rows from that one local relation. Then every
+    * table is staged ([[overwriteSafe]]'s Spark half) at once: vectors,
+    * chunks, and the KG, whose vertex scan precedes its two concurrent
+    * stages. Only when every stage has finished do the swaps run, in
+    * this order: vectors, KG edges, KG vertices, chunks. A failed stage
+    * swaps nothing: the others finish, every live table keeps its rows,
+    * and the failure is rethrown.
+    *
+    * The swap order governs a failure between swaps. A retry decides
+    * what to redo from the chunks table (change detection,
     * [[changedFiles]], reads only it) and, in the KG, from the stored
     * vertices (the ids the delta removes), so each goes after the tables
     * it governs. A batch cut before the chunks swap is then detected
-    * again, and the retry lands it on every table, because each swap
+    * again, and the retry lands it on every table, because each table
     * drops the `replaced` paths' rows before it appends.
     *
     * @param stored    the chunks table at `chunksPath`, as the caller
@@ -257,50 +317,55 @@ object IndexStore {
     *                  every re-read file, one that now yields no chunks
     *                  included
     * @param newChunks the re-read files' chunk rows
+    * @param chunkRows the chunks table's new rows from the collected
+    *                  `newChunks`; runs in the chunks stage, so a lookup
+    *                  it needs overlaps the other tables' stages
     */
   def applyChanges(spark: SparkSession, stored: DataFrame, chunksPath: String,
       vectorsPath: String, kgPath: Option[String], replaced: Seq[String],
-      moves: Seq[(String, String)], newChunks: DataFrame): Unit = {
+      moves: Seq[(String, String)], newChunks: DataFrame,
+      chunkRows: DataFrame => DataFrame = identity): Unit = {
     import spark.implicits._
-    // checkpoint: the plan is cut at a LogicalRDD, so the object-typed
-    // flatMap segment never reaches the downstream union/join optimizer
-    // — Catalyst can push a Project into the object pipeline there and
-    // fail serialization (seen as INTERNAL_ERROR 'object' writer on the
-    // KG union path). Lazy: the vectors write below materializes the
-    // (change-sized) rows, and the KG collect and the chunks write read
-    // them back
-    val fresh = newChunks.localCheckpoint(eager = false)
+    // the one collect of the change: every table builds from this local
+    // relation, which also keeps the caller's object-typed flatMap
+    // segment away from the union/join optimizer below, where Catalyst
+    // can push a Project into it and fail serialization (seen as
+    // INTERNAL_ERROR 'object' writer on the KG union path)
+    val fresh = spark.createDataFrame(newChunks.collect().toSeq.asJava, newChunks.schema)
     val moved = moves.toDF("old_path", "new_path")
-    def rewrite(path: String, table: DataFrame, rows: DataFrame): Unit =
-      overwriteSafe(spark, rows.coalesce(math.max(1, table.inputFiles.length)), path)
+    def stageAs(path: String, table: DataFrame, rows: DataFrame): Unit =
+      stage(rows.coalesce(math.max(1, table.inputFiles.length)), path)
     // the replaced paths filter as a literal set (a broadcast of them
     // would cost a job per table); allowMissingColumns: a pre-subproject
     // (round-1 schema) stored table widens with nulls instead of failing
-    def swap(path: String, table: DataFrame, rows: DataFrame): Unit =
-      rewrite(path, table, applyMoves(table.filter(
+    def merge(path: String, table: DataFrame, rows: DataFrame): Unit =
+      stageAs(path, table, applyMoves(table.filter(
           !coalesce(col("file_path").isin(replaced.distinct: _*), lit(false))), moved)
         .unionByName(rows, allowMissingColumns = true))
-    swap(vectorsPath, read(spark, vectorsPath), vectorsOf(fresh))
 
     // the KG treats a move as a change at its destination (drop the old
     // path, re-chunk the new one): one metadata-scale re-chunk instead
     // of a non-equi id-prefix rewrite
-    kgPath.foreach { kp =>
+    val kgStage = kgPath.map { kp => () =>
       val kg = Kg.KgTables(read(spark, s"$kp/vertices"), read(spark, s"$kp/edges"))
       val dests = moves.map(_._2).filter(p => new java.io.File(p).isFile)
       val rechunked = if (dests.isEmpty) fresh else fresh.unionByName(
         FileDiscovery.readFiles(spark, dests).flatMap(Chunker.chunkFile _)
           .toDF(), allowMissingColumns = true)
       // the update's delta is local, so neither write plan reads the
-      // other table's path: the edges swap cannot pull files from under
-      // the vertices write
+      // other table's path
       val updated = Kg.differentialUpdate(kg, rechunked, replaced ++ moves.map(_._1))
-      rewrite(s"$kp/edges", kg.edges, updated.edges)
-      rewrite(s"$kp/vertices", kg.vertices, updated.vertices)
+      concurrently(spark)(
+        () => stageAs(s"$kp/edges", kg.edges, updated.edges),
+        () => stageAs(s"$kp/vertices", kg.vertices, updated.vertices))
     }
+    concurrently(spark)(Seq(
+      () => merge(vectorsPath, read(spark, vectorsPath), vectorsOf(fresh)),
+      () => merge(chunksPath, stored, chunkRows(fresh))) ++ kgStage: _*)
     // chunks last (see the Scaladoc): change detection reads only this
     // table, so a batch cut after its swap would never be retried
-    swap(chunksPath, stored, fresh)
+    (vectorsPath +: kgPath.toSeq.flatMap(kp => Seq(s"$kp/edges", s"$kp/vertices")) :+
+      chunksPath).foreach(swap(spark, _))
   }
 
   /** Unembedded chunks (J3, `vectors_backend.py:1355-1397`): in chunks

@@ -73,7 +73,10 @@ class SearchEngine(spark: SparkSession) {
   /** Incremental reindex: only changed files re-chunk/re-embed, deletes
     * and moves handled by set algebra (SURVEY §7 step 3). The change set
     * is derived once from the discovery scan and collected: file paths,
-    * proportional to the change, not to the chunk rows.
+    * proportional to the change, not to the chunk rows. The re-read
+    * files' chunk rows are collected once more in
+    * [[IndexStore.applyChanges]], which stages both tables at once and
+    * swaps them only when both are staged.
     */
   def incrementalIndex(root: String, chunksPath: String, vectorsPath: String): Unit = {
     val disk = FileDiscovery.discover(spark, root).toDF()

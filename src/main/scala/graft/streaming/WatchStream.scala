@@ -70,21 +70,21 @@ object WatchStream {
       .flatMap(Chunker.chunkFile _).toDF()
     // streamed re-chunks inherit the file's known subproject from the
     // stored table (no full listing in a micro-batch to re-detect
-    // from), looked up for the touched paths only; brand-new files get
-    // it on the next incremental pass
+    // from), looked up for the touched paths only, in the chunks stage;
+    // brand-new files get it on the next incremental pass
     val stored = IndexStore.read(spark, chunksPath)
-    val newChunks =
+    def inherit(fresh: DataFrame): DataFrame =
       if (stored.columns.contains("subproject_name")) {
         val sub = element_at(typedlit(stored
           .filter(col("file_path").isin(touched: _*))
           .select("file_path", "subproject_name", "subproject_path")
           .as[(String, String, String)].collect()
           .map { case (p, name, path) => p -> (name, path) }.toMap), col("file_path"))
-        rechunked.withColumn("subproject_name", sub("_1"))
+        fresh.withColumn("subproject_name", sub("_1"))
           .withColumn("subproject_path", sub("_2"))
-      } else rechunked
+      } else fresh
     IndexStore.applyChanges(spark, stored, chunksPath, vectorsPath, kgPath,
-      deleted ++ reread, moves, newChunks)
+      deleted ++ reread, moves, rechunked, inherit)
   }
 
   /** Wire an event stream into the debounced reindex sink. The trigger

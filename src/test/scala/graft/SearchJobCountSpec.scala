@@ -40,10 +40,11 @@ import graft.streaming.WatchStream
   * index table takes its schema from a Parquet footer on the driver,
   * with no schema-inference job. An edit batch through `applyBatch`
   * derives its new rows with work the size of the change: no
-  * corpus-wide shuffle, no job to debounce its events, and its chunk
-  * rows are checkpointed by the chunks write itself. Its KG delta comes
-  * from one collect of the change and one scan of the stored vertices,
-  * and merges into each KG table in that table's write.
+  * corpus-wide shuffle and no job to debounce its events; its chunk
+  * rows are collected once, and every job of its concurrent table
+  * stages runs in the caller's job group. Its KG delta comes from that
+  * collect and one scan of the stored vertices, and merges into each KG
+  * table in that table's write.
   */
 class SearchJobCountSpec extends SparkSpec {
 
@@ -71,19 +72,24 @@ class SearchJobCountSpec extends SparkSpec {
     * Only jobs of this thread's job group count, so a query left running
     * by another suite in the JVM cannot add to it.
     */
-  private def jobs(f: => Any): Int = {
+  private def jobs(f: => Any): Int = jobCounts(f)._1
+
+  /** [[jobs]], and every job that started meanwhile, in any job group. */
+  private def jobCounts(f: => Any): (Int, Int) = {
     val sc = spark.sparkContext
     val group = s"search-job-count-${System.nanoTime()}"
     ListenerBusDrain(sc)
-    val n = new AtomicInteger
+    val (n, all) = (new AtomicInteger, new AtomicInteger)
     val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        all.incrementAndGet()
         if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
           n.incrementAndGet()
+      }
     }
     sc.addSparkListener(l)
     sc.setJobGroup(group, "counted search")
-    try { f; ListenerBusDrain(sc); n.get }
+    try { f; ListenerBusDrain(sc); (n.get, all.get) }
     finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
   }
 
@@ -256,10 +262,12 @@ class SearchJobCountSpec extends SparkSpec {
         }.toDF(), p.chunksPath, p.vectorsPath, p.kgPath)
     }
     edit(1) // warm
-    val n = jobs(edit(2))
+    // a stage that ran outside the caller's job group would lower n
+    val (n, all) = jobCounts(edit(2))
     assert(IndexStore.read(spark, s"${p.kgPath.get}/vertices")
       .filter(col("name") === "Fresh2").count() == 2)
     info(s"$n jobs")
+    assert(all == n, s"$all jobs started, $n in the caller's job group")
     assert(n <= 7, s"$n jobs")
   }
 

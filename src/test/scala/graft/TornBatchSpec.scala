@@ -4,6 +4,9 @@ import java.nio.file.{Files, Path, Paths}
 import java.sql.Timestamp
 import java.util.Comparator
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
@@ -17,13 +20,19 @@ import graft.streaming.WatchStream.FileEvent
 
 /** An edit batch cut at one of `IndexStore.applyChanges`' table writes
   * is repaired by one retry. A `SparkListener` cancels the jobs of the
-  * write whose plan targets the cut table's staging directory; the live
-  * table then keeps its pre-batch rows. Change detection reads only the
-  * chunks table, so the chunks write must come last: the cut batch is
-  * detected again, and the retry must leave every table equal to a full
-  * build of the edited tree, as in `ApplyChangesSpec`. Within the KG,
-  * the delta takes the ids it removes from the stored vertices, so the
-  * vertices write comes after the edges write.
+  * write whose plan targets the cut table's staging directory. Every
+  * table is staged before any is swapped in, so after the cut every
+  * live table (chunks, vectors, KG vertices, KG edges) keeps its
+  * pre-batch rows, and the call throws only once no job of the batch
+  * runs any more: a retry cannot race a straggling write into the same
+  * staging directory. Nor is any non-daemon thread the call started
+  * still alive, whether it threw or returned. Change detection reads
+  * only the chunks table, so the chunks swap must come last: a batch
+  * cut between swaps is detected again, and the retry must leave every
+  * table equal to a full build of the edited tree, as in
+  * `ApplyChangesSpec`. Within the KG, the delta takes the ids it
+  * removes from the stored vertices, so the vertices swap comes after
+  * the edges swap.
   *
   * The edit renames `make_chunk` in `parser.py`, which `util.py` calls:
   * a retry that read the new vertices would keep the edge into the old
@@ -57,6 +66,16 @@ class TornBatchSpec extends SparkSpec {
     df.select(cols.map(col): _*).collect().toSet
   }
 
+  /** Runs `f`, then the non-daemon threads started meanwhile that are
+    * still alive.
+    */
+  private def leftThreads(f: => Any): Set[Thread] = {
+    def live = Thread.getAllStackTraces.keySet.asScala.filter(t => t.isAlive && !t.isDaemon)
+    val before = live.toSet
+    f
+    live.toSet -- before
+  }
+
   private def cutThenRetry(table: String, viaKg: Boolean): Unit = {
     val dir = Files.createTempDirectory("torn-batch")
     try {
@@ -76,7 +95,8 @@ class TornBatchSpec extends SparkSpec {
       val kg0 = Kg.fromChunks(IndexStore.read(spark, chunks))
       IndexStore.write(kg0.vertices, s"$kg/vertices")
       IndexStore.write(kg0.edges, s"$kg/edges")
-      val before = rows(chunks)
+      val tables = Seq(chunks, vectors, s"$kg/vertices", s"$kg/edges")
+      val before = tables.map(rows)
 
       val parser = repo.resolve("src/parser.py")
       Files.writeString(parser, Files.readString(parser)
@@ -89,12 +109,17 @@ class TornBatchSpec extends SparkSpec {
 
       val cutter = new CutWrite(s"${dir.resolve(table)}._staging")
       spark.sparkContext.addSparkListener(cutter)
-      try intercept[Exception](apply())
-      finally spark.sparkContext.removeSparkListener(cutter)
+      val left = try leftThreads(intercept[Exception](apply()))
+        finally spark.sparkContext.removeSparkListener(cutter)
+      ListenerBusDrain(spark.sparkContext)
+      assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty,
+        "a job of the cut batch still runs")
       assert(cutter.cut, s"no write of $table ran")
-      assert(rows(chunks) == before, "the chunks table changed before the cut write")
+      assert(left.isEmpty, s"threads left by the cut batch: $left")
+      for ((t, rs) <- tables.zip(before)) assert(rows(t) == rs, s"$t changed by the cut batch")
 
-      apply()
+      val retryLeft = leftThreads(apply())
+      assert(retryLeft.isEmpty, s"threads left by the retry: $retryLeft")
       val (fullChunks, fullVectors) = engine.buildIndex(repo.toString)
       assert(rows(chunks) == rows(fullChunks), "chunks")
       assert(rows(vectors) == rows(fullVectors), "vectors")
