@@ -33,33 +33,13 @@ object JobCount {
       while (prev != cur) { Thread.sleep(200); prev = cur; cur = nJobs.get() }
       cur
     }
-    val (confArgs, names) = {
-      val confs = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-      val qs = scala.collection.mutable.ArrayBuffer.empty[String]
-      var i = 0
-      while (i < args.length) {
-        if (args(i) == "--conf" && i + 1 < args.length) {
-          val Array(k, v) = args(i + 1).split("=", 2)
-          confs += ((k, v)); i += 2
-        } else { qs += args(i); i += 1 }
-      }
-      (confs.toSeq, qs.toSeq)
-    }
-    confArgs.foreach { case (k, v) =>
-      spark.conf.set(k, v)
-      println(s"[jobcount] conf $k=$v")
-    }
-    names.foreach { name =>
-      SparkEntry.queries.get(name) match {
-        case Some(fn) =>
-          fn(spark, sfDir).count() // warm: registries, codegen, caches
-          val j0 = drained()
-          val t0 = System.nanoTime()
-          fn(spark, sfDir).count()
-          val sec = (System.nanoTime() - t0) / 1e9
-          println(f"[jobcount] $name warm_jobs=${drained() - j0} sec=$sec%.3f")
-        case None => System.err.println(s"[jobcount] UNKNOWN QUERY: $name")
-      }
+    PlanDump.gates(spark, args.toSeq, "jobcount") { (name, fn) =>
+      fn(spark, sfDir).count() // warm: registries, codegen, caches
+      val j0 = drained()
+      val t0 = System.nanoTime()
+      fn(spark, sfDir).count()
+      val sec = (System.nanoTime() - t0) / 1e9
+      println(f"[jobcount] $name warm_jobs=${drained() - j0} sec=$sec%.3f")
     }
     spark.stop()
   }

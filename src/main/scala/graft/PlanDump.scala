@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Measurement tooling (optimization rounds): dump
   * `.explain("formatted")` for named gate queries to files, so plan
@@ -23,7 +24,7 @@ object PlanDump {
     * `spark.graft.plandump.dir` is set (PlanDump's own session sets it;
     * bench/tests never do, so the hot path pays one conf lookup).
     */
-  def probe(df: org.apache.spark.sql.DataFrame, label: String): Unit =
+  def probe(df: DataFrame, label: String): Unit =
     df.sparkSession.conf.getOption("spark.graft.plandump.dir").foreach { d =>
       val p = java.nio.file.Paths.get(d)
       java.nio.file.Files.createDirectories(p)
@@ -31,6 +32,35 @@ object PlanDump {
         df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode).getBytes("UTF-8"))
     }
+
+  /** The probe mains' arguments: sets each `--conf k=v` on the session
+    * (printing `[tag] conf k=v`), then runs `f` on every named gate of
+    * [[SparkEntry.queries]] in order, reporting an unknown name on
+    * stderr.
+    */
+  private[graft] def gates(spark: SparkSession, args: Seq[String],
+      tag: String)(f: (String, (SparkSession, String) => DataFrame) => Unit)
+      : Unit = {
+    def parse(rest: List[String]): List[Either[(String, String), String]] =
+      rest match {
+        case "--conf" :: kv :: tail =>
+          val Array(k, v) = kv.split("=", 2)
+          Left((k, v)) :: parse(tail)
+        case name :: tail => Right(name) :: parse(tail)
+        case Nil => Nil
+      }
+    val (confs, names) = parse(args.toList).partitionMap(identity)
+    confs.foreach { case (k, v) =>
+      spark.conf.set(k, v)
+      println(s"[$tag] conf $k=$v")
+    }
+    names.foreach { name =>
+      SparkEntry.queries.get(name) match {
+        case Some(fn) => f(name, fn)
+        case None => System.err.println(s"[$tag] UNKNOWN QUERY: $name")
+      }
+    }
+  }
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: PlanDump <outDir> <query> [query...]")
@@ -40,34 +70,12 @@ object PlanDump {
     val spark = GraftSession("graft-plandump", defaultCpus = 32)
     // route in-loop probes (see `probe`) next to the gate plans
     spark.conf.set("spark.graft.plandump.dir", outDir.toString)
-    val (confArgs, names) = {
-      val rest = args.drop(1)
-      val confs = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-      val qs = scala.collection.mutable.ArrayBuffer.empty[String]
-      var i = 0
-      while (i < rest.length) {
-        if (rest(i) == "--conf" && i + 1 < rest.length) {
-          val Array(k, v) = rest(i + 1).split("=", 2)
-          confs += ((k, v)); i += 2
-        } else { qs += rest(i); i += 1 }
-      }
-      (confs.toSeq, qs.toSeq)
-    }
-    confArgs.foreach { case (k, v) =>
-      spark.conf.set(k, v)
-      println(s"[plandump] conf $k=$v")
-    }
-    names.foreach { name =>
-      SparkEntry.queries.get(name) match {
-        case Some(fn) =>
-          val plan = fn(spark, sfDir).queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          java.nio.file.Files.write(outDir.resolve(s"$name.txt"),
-            plan.getBytes("UTF-8"))
-          println(s"[plandump] wrote $name (${plan.length} chars)")
-        case None =>
-          System.err.println(s"[plandump] UNKNOWN QUERY: $name")
-      }
+    gates(spark, args.toSeq.drop(1), "plandump") { (name, fn) =>
+      val plan = fn(spark, sfDir).queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+      java.nio.file.Files.write(outDir.resolve(s"$name.txt"),
+        plan.getBytes("UTF-8"))
+      println(s"[plandump] wrote $name (${plan.length} chars)")
     }
     spark.stop()
   }

@@ -109,8 +109,9 @@ object Analytics {
     * this variant is pure DataFrame algebra — module resolution is an
     * equi-join on the module's last dotted segment vs the file basename
     * (the heuristic resolution of `coupling.py:761-900` recast as a
-    * joinable key), the closure is `Kg.closure`'s bounded frontier walk
-    * — so it scales with the cluster and mirrors as a recursive CTE.
+    * joinable key), the closure is its own bounded path doubling over
+    * the file pairs — so it scales with the cluster and mirrors as a
+    * recursive CTE.
     */
   def cyclicFiles(chunks: DataFrame, maxHops: Int = 12): DataFrame = {
     val imp = chunks
@@ -131,34 +132,32 @@ object Analytics {
     // loses an in-bound pair, and the final filter enforces the
     // documented "within maxHops" bound precisely (matching the
     // 12-hop-capped recursive-CTE oracle).
-    // Each round re-bases on a bare LogicalRDD (createDataFrame over the
-    // checkpointed RDD): the self-join + union would otherwise trip
-    // Union.rewriteConstraints on stale pre-checkpoint attribute ids.
-    def strip(df: DataFrame): DataFrame =
-      chunks.sparkSession.createDataFrame(df.rdd, df.schema)
-    var acc = strip(imp.join(tgt, "modname")
+    // Each round marks its checkpoint lazily and materializes it with
+    // the (count, Σ hops) convergence probe in ONE job
+    // (WalkLayout.materializedCountSum), then re-bases on a bare
+    // LogicalRDD (createDataFrame over the checkpointed RDD): the
+    // self-join + union would otherwise trip Union.rewriteConstraints on
+    // stale pre-checkpoint attribute ids.
+    def checkpointed(df: DataFrame): (DataFrame, (Long, Long)) = {
+      val cp = df.localCheckpoint(eager = false)
+      val st = graft.graph.WalkLayout.materializedCountSum(cp, "hops")
+      (chunks.sparkSession.createDataFrame(cp.rdd, cp.schema), st)
+    }
+    var (acc, st) = checkpointed(imp.join(tgt, "modname")
       .filter(col("src") =!= col("dst"))
       .select(col("src"), col("dst")).distinct()
-      .withColumn("hops", lit(1L))
-      .localCheckpoint(true))
-    def state(df: DataFrame): (Long, Long) = {
-      val r = df.agg(count(lit(1)), coalesce(sum("hops"), lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
-    }
+      .withColumn("hops", lit(1L)))
     var span = 1
-    var st = state(acc)
     var growing = true
     while (growing && span < maxHops) {
-      val next = strip(acc.as("x")
+      val (next, m) = checkpointed(acc.as("x")
         .join(acc.as("y"), col("x.dst") === col("y.src"))
         .select(col("x.src").as("src"), col("y.dst").as("dst"),
           (col("x.hops") + col("y.hops")).as("hops"))
         .unionByName(acc)
         .groupBy(col("src"), col("dst"))
         .agg(min(col("hops")).as("hops"))
-        .filter(col("hops") <= maxHops)
-        .localCheckpoint(true))
-      val m = state(next)
+        .filter(col("hops") <= maxHops))
       growing = m != st
       st = m
       acc = next

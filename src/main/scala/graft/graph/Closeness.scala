@@ -11,12 +11,11 @@ import org.apache.spark.sql.functions._
   * SAMPLE (deterministic here — seeds are caller-chosen ids, e.g.
   * hash-top-k — never RNG), giving state O(V·|S|).
   *
-  * Scale shape: one multi-source BFS — the frontier relation carries
-  * (seed, node, dist), each round is one hash join against the
-  * checkpointed static edge set + one min-aggregation, early exit via
-  * the monotone (count, dist-sum) fingerprint — the `Kg.minDist` /
-  * `ShortestPath` discipline, S sources in ONE plan instead of S
-  * sequential walks. Throws on a round-budget bail like
+  * Scale shape: one multi-source BFS — a [[WalkLayout.walk]] keyed by
+  * seed, so the frontier carries (seed, node, dist) and S sources run
+  * in ONE plan instead of S sequential walks; each round joins only the
+  * pairs the last round reached with the static edge set, then one
+  * min-aggregation. Throws on a round-budget bail like
   * [[ShortestPath.fromSource]] (a silent bail would undercount
   * centrality for deep nodes).
   *
@@ -34,50 +33,16 @@ object Closeness {
       maxRounds: Int = 32): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    // Static relation discipline (r12, see [[WalkLayout]]): materialize
-    // once (lazy mark + count, one job); past the size gate the edge
-    // set gets the hash-partitioned sorted layout so each round's
-    // sort-merge join reads it exchange- and sort-free.
-    val (e0, nE) = WalkLayout.materializeCounted(
-      edges.select(col("src"), col("dst")).distinct())
-    val e =
-      if (nE >= WalkLayout.minRows(edges))
-        WalkLayout.partitionedCheckpoint(e0, "src", sorted = true)
-      else e0
-    var dist = seeds.map(s => (s, s, 0L)).toDF("s", "node", "d")
-      .localCheckpoint(eager = true)
-    // monotone fingerprint: the (seed, node) set only grows and each
-    // pair's distance only decreases, so fixpoint ⇔ unchanged
-    // (count, dist-sum) — a single-job RDD aggregate that doubles as
-    // the materializing action for the round's lazy checkpoint mark
-    // (r12, see WalkLayout.materializedCountSum)
-    def fp(df: DataFrame): (Long, Long) =
-      WalkLayout.materializedCountSum(df, "d")
-    var last = fp(dist)
-    var round = 0
-    var improving = true
-    while (improving && round < maxRounds) {
-      val relaxed = dist
-        .join(e, dist("node") === e("src"))
-        .select(col("s"), col("dst").as("node"), (col("d") + 1L).as("d"))
-        .unionByName(dist)
-        .groupBy(col("s"), col("node")).agg(min(col("d")).as("d"))
-        // r12: lazy mark — the full-aggregate fingerprint materializes
-        // every partition in the same job (see ShortestPath)
-        .localCheckpoint(eager = false)
-      val nfp = fp(relaxed)
-      improving = nfp != last
-      last = nfp
-      dist = relaxed
-      round += 1
-    }
-    if (improving)
+    val (dist, converged) = WalkLayout.walk(
+      edges.select(col("src"), col("dst")).distinct(),
+      seeds.map(s => (s, s, 0L)).toDF("s", "id", "dist"), Seq("s"), maxRounds)
+    if (!converged())
       throw new IllegalStateException(
         s"multi-source BFS did not converge in $maxRounds rounds — " +
           "the graph is deeper than the budget; raise maxRounds")
-    dist.filter(col("d") > 0)
-      .groupBy(col("node"))
+    dist.filter(col("dist") > 0)
+      .groupBy(col("id").as("node"))
       .agg(count(lit(1)).cast("long").as("n_reached"),
-        sum(expr("1000000 div d")).cast("long").as("harmonic_micro"))
+        sum(expr("1000000 div dist")).cast("long").as("harmonic_micro"))
   }
 }

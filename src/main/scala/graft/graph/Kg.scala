@@ -11,13 +11,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * §2.4 A17) — the reference's KuzuDB property graph
   * (`core/knowledge_graph.py:327-888`) re-expressed relationally:
   * vertices(id, label, name, file_path) + edges(src, dst, rel_type,
-  * weight). Traversals walk a frontier hop by hop, one pass over the
-  * edge table per hop; the frontier (capped, as the reference caps at
-  * depth 8 / max_nodes) is the only state.
-  *
-  * Lineage control: the distributed walks localCheckpoint the frontier
-  * when they loop more than a few hops (SURVEY §7 hard part (c));
-  * `bfsPaths` holds its capped frontier on the driver.
+  * weight). The reachability queries (`minDist`, `closure`,
+  * `ancestorClosure`) are calls of [[WalkLayout.walk]], which joins
+  * only the last round's frontier with the edges and checkpoints each
+  * round of a deep walk (SURVEY §7 hard part (c)); `bfsPaths` holds its
+  * capped frontier on the driver.
   */
 object Kg {
 
@@ -241,93 +239,14 @@ object Kg {
   }
 
   /** Min-distance reachability up to maxHops following edges dst→src
-    * (reverse) or src→dst. Output: (id, dist). (J8 semantics: DISTINCT
-    * frontier per hop, hop cap.)
+    * (reverse) or src→dst. Output: (id, dist). (J8 semantics: least hop
+    * count per reached id, hop cap.) One [[WalkLayout.walk]] from the
+    * seeds at dist 0.
     */
   def minDist(edges: DataFrame, seeds: DataFrame, maxHops: Int,
-      reverse: Boolean = false): DataFrame = {
-    val (from, to) = if (reverse) ("dst", "src") else ("src", "dst")
-    // Deep walks pay per-hop job overhead, so: materialize the static
-    // edge relation once (every hop joins it; unmaterialized it would be
-    // re-derived per hop), eagerly checkpoint every frontier (plan
-    // truncation — persist() instead was measured to send Catalyst into
-    // quadratic re-optimization of the growing lineage), and stop as
-    // soon as a frontier comes back empty (the probe on a materialized
-    // checkpoint reads one cached partition — trivial). Shallow walks
-    // (g3-style 1-2 hops) stay fully lazy — one Catalyst plan, no extra
-    // jobs.
-    val deep = maxHops >= 3
-    val e0 = edges.select(col(from).as("walk_from"), col(to).as("walk_to"))
-    // Deep walks materialize the static edge relation once (lazy mark
-    // + count in ONE job — the count is also the size-gate input). BIG
-    // deep walks additionally get the AQE-off hash-partitioned
-    // checkpointed layout so every hop's equi-join reads the edge side
-    // exchange-free and only the (smaller) frontier side moves (guide
-    // §2.4) — mechanism, the AQE/UnknownPartitioning gotcha it works
-    // around, and the measured 237.3→49.3 MB per-walk shuffle-write
-    // drop are documented on [[WalkLayout]] (r12; hop-plan evidence in
-    // plans/r12/). The size gate (r12) is because the pinned-width
-    // layout LOSES at gate scale: it defeats AQE's small-data
-    // coalescing and schedules ~3 exchanges × width near-empty tasks
-    // per hop (measured: the r11 a13 gate ran ~2× slower than the
-    // planner-chosen shape).
-    val (ecp, nEdges) =
-      if (deep) WalkLayout.materializeCounted(e0) else (e0, 0L)
-    val big = deep && nEdges >= WalkLayout.minRows(edges)
-    val e = if (big) WalkLayout.partitionedCheckpoint(ecp, "walk_from")
-      else ecp
-    // the seed derivation can itself be a multi-join plan (a13 roots the
-    // walk at the EntryPoints detector output): left unmaterialized it is
-    // re-derived by EVERY hop's anti-join against acc — checkpoint it once
-    val s0 = seeds.select(col("id"), lit(0).as("dist"))
-    var acc = if (deep) s0.localCheckpoint(eager = true) else s0
-    var frontier = acc
-    var hop = 1
-    var growing = true
-    while (growing && hop <= maxHops) {
-      // distinct on id ALONE (dist is a per-hop constant — attached
-      // after) so the aggregate's output partitioning is hash(id) and
-      // the anti-join's left side needs no further exchange. BIG deep
-      // walks additionally hint shuffle_hash: their frontiers grow
-      // toward corpus scale (checkpointed RDDs carry no size stats, so
-      // the planner would fall back to sort-merge and re-sort every
-      // hop); small/shallow walks stay hint-free — their seed-scale
-      // frontiers get planner-chosen broadcast joins and AQE-coalesced
-      // exchanges, which the hint would override with pinned-width
-      // shuffles (g3's plan and the r12 a13 gate measurement are the
-      // regression witnesses).
-      val frontierSide = if (big) frontier.hint("shuffle_hash") else frontier
-      val accSide =
-        if (big) acc.select("id").hint("shuffle_hash") else acc.select("id")
-      val next = e.join(frontierSide,
-          e("walk_from") === frontierSide("id"))
-        .select(col("walk_to").as("id"))
-        .distinct()
-        .join(accSide, Seq("id"), "left_anti")
-        .select(col("id"), lit(hop).as("dist"))
-      if (deep) {
-        // loop-body plan evidence (VERDICT r11 #3): no-op unless the
-        // PlanDump session conf is set
-        graft.PlanDump.probe(next, s"minDist_hop$hop")
-        // r12 (VERDICT r11 #5): mark the checkpoint lazily, then
-        // materialize it WITH the emptiness probe in ONE scheduled job
-        // — eager=true ran an internal count job and the old
-        // limit(1).count() then scheduled MORE jobs per hop just to
-        // ask "empty?". The single-job RDD count computes every
-        // partition (persisting each under the localCheckpoint mark —
-        // a limit(1) probe alone would leave most partitions
-        // uncomputed, unpersisted, and the lineage re-derivable) and
-        // answers the probe in the same pass; a SQL count() here would
-        // cost TWO AQE jobs (see WalkLayout.materializedCount).
-        val p = next.localCheckpoint(eager = false)
-        growing = WalkLayout.materializedCount(p) > 0
-        frontier = p
-      } else frontier = next
-      acc = acc.unionByName(frontier)
-      hop += 1
-    }
-    acc.groupBy("id").agg(min("dist").as("dist"))
-  }
+      reverse: Boolean = false): DataFrame =
+    WalkLayout.walk(edges, seeds.select(col("id"), lit(0).as("dist")), Nil,
+      maxHops, reverse)._1
 
   /** BFS with path capture and cycle detection (J9,
     * `knowledge_graph.py:3275-3390`): no path revisits a vertex, and each
@@ -366,31 +285,15 @@ object Kg {
   }
 
   /** Transitive closure of one relation type (INHERITS* —
-    * `knowledge_graph.py:3601-3605`), iteration-capped.
+    * `knowledge_graph.py:3601-3605`): the (src, dst) pairs joined by a
+    * path of 1 to maxHops edges. One [[WalkLayout.walk]] keyed by
+    * `src`, starting from the relation's own edges at dist 1.
     */
   def closure(edges: DataFrame, relType: String, maxHops: Int = 16): DataFrame = {
     val base = edges.filter(col("rel_type") === relType)
-      .select(col("src"), col("dst"))
-    var acc = base
-    var frontier = base
-    var hop = 1
-    var growing = true
-    while (growing && hop < maxHops) {
-      val next = frontier.as("f").join(base.as("b"),
-          col("f.dst") === col("b.src"))
-        .select(col("f.src").as("src"), col("b.dst").as("dst"))
-        .distinct()
-        .join(acc, Seq("src", "dst"), "left_anti")
-        // r12: lazy checkpoint mark + single-job RDD count =
-        // materialize + probe in ONE job per hop (see minDist /
-        // WalkLayout.materializedCount)
-        .localCheckpoint(eager = false)
-      growing = WalkLayout.materializedCount(next) > 0
-      acc = acc.unionByName(next)
-      frontier = next
-      hop += 1
-    }
-    acc
+    WalkLayout.walk(base, base.select(col("src"), col("dst").as("id"),
+        lit(1).as("dist")), Seq("src"), maxHops - 1)._1
+      .select(col("src"), col("id").as("dst"))
   }
 
   /** A17 stats: counts per vertex label and edge rel_type. */
@@ -637,56 +540,27 @@ object Kg {
     * parent edges (inclusive of the ref itself). The distributed analog
     * of `is_ancestor_commit` (`core/git_utils.py`) that the temporal KG
     * filters call once per stored SHA (`knowledge_graph.py:3430-3435`):
-    * instead of a subprocess per (sha, ref) pair, one iterative DAG
-    * traversal materializes the whole ancestor set, then membership is a
-    * join. Frontier is DISTINCT per hop and anti-joined against the
-    * accumulated set, so converged branches stop contributing; real git
-    * DAGs are deep, so the hop cap is high but each hop is one
-    * broadcastable equi-join on the (commit, parent) relation.
+    * instead of a subprocess per (sha, ref) pair, one
+    * [[WalkLayout.walk]] over the commit → parent edges materializes the
+    * whole ancestor set, then membership is a join. Only the commits
+    * the last round reached are joined on, so converged branches stop
+    * contributing; real git DAGs are deep, so the hop cap is high.
     */
   def ancestorClosure(parents: DataFrame, refSha: String,
       maxHops: Int = 1024): DataFrame = {
     val spark = parents.sparkSession
     import spark.implicits._
-    // materialize the parent relation once: every hop joins against it,
-    // and an unmaterialized plan would re-derive it (rescanning its
-    // source) once per hop — the dominant cost of the loop
-    val par = parents.select(col("commit_hash"), col("parent_hash"))
-      .localCheckpoint(eager = true)
-    var acc = Seq(refSha).toDF("commit_hash")
-    var frontier = acc
-    var hop = 1
-    var growing = true
-    while (growing && hop <= maxHops) {
-      // per-hop eager checkpoint: `acc` feeds the anti-join of every
-      // later hop, so an unmaterialized step would be recomputed
-      // quadratically as the union grows (measured 3× slower with
-      // every-3rd-hop checkpointing). The checkpoint must TRUNCATE the
-      // plan (localCheckpoint, not persist) — a persist-based variant
-      // was measured to blow up Catalyst on the growing lineage. The
-      // emptiness probe on the materialized checkpoint reads one cached
-      // partition; the real cross-query saving is the memo in ancestors.
-      val next = par.join(frontier, Seq("commit_hash"))
-        .select(col("parent_hash").as("commit_hash"))
-        .distinct()
-        .join(acc, Seq("commit_hash"), "left_anti")
-        // r12: lazy checkpoint mark + single-job RDD count =
-        // materialize + probe in ONE job per hop (see minDist /
-        // WalkLayout.materializedCount)
-        .localCheckpoint(eager = false)
-      growing = WalkLayout.materializedCount(next) > 0
-      acc = acc.unionByName(next)
-      frontier = next
-      hop += 1
-    }
-    acc
+    WalkLayout.walk(parents.select(col("commit_hash").as("src"),
+        col("parent_hash").as("dst")), Seq((refSha, 0)).toDF("id", "dist"),
+        Nil, maxHops)._1
+      .select(col("id").as("commit_hash"))
   }
 
   /** [[ancestorClosure]] memoized in the Registry on (parent-DAG plan
     * identity, refSha): the closure for a (repo, ref) never changes
     * within a session, yet every temporal-KG query (`entitiesAtCommit`,
     * `callersAtCommit`, kg_history) needs the same set. The closure ends
-    * in an eager localCheckpoint, so the memoized DataFrame is a
+    * in a materialized localCheckpoint, so the memoized DataFrame is a
     * metadata-scale in-memory relation, safe to broadcast. Plan identity
     * is Catalyst's semanticHash of the analyzed plan: two lexically
     * separate reads of one source canonicalize to the same hash, so g7

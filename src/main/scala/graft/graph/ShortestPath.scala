@@ -8,12 +8,10 @@ import org.apache.spark.sql.functions._
   * (edge weights model call costs, co-change strengths, or link
   * distances on the KG the reference walks unweighted).
   *
-  * Scale shape: each round is one hash join (current distances ⋈ edges
-  * on the source endpoint) + one min-aggregation — both partitioned by
-  * node id; the static edge relation is materialized once; rounds
-  * early-exit as soon as a relaxation improves nothing (checked with a
-  * metadata-scale count on materialized checkpoints, exactly the
-  * `Kg.minDist` discipline). Rounds are bounded by the hop-depth of the
+  * Scale shape: one weighted [[WalkLayout.walk]] — each round joins
+  * only the nodes the last round improved with the static edges, then
+  * one min-aggregation by node; rounds early-exit as soon as a round
+  * improves nothing. Rounds are bounded by the hop-depth of the
   * shortest-path tree, not |V|.
   *
   * Determinism: costs are integer sums; min() is total; ties cannot
@@ -37,55 +35,17 @@ object ShortestPath {
       maxRounds: Int = 64): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    // Static relation discipline (r12, see [[WalkLayout]]): materialize
-    // once (lazy mark + count, one job — same cost as the former eager
-    // checkpoint, but the count feeds the size gate); past the gate the
-    // relation gets the hash-partitioned SORTED layout so each round's
-    // sort-merge join reads the edge side exchange- AND sort-free.
-    val (e0, nE) = WalkLayout.materializeCounted(
-      edges.groupBy(col("src"), col("dst")).agg(min(col("w")).as("w")))
-    val e =
-      if (nE >= WalkLayout.minRows(edges))
-        WalkLayout.partitionedCheckpoint(e0, "src", sorted = true)
-      else e0
-    var dist = Seq((source, 0L)).toDF("node", "cost")
-      .localCheckpoint(eager = true)
-    // convergence probe without a compare-join: relaxation is monotone
-    // (per-node costs only decrease, the reached set only grows), so
-    // fixpoint ⇔ (node count, cost sum) unchanged — computed as a
-    // single-job RDD aggregate that doubles as the materializing
-    // action for the round's lazy checkpoint mark (r12, WalkLayout:
-    // the SQL two-stage aggregate scheduled TWO AQE jobs per round)
-    def fingerprint(df: DataFrame): (Long, Long) =
-      WalkLayout.materializedCountSum(df, "cost")
-    var fp = fingerprint(dist)
-    var round = 0
-    var improving = true
-    while (improving && round < maxRounds) {
-      // r12: lazy checkpoint mark — the fingerprint is a FULL aggregate
-      // (computes every partition, persisting each under the mark), so
-      // it doubles as the materializing action: 2 jobs/round → 1
-      val relaxed = dist
-        .join(e, dist("node") === e("src"))
-        .select(col("dst").as("node"), (col("cost") + col("w")).as("cost"))
-        .unionByName(dist)
-        .groupBy(col("node")).agg(min(col("cost")).as("cost"))
-        .localCheckpoint(eager = false)
-      val nfp = fingerprint(relaxed)
-      improving = nfp != fp
-      fp = nfp
-      dist = relaxed
-      round += 1
-    }
-    // refuse to emit non-converged distances: the fingerprint is
-    // monotone (node count grows, cost sum only changes while any cost
-    // improves), so improving==true here means the last round still
-    // changed something — costs may be overestimates and deep nodes
-    // may be missing entirely
-    if (improving)
+    val (dist, converged) = WalkLayout.walk(
+      edges.groupBy(col("src"), col("dst")).agg(min(col("w")).as("w")),
+      Seq((source, 0L)).toDF("id", "dist"), Nil, maxRounds,
+      weight = Some("w"))
+    // refuse to emit non-converged distances: the last round still
+    // improved a node, so costs may be overestimates and deep nodes may
+    // be missing entirely
+    if (!converged())
       throw new IllegalStateException(
         s"shortest-path relaxation did not converge in $maxRounds " +
           "rounds — the SP-tree is deeper than the budget; raise maxRounds")
-    dist.select(col("node"), col("cost").cast("long").as("cost"))
+    dist.select(col("id").as("node"), col("dist").cast("long").as("cost"))
   }
 }

@@ -299,7 +299,7 @@ object AnalyticsPack {
     }),
 
     // A11: files on an import cycle — equi-join module resolution, then
-    // Kg.closure's bounded frontier walk, keep self-reaching files.
+    // a bounded path-doubling closure, keep self-reaching files.
     // (The cycle-path enumeration itself stays the sanctioned driver
     // DFS; this proves the distributed participant set.)
     "a11_cycle_files" -> ((s, d) => {

@@ -186,7 +186,11 @@ object Tools {
     },
     tool("search_phrase", "exact adjacent-phrase search",
       required("phrase"), limit) { (p, a) =>
-      val terms = graft.search.Tokenizer.tokenize(str(a, "phrase").get)
+      // the positional postings hold TextFunctions.tokens of the content,
+      // so the phrase is split by the same normalizer
+      val terms = graft.functions.AsciiText.normalize(
+          org.apache.spark.unsafe.types.UTF8String.fromString(str(a, "phrase").get))
+        .toString.split(" ").filter(_.nonEmpty).toSeq
       if (terms.isEmpty) Left("phrase has no indexable terms")
       else Right(Phrase.phraseSearch(positional(p), terms, int(a, "limit", 10)))
     },

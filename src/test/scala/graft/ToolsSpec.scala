@@ -56,6 +56,14 @@ class ToolsSpec extends SparkSpec {
     val ph = Tools.dispatch(project, "search_phrase",
       Map("phrase" -> "file contents")).toOption.get.collect()
     assert(ph.nonEmpty)
+    // an identifier phrase splits as the corpus does: FileParser is one
+    // term, parse_file the two adjacent terms `parse file`
+    Seq("FileParser" -> "fileparser", "parse_file" -> "parse file").foreach {
+      case (ident, words) =>
+        def rows(phrase: String) = Tools.dispatch(project, "search_phrase",
+          Map("phrase" -> phrase)).toOption.get.collect().toSeq
+        assert(rows(ident).nonEmpty && rows(ident) == rows(words), ident)
+    }
     // proximity: both terms common in parser.py
     val px = Tools.dispatch(project, "search_proximity",
       Map("term_a" -> "parse", "term_b" -> "file")).toOption.get.collect()

@@ -41,16 +41,6 @@ class WalkLayoutSpec extends SparkSpec {
     assert(!logicalRdd(bare).outputPartitioning.isInstanceOf[HashPartitioning])
   }
 
-  test("sorted layout also preserves within-partition ordering") {
-    val df = (1L to 100L).map(i => (i % 7, i)).toDF("k", "v")
-    val laid = WalkLayout.partitionedCheckpoint(df, "k", sorted = true)
-    val ord = logicalRdd(laid).outputOrdering
-    assert(ord.nonEmpty && ord.head.child.toString.contains("k"))
-    // and the rows are the same multiset
-    assert(laid.groupBy("k").count().orderBy("k").collect().toSeq ==
-      df.groupBy("k").count().orderBy("k").collect().toSeq)
-  }
-
   test("materializedCountSum equals the SQL (count, sum) aggregate, including on empty frames") {
     val df = (1L to 100L).map(i => (i % 7, i * 3)).toDF("node", "cost")
       .localCheckpoint(eager = false)
