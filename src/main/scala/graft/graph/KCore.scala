@@ -19,9 +19,9 @@ import org.apache.spark.sql.functions._
   * soon as a peel removes nothing (early exit on a metadata-scale
   * count). Deep cascades eagerly `localCheckpoint` the shrinking edge
   * relation so Catalyst never re-optimizes a growing lineage, as
-  * `WalkLayout.walk` checkpoints its rounds. Round count is bounded by the peel depth
-  * of the graph (≤ longest degeneracy cascade), not by |V|: each round
-  * removes EVERY currently-under-k node at once.
+  * `WalkLayout.walk` checkpoints its rounds. Round count is bounded by
+  * the peel depth of the graph (≤ longest degeneracy cascade), not by
+  * |V|: each round removes EVERY currently-under-k node at once.
   */
 object KCore {
 

@@ -2,7 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.functions.{col, lit, min, struct}
+import org.apache.spark.sql.functions.{col, lit, max, min, when}
 
 /** The one iterative walk of the engine, [[walk]], and the layout
   * discipline for loops that join a STATIC relation every round:
@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions.{col, lit, min, struct}
   * reads it exchange-free. `Kg.minDist`, `Kg.closure`,
   * `Kg.ancestorClosure`, `ShortestPath` and `Closeness` are calls of
   * [[walk]]; `LogisticTrain.hashedFeatures` takes the layout, and the
-  * KCore and Dedup loops take the single-job probes.
+  * KCore, Dedup and `Analytics.cyclicFiles` loops take the single-job
+  * probes.
   *
   * Two r12 findings this encodes (see OPTIMIZATION_r12.md §2.5/§2.6):
   *
@@ -128,8 +129,9 @@ object WalkLayout {
     * Each row carries the round that last improved it (0 for start
     * rows). A round joins only the frontier — the rows the previous
     * round improved — with the edges, then one `groupBy(keys, id)` over
-    * the accumulated rows and the candidates keeps the least (dist,
-    * round) pair per key: a tie keeps the older round, so the next
+    * the accumulated rows and the candidates keeps the least dist per
+    * key, stamped with this round only when a candidate beat the
+    * accumulated row (a tie keeps the older round), so the next
     * frontier is exactly the rows stamped with this round. After round
     * i every row holds the least dist over paths of at most i edges.
     *
@@ -186,10 +188,15 @@ object WalkLayout {
       val cand = side.join(e, col("id") === col("walk_from"))
         .select(keys.map(col) :+ col("walk_to").as("id") :+
           (col("dist") + step).as("dist") :+ lit(round).as("round"): _*)
+      // three primitive-typed aggregates rather than one min over a
+      // (dist, round) struct: a struct buffer is not mutable in place,
+      // so it plans a SortAggregate that sorts acc every round
+      val old = col("round") < round
       val next = acc.unionByName(cand).groupBy(keyed: _*)
-        .agg(min(struct(col("dist"), col("round"))).as("best"))
-        .select(keyed :+ col("best.dist").as("dist") :+
-          col("best.round").as("round"): _*)
+        .agg(min("dist").as("dist"), min(when(old, col("dist"))).as("acc_dist"),
+          max(when(old, col("round"))).as("acc_round"))
+        .select(keyed :+ col("dist") :+ when(col("acc_dist") === col("dist"),
+          col("acc_round")).otherwise(lit(round)).as("round"): _*)
       if (deep) {
         // loop-body plan evidence: no-op unless the PlanDump session
         // conf is set

@@ -2,8 +2,10 @@ package graft.serve
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.analyze.Analytics
+import graft.functions.AsciiText
 import graft.graph.Kg
 import graft.index.IndexStore
 import graft.search.{BooleanQuery, Phrase, SearchEngine}
@@ -188,8 +190,7 @@ object Tools {
       required("phrase"), limit) { (p, a) =>
       // the positional postings hold TextFunctions.tokens of the content,
       // so the phrase is split by the same normalizer
-      val terms = graft.functions.AsciiText.normalize(
-          org.apache.spark.unsafe.types.UTF8String.fromString(str(a, "phrase").get))
+      val terms = AsciiText.normalize(UTF8String.fromString(str(a, "phrase").get))
         .toString.split(" ").filter(_.nonEmpty).toSeq
       if (terms.isEmpty) Left("phrase has no indexable terms")
       else Right(Phrase.phraseSearch(positional(p), terms, int(a, "limit", 10)))
